@@ -828,9 +828,9 @@ final class Graft(val spark: SparkSession, stateDir: String) {
     graft.ops.Dedup.dedupIncrement(inc, idCol, textCol, indexPath, k, bands,
       n, threshold, appendSignatures)
 
-  /** Persist a corpus's exact-dup digest index — the third persisted
-    * index family, for seen-forever digest sets too large for a
-    * streaming state store.
+  /** Persist a corpus's exact-dup digest index — one of the
+    * persisted index families of [[graft.ops.IncrementalIndex]], for
+    * seen-forever digest sets too large for a streaming state store.
     */
   def digestIndexWrite(df: DataFrame, path: String,
                        idCol: String = "doc_id", textCol: String = "text",
@@ -850,7 +850,7 @@ final class Graft(val spark: SparkSession, stateDir: String) {
       normalized, appendDigests)
 
   def digestIndexCompact(path: String, parts: Int = 32): Unit =
-    graft.ops.Dedup.compactDigestIndex(spark, path, parts)
+    graft.ops.IncrementalIndex.Digest.compact(spark, path, parts)
 
   /** The composed production ingest step — quality gate ∘ exact
     * dedup ∘ Bloom-stage decontamination ∘ near-dup dedup ∘ span cut
@@ -905,7 +905,7 @@ final class Graft(val spark: SparkSession, stateDir: String) {
       indexPath, appendLines)
 
   def lineIndexCompact(path: String, parts: Int = 32): Unit =
-    graft.ops.Dedup.compactLineIndex(spark, path, parts)
+    graft.ops.IncrementalIndex.Line.compact(spark, path, parts)
 
   /** Train and persist every ANN serving artifact (IVF centroids, PQ
     * codebooks + codes, LSH buckets) to one parquet directory — the
@@ -927,23 +927,25 @@ final class Graft(val spark: SparkSession, stateDir: String) {
                      vecCol: String = "embedding"): Unit =
     graft.ops.AnnIndex.append(inc, idCol, vecCol, path)
 
-  /** Small-files maintenance for the three persisted-index families:
+  /** Small-files maintenance for the persisted-index families of
+    * [[graft.ops.IncrementalIndex]] (this, [[spanIndexCompact]],
+    * [[digestIndexCompact]], [[lineIndexCompact]]) and the ANN index:
     * a manifest-committed rewrite of the hash-prefix partitions that
     * accumulated multiple append commits (dirty-only — proportional
     * to the uncompacted fraction, no swap window, appends interleave
-    * safely; the span form also merges per-gram minima).
+    * safely; the min_doc families also merge per-key minima).
     */
   def dedupIndexCompact(path: String, parts: Int = 32): Unit =
-    graft.ops.Dedup.compactMinhashIndex(spark, path, parts)
+    graft.ops.IncrementalIndex.Minhash.compact(spark, path, parts)
 
   def spanIndexCompact(path: String, parts: Int = 32): Unit =
-    graft.ops.Dedup.compactSpanGramIndex(spark, path, parts)
+    graft.ops.IncrementalIndex.Span.compact(spark, path, parts)
 
   def annIndexCompact(path: String, parts: Int = 32): Unit =
     graft.ops.AnnIndex.compact(spark, path, parts)
 
   /** Manifest-only fragmentation summary of a persisted index
-    * (digest / MinHash / span-gram store directory) — leaves per
+    * (a [[graft.ops.IncrementalIndex]] store directory) — leaves per
     * prefix, dirty fraction, tag count: the numbers that decide
     * whether a `*IndexCompact` pass is worth scheduling. None for a
     * path with no committed manifest. Safe on every ingest tick (no

@@ -186,12 +186,7 @@ object AnnIndex {
     // disjoint artifact tables — overlap them (r16; two sequential
     // job-latency rounds otherwise)
     val manifestF = Concurrent.forkValue(readManifest(spark, path))
-    val cb =
-      try readPqCodebooks(spark, path)
-      catch { case e: Throwable =>
-        try manifestF() catch { case e2: Throwable => e.addSuppressed(e2) }
-        throw e
-      }
+    val cb = Concurrent.joinOnFailure(manifestF)(readPqCodebooks(spark, path))
     val (dims, _, _, _, planes, _) = manifestF()
     // the manifest's dims gate the increment: a wrong-dimensional (or
     // NULL) vector would otherwise encode garbage codes silently (the

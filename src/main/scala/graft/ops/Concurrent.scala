@@ -60,6 +60,24 @@ private[graft] object Concurrent {
     () => { join(); out.get }
   }
 
+  /** Run `body`; if it throws, join every fork in `pending` before
+    * rethrowing — a failed composition must not leave forked jobs
+    * running behind it — with their failures suppressed onto the
+    * primary. A fork's join rethrows the same instance every time, so
+    * the fork that raised the primary is never suppressed onto itself
+    * (`addSuppressed(self)` throws and would hide the root cause).
+    */
+  def joinOnFailure[T](pending: (() => Any)*)(body: => T): T =
+    try body
+    catch {
+      case e: Throwable =>
+        pending.foreach { join =>
+          try join()
+          catch { case e2: Throwable => if (e2 ne e) e.addSuppressed(e2) }
+        }
+        throw e
+    }
+
   private def throwCollected(
       errs: java.util.concurrent.ConcurrentLinkedQueue[Throwable]): Unit =
     if (!errs.isEmpty) {

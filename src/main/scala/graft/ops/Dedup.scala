@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -236,9 +236,15 @@ object Dedup {
   /** The positional gram-hash stream duplicateSpans and the span-gram
     * index build share: one (doc_id, gpos, gh) row per token n-gram
     * position, docs shorter than `n` excluded. One ShingleHashes
-    * kernel pass; callers pin it when they fan out.
+    * kernel pass; callers pin it when they fan out. Over an
+    * already-pinned shard, the UNPINNED table may go straight in as an
+    * increment's `pinnedGrams`: each consumer re-runs the map-only gram
+    * explode over the checkpoint instead of paying a dedicated
+    * checkpoint job, and the exploded table (roughly n× the text bytes)
+    * is never materialized — at scale that write+read costs about as
+    * much as re-running the hash kernel.
     */
-  private def spanGrams(df: DataFrame, idCol: String, textCol: String,
+  private[graft] def spanGrams(df: DataFrame, idCol: String, textCol: String,
                         n: Int): DataFrame =
     Spread.ifNarrow(df, col(idCol))
       .where(size(TextAnalysis.tokens(col(textCol))) >= n)
@@ -355,129 +361,39 @@ object Dedup {
 
   // ── incremental span dedup against a persisted gram index ─────────
 
-  /** Hash-prefix layout keys for the three index families — a
-    * deterministic function of each index's KEY column, so every
-    * commit lands rows for the same key under the same `_pfx=`
-    * directory and [[IndexStore.compact]]'s per-partition folds are
-    * global folds.
-    */
-  private[graft] def spanPfx: Column = pmod(col("gh"), lit(16)).cast("string")
-  private[graft] def digestPfx: Column = substring(col("digest"), 1, 1)
-  private[graft] def minhashPfx: Column = pmod(col("id"), lit(16)).cast("string")
-
-  /** Persist a corpus's span-gram index: one (gh, min_doc) row per
-    * DISTINCT n-gram hash — the accumulated state
-    * [[removeDuplicateSpansIncrement]] cleans each NEW shard against,
-    * instead of re-hashing the full corpus per ingest. `min_doc` (the
-    * smallest doc id that contributed the gram in this write) is what
-    * makes a RETRY of an already-appended shard verdict-stable: the
-    * presence test is `index.min_doc < doc_id`, so a doc's own
-    * appended grams can never mark it (see the increment's scaladoc).
-    * Cost is ~8 bytes per distinct gram — the hash inverted index
-    * that replaces Lee et al.'s suffix array, persisted. Storage is
-    * an [[IndexStore]] (manifest-committed, `pmod(gh, 16)` prefix
-    * layout); `commitTag` makes an append replay-idempotent.
+  /** Persist a corpus's span-gram index ([[IncrementalIndex.Span]]):
+    * one (gh, min_doc) row per DISTINCT n-gram hash — the accumulated
+    * state [[removeDuplicateSpansIncrement]] cleans each NEW shard
+    * against, instead of re-hashing the full corpus per ingest. Cost is
+    * ~8 bytes per distinct gram — the hash inverted index that replaces
+    * Lee et al.'s suffix array, persisted. `commitTag` makes an append
+    * replay-idempotent.
     */
   def writeSpanGramIndex(df: DataFrame, idCol: String, textCol: String,
                          path: String, n: Int = 8,
                          append: Boolean = false,
                          commitTag: Option[String] = None): Unit =
-    writeSpanGramIndexFrom(
-      spanGrams(df, idCol, textCol, n)
-        .groupBy(col("gh")).agg(min(col("doc_id")).as("min_doc")),
+    IncrementalIndex.Span.write(IncrementalIndex.Span.rows(spanGrams(df, idCol, textCol, n)),
       path, append, commitTag)
-
-  /** [[writeSpanGramIndex]] from an already-computed (gh, min_doc)
-    * row table — e.g. [[pinnedSpanIndexRows]], so a build-then-probe
-    * composition appends the SAME pinned table it hands the
-    * increment's `pinnedIndex`, skipping the write→read-back parquet
-    * round trip (guide §6 I/O) without touching what lands on disk.
-    */
-  def writeSpanGramIndexFrom(rows: DataFrame, path: String,
-                             append: Boolean = false,
-                             commitTag: Option[String] = None): Unit = {
-    if (!append) IndexStore.reset(rows.sparkSession, path)
-    IndexStore.append(rows, path, spanPfx, commitTag)
-  }
-
-  /** The corpus-side span index rows — one (gh, min_doc) row per
-    * distinct gram — aggregated and eagerly pinned: byte-identical to
-    * what [[writeSpanGramIndex]] computes before appending, exposed so
-    * a caller can (a) overlap the build with the increment-side gram
-    * pass and (b) probe the pinned table directly
-    * ([[removeDuplicateSpansIncrement]]'s `pinnedIndex`) instead of
-    * re-reading the files the append just wrote.
-    */
-  def pinnedSpanIndexRows(df: DataFrame, idCol: String, textCol: String,
-                          n: Int = 8): DataFrame =
-    spanGrams(df, idCol, textCol, n)
-      .groupBy(col("gh")).agg(min(col("doc_id")).as("min_doc"))
-      .localCheckpoint(true)
-
-  /** Load a [[writeSpanGramIndex]] gram index. */
-  def readSpanGramIndex(spark: SparkSession, path: String): DataFrame =
-    IndexStore.read(spark, path)
-
-  /** Compact a span-gram index: merge per-shard (gh, min_doc) rows
-    * to one global-minimum row per gram AND rewrite the append-
-    * accumulated small files — only in the hash-prefix partitions
-    * that accumulated multiple commits ([[IndexStore.compact]]'s
-    * dirty-partition contract; appends landing mid-compaction are
-    * carried forward, no quiesce window). Results are unchanged —
-    * the increment probe aggregates the same minima at read time;
-    * compaction just stops paying for it.
-    */
-  def compactSpanGramIndex(spark: SparkSession, path: String,
-                           parts: Int = 32): Unit =
-    IndexStore.compact(spark, path, spanPfx,
-      _.groupBy(col("gh")).agg(min(col("min_doc")).as("min_doc")), parts)
-
-  /** Compact a MinHash signature index's append-accumulated files
-    * (rows are per-doc and all load-bearing — file layout only,
-    * dirty partitions only).
-    */
-  def compactMinhashIndex(spark: SparkSession, path: String,
-                          parts: Int = 32): Unit =
-    IndexStore.compact(spark, path, minhashPfx, identity, parts)
 
   // ── incremental exact dedup against a persisted digest index ──────
 
   private def exactDigest(textCol: String, normalized: Boolean) =
     if (normalized) TextAnalysis.fingerprint(col(textCol)) else md5(col(textCol))
 
-  /** Persist a corpus's exact-dup digest index: one (digest, min_doc)
-    * row per DISTINCT document digest — the third persisted-index
-    * family (exact / MinHash / span-gram), for the pipelines whose
-    * seen-forever digest set outgrows a streaming state store and
-    * must live as a joinable table. `min_doc` carries the same
-    * retry-stability contract as [[writeSpanGramIndex]].
+  /** Persist a corpus's exact-dup digest index
+    * ([[IncrementalIndex.Digest]]): one (digest, min_doc) row per
+    * DISTINCT document digest, for the pipelines whose seen-forever
+    * digest set outgrows a streaming state store and must live as a
+    * joinable table.
     */
   def writeDigestIndex(df: DataFrame, idCol: String, textCol: String,
                        path: String, normalized: Boolean = false,
                        append: Boolean = false,
-                       commitTag: Option[String] = None): Unit = {
-    if (!append) IndexStore.reset(df.sparkSession, path)
-    IndexStore.append(
-      df.select(col(idCol).as("_did"),
-          exactDigest(textCol, normalized).as("digest"))
-        .groupBy(col("digest")).agg(min(col("_did")).as("min_doc")),
-      path, digestPfx, commitTag)
-  }
-
-  /** Load a [[writeDigestIndex]] digest index. */
-  def readDigestIndex(spark: SparkSession, path: String): DataFrame =
-    IndexStore.read(spark, path)
-
-  /** Compact a digest index: merge per-shard (digest, min_doc) rows
-    * to the global minimum per digest and rewrite the small files —
-    * dirty hash-prefix partitions only ([[IndexStore.compact]]).
-    * Results unchanged — the increment probe aggregates the same
-    * minima at read time.
-    */
-  def compactDigestIndex(spark: SparkSession, path: String,
-                         parts: Int = 32): Unit =
-    IndexStore.compact(spark, path, digestPfx,
-      _.groupBy(col("digest")).agg(min(col("min_doc")).as("min_doc")), parts)
+                       commitTag: Option[String] = None): Unit =
+    IncrementalIndex.Digest.write(IncrementalIndex.Digest.rows(
+        df.select(col(idCol).as("doc_id"), exactDigest(textCol, normalized).as("digest"))),
+      path, append, commitTag)
 
   /** Exact-dedup a NEW shard against the accumulated corpus WITHOUT
     * re-reading it: an increment doc survives iff no PAST doc shares
@@ -510,13 +426,11 @@ object Dedup {
                           commitTag: Option[String] = None,
                           appendBarrier: Option[AppendBarrier] = None,
                           pinnedDigested: Option[DataFrame] = None): DataFrame = {
-    val spark = inc.sparkSession
-    val idx = readDigestIndex(spark, indexPath)
-      .groupBy(col("digest")).agg(min(col("min_doc")).as("_imn"))
+    val idx = IncrementalIndex.Digest.snapshot(inc.sparkSession, indexPath)
     // eager pin: the digest kernel has three consumers (within-keep,
     // the index probe, the append) — unpinned, each would re-hash the
-    // shard. `pinnedDigested` (must be [[pinnedExactDigests]] over the
-    // same shard/args) lets a caller materialize this pass
+    // shard. `pinnedDigested` (`inc` plus its digest as `_dg`, computed
+    // with the same `normalized`) lets a caller materialize this pass
     // CONCURRENTLY with independent work — e.g. the NEXT shard's
     // front-door kernel overlapping this shard's ingest: the digest
     // column is per-doc deterministic, so the table is identical.
@@ -543,28 +457,12 @@ object Dedup {
       // downstream consumer of `kept` reads THIS index (its manifest
       // snapshot is already taken) — so a composed pipeline may defer
       // it through the barrier and overlap it with later-stage compute
-      def doAppend(): Unit = IndexStore.append(
-        d.select(col(idCol).as("_did"), col("_dg").as("digest"))
-          .groupBy(col("digest")).agg(min(col("_did")).as("min_doc")),
-        indexPath, digestPfx, commitTag)
-      appendBarrier match {
-        case Some(b) => b.submitFor(indexPath)(doAppend())
-        case None => doAppend()
-      }
+      IncrementalIndex.Digest.append(IncrementalIndex.Digest.rows(
+          d.select(col(idCol).as("doc_id"), col("_dg").as("digest"))),
+        indexPath, commitTag, appendBarrier)
     }
     kept
   }
-
-  /** The shard's digest-kernel table, eagerly pinned — the exact
-    * table [[dedupExactIncrement]] computes when `pinnedDigested` is
-    * absent, exposed so a caller can overlap its materialization with
-    * an independent job (e.g. the previous shard's ingest in a
-    * composed pipeline).
-    */
-  def pinnedExactDigests(inc: DataFrame, textCol: String,
-                         normalized: Boolean = false): DataFrame =
-    inc.withColumn("_dg", exactDigest(textCol, normalized))
-      .localCheckpoint(true)
 
   /** Cut duplicated token spans out of a NEW shard against the
     * accumulated corpus WITHOUT re-hashing it: a gram position in an
@@ -608,20 +506,17 @@ object Dedup {
                                     appendBarrier: Option[AppendBarrier] = None,
                                     pinnedGrams: Option[DataFrame] = None,
                                     pinnedIndex: Option[DataFrame] = None): DataFrame = {
-    val spark = inc.sparkSession
     // `pinnedIndex` (must hold exactly the index's (gh, min_doc) rows
-    // — e.g. [[pinnedSpanIndexRows]] unioned with any prior snapshot)
-    // lets a build-then-probe caller skip re-reading the files its own
-    // append just wrote; the aggregate below makes either source one
-    // row per gh
-    val idx = pinnedIndex.getOrElse(readSpanGramIndex(spark, indexPath))
-      // one row per gh whatever the shard-append history: the global
-      // first doc is the min over per-shard minima
-      .groupBy(col("gh")).agg(min(col("min_doc")).as("_imn"))
+    // — e.g. [[IncrementalIndex.build]]'s pin) lets a build-then-probe
+    // caller skip re-reading the files its own append just wrote; the
+    // snapshot folds either source to one row per gh (the global first
+    // doc is the min over per-shard minima)
+    val idx = IncrementalIndex.Span.snapshot(inc.sparkSession, indexPath, pinnedIndex)
     // eager pin: the within-fold, the index probe and the append all
     // read the gram table — unpinned, each would re-run the kernel.
-    // `pinnedGrams` (must be [[pinnedSpanGrams]] over the same shard/
-    // args) lets a caller materialize this pass CONCURRENTLY with an
+    // `pinnedGrams` (the [[spanGrams]] table over the same shard/args:
+    // [[pinnedSpanGrams]], or the unpinned kernel over an already-pinned
+    // `inc`) lets a caller materialize this pass CONCURRENTLY with an
     // independent job (the bench rows overlap it with the corpus-side
     // index build) — the table is identical, so verdicts are too.
     val grams = pinnedGrams.getOrElse(
@@ -643,15 +538,9 @@ object Dedup {
     // for the distinct plus a doc_id exchange for the window)
     val hits = idxHits.union(withinHits).repartition(col("doc_id")).distinct()
     val out = cutSpans(inc, idCol, textCol, spansFromGramHits(hits, n))
-    if (appendGrams) {
-      def doAppend(): Unit = IndexStore.append(
-        grams.groupBy(col("gh")).agg(min(col("doc_id")).as("min_doc")),
-        indexPath, spanPfx, commitTag)
-      appendBarrier match {
-        case Some(b) => b.submitFor(indexPath)(doAppend())
-        case None => doAppend()
-      }
-    }
+    if (appendGrams)
+      IncrementalIndex.Span.append(IncrementalIndex.Span.rows(grams),
+        indexPath, commitTag, appendBarrier)
     out
   }
 
@@ -665,19 +554,6 @@ object Dedup {
                       n: Int = 8): DataFrame =
     spanGrams(inc, idCol, textCol, n).localCheckpoint(true)
 
-  /** UNPINNED [[spanGrams]] view — pass as `pinnedGrams` only when
-    * `inc` is itself already materialized (a checkpoint): consumers
-    * re-run the map-only gram explode over the pinned parent instead
-    * of paying a dedicated checkpoint job. The kernel runs once per
-    * consuming plan branch, but never re-executes anything upstream
-    * of the checkpoint — and it avoids materializing the exploded
-    * gram table (roughly n× the text bytes), which at scale costs
-    * about as much to write+read as the hash kernel costs to re-run.
-    */
-  def spanGramsOver(inc: DataFrame, idCol: String, textCol: String,
-                    n: Int = 8): DataFrame =
-    spanGrams(inc, idCol, textCol, n)
-
   // ── line-level exact dedup (the Falcon/RefinedWeb boilerplate rule) ─
 
   /** One (doc_id, lpos, lh) row per NON-BLANK line: lines are the
@@ -687,9 +563,11 @@ object Dedup {
     * 64-bit hash of the line. Blank and whitespace-only lines never
     * participate — they are document structure, and cutting "the
     * empty line" corpus-globally would mangle every multi-paragraph
-    * doc. One map pass, no shuffle.
+    * doc. One map pass, no shuffle. Like [[spanGrams]], the unpinned
+    * table over an already-pinned shard may go in as an increment's
+    * `pinnedLines` (the split + xxhash re-runs map-side per consumer).
     */
-  private def lineRows(df: DataFrame, idCol: String, textCol: String): DataFrame =
+  private[graft] def lineRows(df: DataFrame, idCol: String, textCol: String): DataFrame =
     Spread.ifNarrow(df, col(idCol))
       .select(col(idCol).as("doc_id"),
         posexplode(split(coalesce(col(textCol), lit("")), "\n", -1))
@@ -806,55 +684,15 @@ object Dedup {
         (size(col("_l")) - size(col("_k"))).cast("long").as("n_lines_removed"))
   }
 
-  /** The hash-prefix layout key for the line index family. */
-  private[graft] def linePfx: Column = pmod(col("lh"), lit(16)).cast("string")
-
-  /** Persist a corpus's line index: one (lh, min_doc) row per
-    * DISTINCT non-blank line hash — the fourth persisted-index family
-    * (exact / MinHash / span-gram / line), with the same `min_doc`
-    * retry-stability contract as [[writeSpanGramIndex]]. Storage is
-    * an [[IndexStore]] (`pmod(lh, 16)` prefix layout); `commitTag`
+  /** Persist a corpus's line index ([[IncrementalIndex.Line]]): one
+    * (lh, min_doc) row per DISTINCT non-blank line hash. `commitTag`
     * makes an append replay-idempotent.
     */
   def writeLineIndex(df: DataFrame, idCol: String, textCol: String,
                      path: String, append: Boolean = false,
                      commitTag: Option[String] = None): Unit =
-    writeLineIndexFrom(
-      lineRows(df, idCol, textCol)
-        .groupBy(col("lh")).agg(min(col("doc_id")).as("min_doc")),
+    IncrementalIndex.Line.write(IncrementalIndex.Line.rows(lineRows(df, idCol, textCol)),
       path, append, commitTag)
-
-  /** [[writeLineIndex]] from an already-computed (lh, min_doc) row
-    * table — the line-family twin of [[writeSpanGramIndexFrom]]. */
-  def writeLineIndexFrom(rows: DataFrame, path: String,
-                         append: Boolean = false,
-                         commitTag: Option[String] = None): Unit = {
-    if (!append) IndexStore.reset(rows.sparkSession, path)
-    IndexStore.append(rows, path, linePfx, commitTag)
-  }
-
-  /** The corpus-side line index rows, aggregated and eagerly pinned —
-    * the line-family twin of [[pinnedSpanIndexRows]]. */
-  def pinnedLineIndexRows(df: DataFrame, idCol: String,
-                          textCol: String): DataFrame =
-    lineRows(df, idCol, textCol)
-      .groupBy(col("lh")).agg(min(col("doc_id")).as("min_doc"))
-      .localCheckpoint(true)
-
-  /** Load a [[writeLineIndex]] line index. */
-  def readLineIndex(spark: SparkSession, path: String): DataFrame =
-    IndexStore.read(spark, path)
-
-  /** Compact a line index: merge per-shard (lh, min_doc) rows to the
-    * global minimum per line and rewrite append-accumulated files —
-    * dirty hash-prefix partitions only ([[IndexStore.compact]]).
-    * Results unchanged — the increment probe aggregates the same
-    * minima at read time.
-    */
-  def compactLineIndex(spark: SparkSession, path: String,
-                       parts: Int = 32): Unit =
-    IndexStore.compact(spark, path, linePfx,
-      _.groupBy(col("lh")).agg(min(col("min_doc")).as("min_doc")), parts)
 
   /** Cut duplicated lines out of a NEW shard against the accumulated
     * corpus WITHOUT re-reading it: an increment line occurrence is
@@ -882,15 +720,14 @@ object Dedup {
                                     appendBarrier: Option[AppendBarrier] = None,
                                     pinnedLines: Option[DataFrame] = None,
                                     pinnedIndex: Option[DataFrame] = None): DataFrame = {
-    val spark = inc.sparkSession
     // `pinnedIndex`: see [[removeDuplicateSpansIncrement]] — skips the
     // write→read-back round trip in a build-then-probe composition
-    val idx = pinnedIndex.getOrElse(readLineIndex(spark, indexPath))
-      .groupBy(col("lh")).agg(min(col("min_doc")).as("_imn"))
+    val idx = IncrementalIndex.Line.snapshot(inc.sparkSession, indexPath, pinnedIndex)
     // eager pin: the within-fold, the index probe and the append all
     // read the line table — unpinned, each would re-split the shard.
-    // `pinnedLines` (must be [[pinnedLineRows]] over the same shard)
-    // lets a caller overlap this pass with an independent job.
+    // `pinnedLines` (the [[lineRows]] table over the same shard:
+    // [[pinnedLineRows]], or the unpinned kernel over an already-pinned
+    // `inc`) lets a caller overlap this pass with an independent job.
     val lines = pinnedLines.getOrElse(
       lineRows(inc, idCol, textCol).localCheckpoint(true))
     val within = lines.groupBy(col("lh"))
@@ -907,15 +744,9 @@ object Dedup {
     val cuts = idxCuts.union(withinCuts).repartition(col("doc_id")).distinct()
       .groupBy(col("doc_id")).agg(collect_list(col("lpos")).as("_cuts"))
     val out = cutLines(inc, idCol, textCol, cuts)
-    if (appendLines) {
-      def doAppend(): Unit = IndexStore.append(
-        lines.groupBy(col("lh")).agg(min(col("doc_id")).as("min_doc")),
-        indexPath, linePfx, commitTag)
-      appendBarrier match {
-        case Some(b) => b.submitFor(indexPath)(doAppend())
-        case None => doAppend()
-      }
-    }
+    if (appendLines)
+      IncrementalIndex.Line.append(IncrementalIndex.Line.rows(lines),
+        indexPath, commitTag, appendBarrier)
     out
   }
 
@@ -926,16 +757,6 @@ object Dedup {
     */
   def pinnedLineRows(inc: DataFrame, idCol: String, textCol: String): DataFrame =
     lineRows(inc, idCol, textCol).localCheckpoint(true)
-
-  /** UNPINNED [[lineRows]] view — pass as `pinnedLines` only when
-    * `inc` is itself already materialized (a checkpoint): the
-    * increment's consumers then re-run the cheap line explode
-    * (split + xxhash, map-side) over the pinned parent instead of
-    * paying a dedicated checkpoint job for the exploded table. Same
-    * rows by construction.
-    */
-  def lineRowsOver(inc: DataFrame, idCol: String, textCol: String): DataFrame =
-    lineRows(inc, idCol, textCol)
 
   /** MinHash signatures in wide form: one row per doc, k `sig<i>`
     * columns — a single shuffle (groupBy id) with k min-aggregates,
@@ -1124,32 +945,15 @@ object Dedup {
     * ~4 orders of magnitude smaller than the corpus it summarizes.
     *
     * A zero-row corpus still writes a schema-carrying anchor file
-    * ([[IndexStore]]), so [[readMinhashIndex]] on a fresh index never
+    * ([[IndexStore]]), so reading a fresh index never
     * fails schema inference.
     */
   def writeMinhashIndex(df: DataFrame, idCol: String, textCol: String,
                         path: String, k: Int = 16, n: Int = 3,
                         append: Boolean = false,
                         commitTag: Option[String] = None): Unit =
-    writeMinhashIndexFrom(minhashSignaturesWide(df, idCol, textCol, k, n),
+    IncrementalIndex.Minhash.write(minhashSignaturesWide(df, idCol, textCol, k, n),
       path, append, commitTag)
-
-  /** [[writeMinhashIndex]] from an already-computed wide signature
-    * table (e.g. [[pinnedMinhashSignatures]] over the corpus) — the
-    * minhash-family twin of [[writeSpanGramIndexFrom]]: a
-    * build-then-probe composition appends the SAME pinned table it
-    * probes, skipping the write→read-back parquet round trip.
-    */
-  def writeMinhashIndexFrom(sigs: DataFrame, path: String,
-                            append: Boolean = false,
-                            commitTag: Option[String] = None): Unit = {
-    if (!append) IndexStore.reset(sigs.sparkSession, path)
-    IndexStore.append(sigs, path, minhashPfx, commitTag)
-  }
-
-  /** Load a [[writeMinhashIndex]] signature index. */
-  def readMinhashIndex(spark: SparkSession, path: String): DataFrame =
-    IndexStore.read(spark, path)
 
   /** [[minhashLshPairs]] over an already-computed wide signature
     * table (e.g. a reloaded [[writeMinhashIndex]]): the corpus text
@@ -1213,12 +1017,11 @@ object Dedup {
                      pinnedSigs: Option[DataFrame] = None,
                      pinnedIndex: Option[DataFrame] = None): DataFrame = {
     require(k % bands == 0, "k must divide into bands")
-    val spark = inc.sparkSession
     // `pinnedIndex` (the index's wide signature rows, e.g.
-    // [[pinnedMinhashSignatures]] over the corpus as appended by
-    // [[writeMinhashIndexFrom]]): a build-then-probe caller skips
-    // re-reading the files its own append just wrote
-    val idx = pinnedIndex.getOrElse(readMinhashIndex(spark, indexPath))
+    // [[IncrementalIndex.build]]'s pin of the corpus signatures): a
+    // build-then-probe caller skips re-reading the files its own append
+    // just wrote
+    val idx = IncrementalIndex.Minhash.snapshot(inc.sparkSession, indexPath, pinnedIndex)
     // eager pin: the signature table has four consumers (cross join,
     // estimate, within-pairs, the append) — a lazy pin would let the
     // AQE broadcast thread race the main thread into recomputing it.
@@ -1244,13 +1047,8 @@ object Dedup {
       .select(col("id_b").as("_drop"))
     val drops = crossDrops.union(withinDrops).distinct()
     val kept = inc.join(broadcast(drops), inc(idCol) === col("_drop"), "left_anti")
-    if (appendSignatures) {
-      def doAppend(): Unit = IndexStore.append(wide, indexPath, minhashPfx, commitTag)
-      appendBarrier match {
-        case Some(b) => b.submitFor(indexPath)(doAppend())
-        case None => doAppend()
-      }
-    }
+    if (appendSignatures)
+      IncrementalIndex.Minhash.append(wide, indexPath, commitTag, appendBarrier)
     kept
   }
 

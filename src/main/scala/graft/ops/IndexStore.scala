@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Manifest-committed storage for the persisted-index families
-  * (digest / MinHash-signature / span-gram). The index directory is
+/** Manifest-committed storage for the persisted-index families (listed
+  * in [[IncrementalIndex]]) and the ANN index tables. The index directory is
   * append-only data plus a tiny commit log:
   *
   * {{{

@@ -155,31 +155,22 @@ object IngestPipeline {
     // interrupted compaction can no longer masquerade as a missing
     // index: IndexStore compaction commits by manifest, so the index
     // stays present (and readable) through every maintenance crash.
-    val none = shard.where(lit(false))
+    val empty = shard.where(lit(false)).withColumn(textCol, lit(""))
     // the missing-index inits are independent single-anchor writes to
     // DISJOINT paths — overlap them (r15: the first shard paid one
     // job-latency round per index; Concurrent.inParallel rationale).
     // The URL index init rides the same round (r16 — it previously
-    // serialized inside stage 0b).
-    val inits = Seq[Option[() => Unit]](
-      if (!IndexStore.exists(spark, digestIndexPath)) Some(() =>
-        Dedup.writeDigestIndex(none.withColumn(textCol, lit("")), idCol, textCol,
-          digestIndexPath)) else None,
-      if (!IndexStore.exists(spark, minhashIndexPath)) Some(() =>
-        Dedup.writeMinhashIndex(none.withColumn(textCol, lit("")), idCol, textCol,
-          minhashIndexPath, k, shingleN)) else None,
-      if (!IndexStore.exists(spark, spanIndexPath)) Some(() =>
-        Dedup.writeSpanGramIndex(none.withColumn(textCol, lit("")), idCol, textCol,
-          spanIndexPath, spanN)) else None,
-      lineIndexPath.collect {
-        case lp if !IndexStore.exists(spark, lp) => () =>
-          Dedup.writeLineIndex(none.withColumn(textCol, lit("")), idCol, textCol, lp)
-      },
-      urlIndexPath.collect {
-        case uPath if !IndexStore.exists(spark, uPath) => () =>
-          Dedup.writeDigestIndex(
-            none.withColumn("_norm_url", lit("")), idCol, "_norm_url", uPath)
-      }).flatten
+    // serialized inside stage 0b): a digest index over `textCol`, the
+    // same (digest, min_doc) schema as the canonical-URL rows.
+    val writers = Seq[(Option[String], String => Unit)](
+      Some(digestIndexPath) -> (Dedup.writeDigestIndex(empty, idCol, textCol, _)),
+      Some(minhashIndexPath) -> (Dedup.writeMinhashIndex(empty, idCol, textCol, _, k, shingleN)),
+      Some(spanIndexPath) -> (Dedup.writeSpanGramIndex(empty, idCol, textCol, _, spanN)),
+      lineIndexPath -> (Dedup.writeLineIndex(empty, idCol, textCol, _)),
+      urlIndexPath -> (Dedup.writeDigestIndex(empty, idCol, textCol, _)))
+    val inits = writers.collect {
+      case (Some(path), write) if !IndexStore.exists(spark, path) => () => write(path)
+    }
     if (inits.nonEmpty) Concurrent.inParallel(inits: _*)
     // every stage's index append is independent of downstream stage
     // compute (each stage reads only its OWN index, whose manifest
@@ -203,7 +194,13 @@ object IngestPipeline {
     // instead of once per shard (r16).
     val bloomPrep = preparedBloom.getOrElse(Concurrent.forkValue(
       Decontaminate.prepareBloom(bench, textCol, decontamN, expectedGrams, fpp)))
-    try {
+    // a failed shard must not leave append threads mutating index
+    // paths behind the failure (a streaming retry or the next shard
+    // could interleave with them): join everything in flight — the
+    // internally forked Bloom build too — before propagating
+    val pending = Seq(() => barrier.await()) ++
+      (if (preparedBloom.isEmpty) Seq(bloomPrep) else Nil)
+    Concurrent.joinOnFailure(pending: _*) {
       val out = ingestStages(shard, barrier, bloomPrep,
         digestIndexPath, minhashIndexPath, spanIndexPath,
         idCol, textCol, keyCol, minTokens, maxDupFrac,
@@ -217,20 +214,6 @@ object IngestPipeline {
       // per-stage awaitFor gates keep each read correct meanwhile).
       if (externalBarrier.isEmpty) barrier.await()
       out
-    } catch {
-      case e: Throwable =>
-        // a failed shard must not leave append threads mutating index
-        // paths behind the failure (a streaming retry or the next
-        // shard could interleave with them): join everything in
-        // flight — the internally forked Bloom build too — before
-        // propagating, suppressing secondary errors onto the primary
-        try barrier.await()
-        catch { case e2: Throwable => e.addSuppressed(e2) }
-        if (preparedBloom.isEmpty) {
-          try bloomPrep()
-          catch { case e2: Throwable => e.addSuppressed(e2) }
-        }
-        throw e
     }
   }
 
@@ -406,7 +389,7 @@ object IngestPipeline {
             // `near` is already pinned: the line explode re-runs
             // map-side per consumer over the checkpoint instead of
             // paying its own sequential checkpoint job (r16)
-            pinnedLines = Some(Dedup.lineRowsOver(near, idCol, textCol)))
+            pinnedLines = Some(Dedup.lineRows(near, idCol, textCol)))
           .select(col("doc_id").as(idCol), col("clean_text").as(textCol))
           // pin: the span increment consumes this twice (gram pass +
           // cut); unpinned it would re-run the line join per consumer
@@ -419,8 +402,8 @@ object IngestPipeline {
         appendBarrier = Some(barrier),
         // `lineClean` is already pinned: the map-only gram explode
         // re-runs per consumer over the checkpoint instead of paying
-        // its own sequential checkpoint job (r16; see spanGramsOver)
-        pinnedGrams = Some(Dedup.spanGramsOver(lineClean, idCol, textCol, spanN)))
+        // its own sequential checkpoint job (r16; see Dedup.spanGrams)
+        pinnedGrams = Some(Dedup.spanGrams(lineClean, idCol, textCol, spanN)))
       .join(near.select(col(idCol).as("doc_id"), col(keyCol)), Seq("doc_id"))
       .select(col("doc_id"), col(keyCol), col("clean_text"),
         col("n_kept").as("n_tokens"))
@@ -445,37 +428,38 @@ object IngestPipeline {
     * and one idempotence tag line to each manifest, forever. Per
     * index: checkpoint the tag list ([[IndexStore.retireTags]] with
     * `tagRetention`), then fold dirty prefix groups when the
-    * fragmentation crosses `dirtyThreshold` (the family-correct
-    * [[IndexStore.compact]] — per-key minima fold for digest/url/
-    * span/line, identity for minhash). Results are NEVER changed by
+    * fragmentation crosses `dirtyThreshold` (the family's
+    * [[IncrementalIndex.compact]]). Results are NEVER changed by
     * maintenance — every family's read path aggregates the same
     * minima the compaction folds.
     *
-    * `indexes` pairs each path with its family: `"digest"` (also the
-    * URL index — same (digest, min_doc) shape), `"minhash"`,
-    * `"span"`, `"line"`. Stats are manifest-only reads; the compact
-    * pass touches only dirty prefix directories. Safe to call from a
-    * `foreachBatch` tail — the single-writer contract the streaming
-    * sinks already hold covers maintenance too.
+    * `indexes` pairs each path with its [[IncrementalIndex]] family:
+    * `"digest"` (also the URL index — same (digest, min_doc) shape),
+    * `"minhash"`, `"span"`, `"line"`; an unknown name throws
+    * IllegalArgumentException before any index is touched. Stats are
+    * manifest-only reads; the compact pass touches only dirty prefix
+    * directories. Safe to call from a `foreachBatch` tail — the
+    * single-writer contract the streaming sinks already hold covers
+    * maintenance too.
     */
   def maintainIndexes(spark: SparkSession, indexes: Seq[(String, String)],
                       dirtyThreshold: Double = 0.3,
                       tagRetention: Int = 1024,
-                      parts: Int = 32): Seq[MaintenanceReport] =
-    indexes.flatMap { case (path, family) =>
+                      parts: Int = 32): Seq[MaintenanceReport] = {
+    // every family resolves before any manifest is touched: a bad name
+    // fails the whole pass, never half-way through it
+    val resolved = indexes.map { case (path, family) =>
+      (path, family, IncrementalIndex.named(family).getOrElse(
+        throw new IllegalArgumentException(s"unknown index family '$family' for $path")))
+    }
+    resolved.flatMap { case (path, family, index) =>
       IndexStore.stats(spark, path).map { before =>
         IndexStore.retireTags(spark, path, tagRetention)
         val doCompact = before.dirtyFraction >= dirtyThreshold
-        if (doCompact) family match {
-          case "digest" => Dedup.compactDigestIndex(spark, path, parts)
-          case "minhash" => Dedup.compactMinhashIndex(spark, path, parts)
-          case "span" => Dedup.compactSpanGramIndex(spark, path, parts)
-          case "line" => Dedup.compactLineIndex(spark, path, parts)
-          case other => throw new IllegalArgumentException(
-            s"unknown index family '$other' for $path")
-        }
+        if (doCompact) index.compact(spark, path, parts)
         val after = IndexStore.stats(spark, path).getOrElse(before)
         MaintenanceReport(path, family, before, doCompact, after)
       }
     }
+  }
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.ops.{Dedup, IncrementalIndex, Multimodal, Similarity, TextAnalysis}
 
 /** Driver-verifiable entries for the LLM-data-pipeline operators
   * (dedup, text analysis, similarity search, multimodal plumbing)
@@ -885,20 +885,13 @@ object OpsQueries {
               lineIndexPath = Some(s"$base/line"),
               preparedBloom = Some(bloom), pinnedFront = front,
               externalBarrier = Some(barrier))
-          try {
+          // join the forks before propagating a failure (the
+          // ingestShard failure contract, applied at the composition site)
+          graft.ops.Concurrent.joinOnFailure(() => barrier.await(), front1, front2, bloom) {
             val s1 = run(corpus.where(col("doc_id") <= bnd), Some(front1()))
             val s2 = run(corpus.where(col("doc_id") > bnd), Some(front2()))
             barrier.await()
             s1.union(s2).orderBy(col("doc_id"))
-          } catch {
-            case e: Throwable =>
-              // join the forks before propagating (the ingestShard
-              // failure contract, applied at the composition site)
-              try barrier.await() catch { case e2: Throwable => e.addSuppressed(e2) }
-              try front1() catch { case e2: Throwable => e.addSuppressed(e2) }
-              try front2() catch { case e2: Throwable => e.addSuppressed(e2) }
-              try bloom() catch { case e2: Throwable => e.addSuppressed(e2) }
-              throw e
           }
         }
       },
@@ -1292,20 +1285,12 @@ object OpsQueries {
           // (the corpus's own pair scan AND the increment's banded
           // join) read it directly instead of re-reading the files the
           // append just wrote (r16, guide §6 I/O).
-          val built = graft.ops.Concurrent.forkValue {
-            val corpusSigs = Dedup.pinnedMinhashSignatures(
-              old, "doc_id", "text", k = 16, n = 3)
-            Dedup.writeMinhashIndexFrom(corpusSigs, idxPath)
-            corpusSigs
-          }
+          val built = graft.ops.Concurrent.forkValue(IncrementalIndex.Minhash.build(
+            Dedup.minhashSignaturesWide(old, "doc_id", "text", k = 16, n = 3), idxPath))
           // joined on BOTH paths: a failed increment pass must not
           // leak the builder thread
-          val sigs =
-            try Dedup.pinnedMinhashSignatures(inc, "doc_id", "text", k = 16, n = 3)
-            catch { case e: Throwable =>
-              try built() catch { case e2: Throwable => e.addSuppressed(e2) }
-              throw e
-            }
+          val sigs = graft.ops.Concurrent.joinOnFailure(built)(
+            Dedup.pinnedMinhashSignatures(inc, "doc_id", "text", k = 16, n = 3))
           val corpusSigs = built()
           // the corpus's own dup pairs come FROM the pinned table the
           // index was written from — the corpus text is
@@ -1352,20 +1337,14 @@ object OpsQueries {
           // returns the PINNED index rows it appended, so the probe
           // reads them directly instead of re-reading the files the
           // append just wrote (r16, guide §6 I/O)
-          val built = graft.ops.Concurrent.forkValue {
-            val rows = Dedup.pinnedSpanIndexRows(
-              docs.where(col("doc_id") <= bnd), "doc_id", "text", n = 5)
-            Dedup.writeSpanGramIndexFrom(rows, idxPath)
-            rows
-          }
+          val built = graft.ops.Concurrent.forkValue(IncrementalIndex.Span.build(
+            IncrementalIndex.Span.rows(
+              Dedup.spanGrams(docs.where(col("doc_id") <= bnd), "doc_id", "text", 5)),
+            idxPath))
           // joined on BOTH paths: a failed increment pass must not
           // leak the builder thread
-          val grams =
-            try Dedup.pinnedSpanGrams(inc, "doc_id", "text", n = 5)
-            catch { case e: Throwable =>
-              try built() catch { case e2: Throwable => e.addSuppressed(e2) }
-              throw e
-            }
+          val grams = graft.ops.Concurrent.joinOnFailure(built)(
+            Dedup.pinnedSpanGrams(inc, "doc_id", "text", n = 5))
           val idxRows = built()
           Dedup.removeDuplicateSpansIncrement(inc,
               "doc_id", "text", idxPath, n = 5, pinnedGrams = Some(grams),
@@ -1468,21 +1447,15 @@ object OpsQueries {
           // returns the PINNED index rows it appended, so the probe
           // reads them directly instead of re-reading the files the
           // append just wrote (r16, guide §6 I/O)
-          val built = graft.ops.Concurrent.forkValue {
-            val rows = Dedup.pinnedLineIndexRows(
-              docs.where(col("doc_id") <= bnd), "doc_id", "text")
-            Dedup.writeLineIndexFrom(rows, idxPath)
-            rows
-          }
+          val built = graft.ops.Concurrent.forkValue(IncrementalIndex.Line.build(
+            IncrementalIndex.Line.rows(
+              Dedup.lineRows(docs.where(col("doc_id") <= bnd), "doc_id", "text")),
+            idxPath))
           // joined on BOTH paths: a failed increment pass must not
           // leak the builder thread (it would keep running Spark jobs
           // against the scratch index after the query has failed)
-          val lines =
-            try Dedup.pinnedLineRows(inc, "doc_id", "text")
-            catch { case e: Throwable =>
-              try built() catch { case e2: Throwable => e.addSuppressed(e2) }
-              throw e
-            }
+          val lines = graft.ops.Concurrent.joinOnFailure(built)(
+            Dedup.pinnedLineRows(inc, "doc_id", "text"))
           val idxRows = built()
           Dedup.removeDuplicateLinesIncrement(inc,
               "doc_id", "text", idxPath, pinnedLines = Some(lines),

@@ -488,8 +488,9 @@ object CurationStreams {
     * writes (doc_id, key, clean_text, n_tokens) rows under
     * batchId-stamped directories of `outDir`. This is the production
     * shape end to end: documents land as parquet shards, every
-    * cross-shard fact lives in the three index tables (absent ones
-    * self-initialize inside the first batch), and the curated corpus
+    * cross-shard fact lives in the persisted index tables
+    * ([[graft.ops.IncrementalIndex]]; absent ones self-initialize
+    * inside the first batch), and the curated corpus
     * streams out. Contracts inherited stage by stage: ids
     * nondecreasing across batches; EXACTLY-ONCE at the sink
     * ([[idempotentBatchSink]]), with every stage's index append

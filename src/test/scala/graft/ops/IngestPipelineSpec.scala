@@ -273,7 +273,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     assert(second == first)
     // the indexes were not double-mutated by the replay: one digest
     // row per distinct digest min-doc group, same as after run 1
-    val digests = Dedup.readDigestIndex(spark, s"$base/digest")
+    val digests = IncrementalIndex.Digest.read(spark, s"$base/digest")
       .groupBy("digest").agg(min("min_doc").as("m")).collect()
       .map(_.toSeq).toSet
     assert(digests.size == 4) // 4 distinct texts ever reached the stage
@@ -307,13 +307,52 @@ class IngestPipelineSpec extends AnyFunSuite {
       appendDigests = false)
     assert(ids(retry) == ids(got))
     // compaction: per-digest minima identical, one row per digest
-    val minBefore = Dedup.readDigestIndex(spark, path)
+    val minBefore = IncrementalIndex.Digest.read(spark, path)
       .groupBy("digest").agg(min("min_doc").as("m"))
       .collect().map(_.toSeq).toSet
-    Dedup.compactDigestIndex(spark, path, parts = 1)
-    val after = Dedup.readDigestIndex(spark, path)
+    IncrementalIndex.Digest.compact(spark, path, parts = 1)
+    val after = IncrementalIndex.Digest.read(spark, path)
     assert(after.groupBy("digest").agg(min("min_doc").as("m"))
       .collect().map(_.toSeq).toSet == minBefore)
     assert(after.count() == minBefore.size)
+  }
+
+  test("ingestShard rethrows the Bloom fork's own failure, not a self-suppression error") {
+    // the bench has no text column: the forked Bloom build fails with
+    // an AnalysisException, which stage 3 rethrows when it joins the
+    // fork; the failure path joins that same fork again, and the
+    // second join rethrows the SAME instance — it must not be
+    // suppressed onto itself (IllegalArgumentException: Self-suppression
+    // not permitted), which would hide the root cause
+    val shard = Seq((1L, uniq(1, 30), "s"), (2L, uniq(2, 30), "s"))
+      .toDF("doc_id", "text", "source")
+    val bench = Seq((100L, "b")).toDF("doc_id", "source")
+    val base = java.nio.file.Files.createTempDirectory("graft_bloom_fail").toString
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      IngestPipeline.ingestShard(shard, bench,
+        s"$base/digest", s"$base/minhash", s"$base/span").collect())
+    assert(!e.getSuppressed.exists(_ eq e))
+  }
+
+  test("maintainIndexes rejects an unknown family before touching any manifest") {
+    val docs = Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"))
+      .toDF("doc_id", "text")
+    val base = java.nio.file.Files.createTempDirectory("graft_maint_bad").toString
+    // tagged commits: with zero retention a maintenance pass would
+    // retire the tags into a watermark, committing a new version
+    Dedup.writeDigestIndex(docs, "doc_id", "text", s"$base/digest", commitTag = Some("7"))
+    Dedup.writeSpanGramIndex(docs, "doc_id", "text", s"$base/span", n = 2,
+      commitTag = Some("7"))
+    def versions =
+      Seq("digest", "span").map(p => IndexStore.stats(spark, s"$base/$p").get.version)
+    val before = versions
+    // both indexes are clean (one commit each), so nothing would be
+    // compacted; the bad name must still fail, and the valid family
+    // listed first must not be touched either
+    val e = intercept[IllegalArgumentException](
+      IngestPipeline.maintainIndexes(spark,
+        Seq(s"$base/digest" -> "digest", s"$base/span" -> "spans"), tagRetention = 0))
+    assert(e.getMessage.contains("spans"))
+    assert(versions == before)
   }
 }

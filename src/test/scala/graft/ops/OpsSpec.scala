@@ -50,7 +50,7 @@ class OpsSpec extends AnyFunSuite {
     // signatures (the batch rule compares against every past doc)
     val direct = Dedup.minhashSignaturesWide(part1, "doc_id", "text", k = 16, n = 3)
       .collect().map(_.toSeq).toSet
-    val reloaded = Dedup.readMinhashIndex(spark, idx).collect().map(_.toSeq).toSet
+    val reloaded = IncrementalIndex.Minhash.read(spark, idx).collect().map(_.toSeq).toSet
     assert(reloaded == direct && reloaded.map(_.head) == Set(1L, 2L))
 
     val kept1 = Dedup.dropPairedDuplicates(part1, "doc_id",
@@ -66,7 +66,7 @@ class OpsSpec extends AnyFunSuite {
     assert((kept1 ++ kept2 ++ kept3) == batchKept,
       s"incremental ${kept1 ++ kept2 ++ kept3} vs batch $batchKept")
     // and the index now carries every ingested doc's signatures
-    assert(Dedup.readMinhashIndex(spark, idx).select("id")
+    assert(IncrementalIndex.Minhash.read(spark, idx).select("id")
       .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 4L, 5L, 6L, 7L))
 
     // RETRY identity: re-running a shard whose signatures were already
@@ -1514,14 +1514,14 @@ class OpsSpec extends AnyFunSuite {
     def cmp(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit =
       assert(a.collect().map(_.toString).sorted.toSeq ==
         b.collect().map(_.toString).sorted.toSeq)
-    // spans: writeSpanGramIndexFrom(pinnedSpanIndexRows) must leave
-    // the same on-disk index AND the pinned probe the same verdicts
+    // spans: IncrementalIndex.build must leave the same on-disk index
+    // AND the pinned probe the same verdicts
     val sp1 = java.nio.file.Files.createTempDirectory("sp1p").toString
     val sp2 = java.nio.file.Files.createTempDirectory("sp2p").toString
     Dedup.writeSpanGramIndex(old, "doc_id", "text", sp1, n = 5)
-    val spRows = Dedup.pinnedSpanIndexRows(old, "doc_id", "text", n = 5)
-    Dedup.writeSpanGramIndexFrom(spRows, sp2)
-    cmp(Dedup.readSpanGramIndex(spark, sp1), Dedup.readSpanGramIndex(spark, sp2))
+    val spRows = IncrementalIndex.Span.build(
+      IncrementalIndex.Span.rows(Dedup.spanGrams(old, "doc_id", "text", 5)), sp2)
+    cmp(IncrementalIndex.Span.read(spark, sp1), IncrementalIndex.Span.read(spark, sp2))
     cmp(
       Dedup.removeDuplicateSpansIncrement(inc, "doc_id", "text", sp1, n = 5),
       Dedup.removeDuplicateSpansIncrement(inc, "doc_id", "text", sp2, n = 5,
@@ -1530,9 +1530,9 @@ class OpsSpec extends AnyFunSuite {
     val ln1 = java.nio.file.Files.createTempDirectory("ln1p").toString
     val ln2 = java.nio.file.Files.createTempDirectory("ln2p").toString
     Dedup.writeLineIndex(old, "doc_id", "text", ln1)
-    val lnRows = Dedup.pinnedLineIndexRows(old, "doc_id", "text")
-    Dedup.writeLineIndexFrom(lnRows, ln2)
-    cmp(Dedup.readLineIndex(spark, ln1), Dedup.readLineIndex(spark, ln2))
+    val lnRows = IncrementalIndex.Line.build(
+      IncrementalIndex.Line.rows(Dedup.lineRows(old, "doc_id", "text")), ln2)
+    cmp(IncrementalIndex.Line.read(spark, ln1), IncrementalIndex.Line.read(spark, ln2))
     cmp(
       Dedup.removeDuplicateLinesIncrement(inc, "doc_id", "text", ln1),
       Dedup.removeDuplicateLinesIncrement(inc, "doc_id", "text", ln2,
@@ -1542,11 +1542,11 @@ class OpsSpec extends AnyFunSuite {
     val mh1 = java.nio.file.Files.createTempDirectory("mh1p").toString
     val mh2 = java.nio.file.Files.createTempDirectory("mh2p").toString
     Dedup.writeMinhashIndex(old, "doc_id", "text", mh1, k = 16, n = 3)
-    val mhSigs = Dedup.pinnedMinhashSignatures(old, "doc_id", "text", k = 16, n = 3)
-    Dedup.writeMinhashIndexFrom(mhSigs, mh2)
-    cmp(Dedup.readMinhashIndex(spark, mh1), Dedup.readMinhashIndex(spark, mh2))
+    val mhSigs = IncrementalIndex.Minhash.build(
+      Dedup.minhashSignaturesWide(old, "doc_id", "text", k = 16, n = 3), mh2)
+    cmp(IncrementalIndex.Minhash.read(spark, mh1), IncrementalIndex.Minhash.read(spark, mh2))
     cmp(
-      Dedup.minhashLshPairsFromSigs(Dedup.readMinhashIndex(spark, mh1),
+      Dedup.minhashLshPairsFromSigs(IncrementalIndex.Minhash.read(spark, mh1),
         k = 16, bands = 4, threshold = 0.25),
       Dedup.minhashLshPairsFromSigs(mhSigs, k = 16, bands = 4, threshold = 0.25))
     cmp(
@@ -2475,10 +2475,10 @@ class OpsSpec extends AnyFunSuite {
     Dedup.writeMinhashIndex(docs.where($"doc_id" <= 20), "doc_id", "text", mh)
     Dedup.writeMinhashIndex(docs.where($"doc_id" > 20), "doc_id", "text", mh,
       append = true)
-    val mhBefore = rows(Dedup.readMinhashIndex(spark, mh))
+    val mhBefore = rows(IncrementalIndex.Minhash.read(spark, mh))
     assert(leavesPerPfx(mh).values.exists(_ > 1), "two appends leave dirty prefixes")
-    Dedup.compactMinhashIndex(spark, mh, parts = 8)
-    assert(rows(Dedup.readMinhashIndex(spark, mh)) == mhBefore)
+    IncrementalIndex.Minhash.compact(spark, mh, parts = 8)
+    assert(rows(IncrementalIndex.Minhash.read(spark, mh)) == mhBefore)
     assert(leavesPerPfx(mh).values.forall(_ == 1),
       "every prefix holds ONE leaf after compaction")
 
@@ -2489,13 +2489,33 @@ class OpsSpec extends AnyFunSuite {
     Dedup.writeSpanGramIndex(docs.where($"doc_id" <= 20), "doc_id", "text", sg, n = 5)
     Dedup.writeSpanGramIndex(docs.where($"doc_id" > 20), "doc_id", "text", sg,
       n = 5, append = true)
-    val minBefore = Dedup.readSpanGramIndex(spark, sg)
+    val minBefore = IncrementalIndex.Span.read(spark, sg)
       .groupBy("gh").agg(min("min_doc").as("m"))
     val minMapBefore = rows(minBefore)
-    Dedup.compactSpanGramIndex(spark, sg, parts = 1)
-    val after = Dedup.readSpanGramIndex(spark, sg)
+    IncrementalIndex.Span.compact(spark, sg, parts = 1)
+    val after = IncrementalIndex.Span.read(spark, sg)
     assert(rows(after.groupBy("gh").agg(min("min_doc").as("m"))) == minMapBefore)
     assert(after.count() == minMapBefore.size, "one row per gram after merge")
+
+    // line index: the same minima merge per line hash. Every doc
+    // carries a shared header line, and the two appends overlap, so
+    // each append holds its own (lh, min_doc) rows for the same lines
+    val lines = docs.select(col("doc_id"),
+      concat(lit("SHARED NAV BAR\n"), col("text")).as("text"))
+    val ln = java.nio.file.Files.createTempDirectory("graft_cmp_ln").toString
+    Dedup.writeLineIndex(lines.where($"doc_id" <= 20), "doc_id", "text", ln)
+    Dedup.writeLineIndex(lines.where($"doc_id" > 10), "doc_id", "text", ln,
+      append = true)
+    val lnBefore = IncrementalIndex.Line.read(spark, ln)
+    val lnMinBefore = rows(lnBefore.groupBy("lh").agg(min("min_doc").as("m")))
+    assert(lnBefore.count() > lnMinBefore.size, "the appends repeat line hashes")
+    assert(leavesPerPfx(ln).values.exists(_ > 1), "two appends leave dirty prefixes")
+    IncrementalIndex.Line.compact(spark, ln, parts = 1)
+    val lnAfter = IncrementalIndex.Line.read(spark, ln)
+    assert(rows(lnAfter.groupBy("lh").agg(min("min_doc").as("m"))) == lnMinBefore)
+    assert(lnAfter.count() == lnMinBefore.size, "one row per line hash after merge")
+    assert(leavesPerPfx(ln).values.forall(_ == 1),
+      "every prefix holds ONE leaf after compaction")
 
     // ANN index: serving bit-identical across the compaction swap
     graft.core.Tables.registerAll(spark, "/root/testdata/sf0.001")

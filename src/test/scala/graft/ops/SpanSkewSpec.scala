@@ -106,7 +106,7 @@ class SpanSkewSpec extends AnyFunSuite {
       path, n = 5, appendGrams = false)
     assert(rows(retry) == rows(got))
     // and the index now carries every distinct gram of the union
-    val idxGh = Dedup.readSpanGramIndex(spark, path)
+    val idxGh = IncrementalIndex.Span.read(spark, path)
       .select("gh").distinct().count()
     val expectGh = docs.select(org.apache.spark.sql.functions.explode(
         graft.functions.TextExpressions.shingle_hashes(

@@ -758,7 +758,7 @@ class EventStreamsSpec extends AnyFunSuite {
       s"missing=${(batch -- streamed).take(3)} extra=${(streamed -- batch).take(3)}")
     // the index accumulated EVERY streamed doc's signature row —
     // dropped docs included (the min-id-wins completeness contract)
-    assert(graft.ops.Dedup.readMinhashIndex(spark, s"$base/index").count() ==
+    assert(graft.ops.IncrementalIndex.Minhash.read(spark, s"$base/index").count() ==
       union.count())
   }
 
@@ -835,9 +835,9 @@ class EventStreamsSpec extends AnyFunSuite {
     }
     def outRows = spark.read.parquet(s"$base/out")
       .collect().map(_.toSeq).toSet // INCLUDING the batch column
-    def idxRows = graft.ops.Dedup.readMinhashIndex(spark, s"$base/index")
+    def idxRows = graft.ops.IncrementalIndex.Minhash.read(spark, s"$base/index")
       .collect().map(_.toSeq).toSet
-    def idxCount = graft.ops.Dedup.readMinhashIndex(spark, s"$base/index").count()
+    def idxCount = graft.ops.IncrementalIndex.Minhash.read(spark, s"$base/index").count()
 
     run(s"$base/cp1")
     val out1 = outRows
