@@ -33,7 +33,10 @@ object AnalysisQueries {
     unions.mkString("\nUNION ALL\n") + s"\nLIMIT $limit"
   }
 
-  /** A-side analysis query (analysisQueries.js:26-41). */
+  /** A-side analysis query (analysisQueries.js:26-41). The plain
+    * pre-filter plans as a grid-cell hash join through
+    * plans.GridJoinRule; the exact predicate is unchanged.
+    */
   def buildQuery(mode: String, tableA: String, tableB: String,
                  distance: Double, limit: Int = 2000): String = {
     val cols = "a.*, st_asgeojson(a.geometry) AS geojson"
@@ -41,39 +44,29 @@ object AnalysisQueries {
     val preFlt =
       s"""ABS(a.centroid_lon - b.centroid_lon) < 0.2
          |  AND ABS(a.centroid_lat - b.centroid_lat) < 0.2""".stripMargin
-    // grid-cell equi keys (R8) so the join/EXISTS hash-joins on
-    // (_gx, _gy) instead of nested-looping; exact predicate unchanged
-    val grid = s"WITH ${GridJoin.gridCte("gb", s"`$tableB`")}"
-    val keys = GridJoin.probeKeys("b", "a.centroid_lon", "a.centroid_lat")
     mode match {
       case "intersect" =>
-        s"""$grid
-           |SELECT $cols
+        s"""SELECT $cols
            |FROM `$tableA` a
-           |JOIN gb b
-           |  ON $keys
-           |  AND $preFlt
+           |JOIN `$tableB` b
+           |  ON $preFlt
            |  AND st_intersects(a.geometry, b.geometry)
            |LIMIT $limit""".stripMargin
       case "within" =>
-        s"""$grid
-           |SELECT $cols
+        s"""SELECT $cols
            |FROM `$tableA` a
            |WHERE EXISTS (
-           |  SELECT 1 FROM gb b
-           |  WHERE $keys
-           |    AND $preFlt
+           |  SELECT 1 FROM `$tableB` b
+           |  WHERE $preFlt
            |    AND st_distance(a.geometry, b.geometry) < $distDeg
            |)
            |LIMIT $limit""".stripMargin
       case "exclude" =>
-        s"""$grid
-           |SELECT $cols
+        s"""SELECT $cols
            |FROM `$tableA` a
            |WHERE NOT EXISTS (
-           |  SELECT 1 FROM gb b
-           |  WHERE $keys
-           |    AND $preFlt
+           |  SELECT 1 FROM `$tableB` b
+           |  WHERE $preFlt
            |    AND st_distance(a.geometry, b.geometry) < $distDeg
            |)
            |LIMIT $limit""".stripMargin
@@ -87,22 +80,18 @@ object AnalysisQueries {
   def buildMatchedBQuery(mode: String, tableA: String, tableB: String,
                          distance: Double, limit: Int = 2000,
                          orderBy: Option[String] = None): Option[String] = {
-    val bCols = "b.*, st_asgeojson(b.geometry) AS geojson"
     val distDeg = f"${distance / 111320.0}%.6f"
     val preFlt =
       s"""ABS(a.centroid_lon - b.centroid_lon) < 0.2
          |    AND ABS(a.centroid_lat - b.centroid_lat) < 0.2""".stripMargin
-    // Grid-expand the MATCHED side (R8) — typically the smaller
-    // annotation layer — so the analyzed side A is never multiplied,
-    // and DISTINCT over b's own columns BEFORE computing geojson:
+    // DISTINCT over b's own columns BEFORE computing geojson:
     // st_asgeojson is a deterministic function of b.geometry, so
     // DISTINCT(b.*, f(b)) ≡ DISTINCT(b.*) then project f — identical
     // to the reference's JOIN + DISTINCT (analysisQueries.js:43-56)
     // without materializing a GeoJSON string per joined pair (pair
-    // count >> matched-row count). One hash join + one DISTINCT
-    // exchange over matched b rows is the whole plan.
-    val grid = s"WITH ${GridJoin.gridCte("gb", s"`$tableB`")}"
-    val keys = GridJoin.probeKeys("b", "a.centroid_lon", "a.centroid_lat")
+    // count >> matched-row count). One grid-cell hash join
+    // (plans.GridJoinRule) + one DISTINCT exchange over matched b rows
+    // is the whole plan.
     val geoPred = mode match {
       case "intersect" => "st_intersects(a.geometry, b.geometry)"
       case "within"    => s"st_distance(a.geometry, b.geometry) < $distDeg"
@@ -113,13 +102,11 @@ object AnalysisQueries {
     // top-k, no single-partition exchange + sort stages).
     val tail = orderBy.map(c => s"ORDER BY t.`$c`\n").getOrElse("")
     Some(
-      s"""$grid
-         |SELECT t.*, st_asgeojson(t.geometry) AS geojson FROM (
-         |  SELECT DISTINCT b.* EXCEPT (_gx, _gy)
-         |  FROM gb b
+      s"""SELECT t.*, st_asgeojson(t.geometry) AS geojson FROM (
+         |  SELECT DISTINCT b.*
+         |  FROM `$tableB` b
          |  JOIN `$tableA` a
-         |    ON $keys
-         |    AND $preFlt
+         |    ON $preFlt
          |    AND $geoPred) t
          |${tail}LIMIT $limit""".stripMargin)
   }
@@ -128,12 +115,10 @@ object AnalysisQueries {
     * capped, try/catch-skippable in the reference).
     */
   def buildIntersectionGeomQuery(tableA: String, tableB: String, limit: Int = 500): String =
-    s"""WITH ${GridJoin.gridCte("gb", s"`$tableB`")}
-       |SELECT st_asgeojson(st_intersection(a.geometry, b.geometry)) AS geojson
+    s"""SELECT st_asgeojson(st_intersection(a.geometry, b.geometry)) AS geojson
        |FROM `$tableA` a
-       |JOIN gb b
-       |  ON ${GridJoin.probeKeys("b", "a.centroid_lon", "a.centroid_lat")}
-       |  AND ABS(a.centroid_lon - b.centroid_lon) < 0.2
+       |JOIN `$tableB` b
+       |  ON ABS(a.centroid_lon - b.centroid_lon) < 0.2
        |  AND ABS(a.centroid_lat - b.centroid_lat) < 0.2
        |  AND st_intersects(a.geometry, b.geometry)
        |LIMIT $limit""".stripMargin

@@ -137,21 +137,15 @@ object PipelineCompiler {
         s"\n    AND centroid_lat >= $ymin AND centroid_lat <= $ymax")
     }
 
-    // spatial filters compile to grid-cell equi-joins (R8): the filter
-    // table (resp. base, for the reverse direction) is expanded to its
-    // 3×3 cell neighborhood and the correlated EXISTS carries (gx, gy)
-    // equalities, so Catalyst plans a hash semi/anti join instead of a
-    // nested loop; the exact pre-filter + ST_ predicate is unchanged.
-    if (spatialFilters.exists(_.op != "exclude")) {
-      ctes += GridJoin.gridCte("grid_base", "base")
-    }
+    // spatial filters keep the reference's plain pre-filter form;
+    // plans.GridJoinRule turns each EXISTS / NOT EXISTS into a hash
+    // semi/anti join on grid cells (registered by Engine.prepare)
     spatialFilters.zipWithIndex.foreach { case (sf, i) =>
       val distDeg = f"${sf.distance.getOrElse(250.0) / 111320.0}%.6f"
       val pre =
         s"""base.id != b.id
            |      AND ABS(base.centroid_lon - b.centroid_lon) < 0.2
            |      AND ABS(base.centroid_lat - b.centroid_lat) < 0.2""".stripMargin
-      ctes += GridJoin.gridCte(s"grid_$i", ident(sf.table))
 
       if (sf.op == "intersect" || sf.op == "within") {
         val spatialCond =
@@ -161,17 +155,15 @@ object PipelineCompiler {
           s"""matched_$i AS (
              |  SELECT base.id FROM base
              |  WHERE EXISTS (
-             |    SELECT 1 FROM grid_$i b
-             |    WHERE ${GridJoin.probeKeys("b", "base.centroid_lon", "base.centroid_lat")}
-             |      AND $pre
+             |    SELECT 1 FROM ${ident(sf.table)} b
+             |    WHERE $pre
              |      AND $spatialCond
              |  )
              |  UNION
              |  SELECT b.id FROM ${ident(sf.table)} b
              |  WHERE EXISTS (
-             |    SELECT 1 FROM grid_base base
-             |    WHERE ${GridJoin.probeKeys("base", "b.centroid_lon", "b.centroid_lat")}
-             |      AND $pre
+             |    SELECT 1 FROM base
+             |    WHERE $pre
              |      AND $spatialCond
              |  )
              |)""".stripMargin
@@ -179,9 +171,8 @@ object PipelineCompiler {
       } else if (sf.op == "exclude") {
         wheres +=
           s"""NOT EXISTS (
-             |    SELECT 1 FROM grid_$i b
-             |    WHERE ${GridJoin.probeKeys("b", "base.centroid_lon", "base.centroid_lat")}
-             |      AND $pre
+             |    SELECT 1 FROM ${ident(sf.table)} b
+             |    WHERE $pre
              |      AND st_distance(base.geometry, b.geometry) < $distDeg
              |  )""".stripMargin
       }
@@ -195,16 +186,21 @@ object PipelineCompiler {
     sql
   }
 
+  /** Field names of each distinct node table the session can resolve —
+    * the schema peek behind the adaptive `_f` projection (P4).
+    */
+  def tableFields(spark: org.apache.spark.sql.SparkSession,
+                  nodes: Seq[PipelineNode]): Map[String, Set[String]] =
+    nodes.map(_.table).filter(_.nonEmpty).distinct.flatMap { t =>
+      try Some(t -> spark.table(t).schema.fieldNames.toSet)
+      catch { case _: Exception => None }
+    }.toMap
+
   /** Compile and execute against the session's registered views. */
   def run(spark: org.apache.spark.sql.SparkSession,
           nodes: Seq[PipelineNode], opts: Options = Options()): org.apache.spark.sql.DataFrame = {
     graft.core.Engine.prepare(spark)
-    // schema peek per distinct table → adaptive _f projection (P4)
-    val fields = nodes.map(_.table).filter(_.nonEmpty).distinct.flatMap { t =>
-      try Some(t -> spark.table(t).schema.fieldNames.toSet)
-      catch { case _: Exception => None }
-    }.toMap
-    val sql = compile(nodes, opts.copy(tableFields = opts.tableFields ++ fields))
+    val sql = compile(nodes, opts.copy(tableFields = opts.tableFields ++ tableFields(spark, nodes)))
     require(sql.nonEmpty, "pipeline compiled to empty SQL (no sources)")
     spark.sql(sql)
   }

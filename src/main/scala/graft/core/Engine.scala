@@ -43,8 +43,8 @@ object Engine {
     graft.geo.GeoFunctions.register(spark)
     graft.functions.TextExpressions.register(spark)
     graft.functions.DuckFunctions.register(spark)
-    // protects naive user spatial SQL with the grid rewrite even when
-    // the session wasn't built withExtensions(new GraftExtensions)
+    // the one registration of the grid-join rewrite: every spatial
+    // join (compiled pipelines and pasted SQL alike) relies on it
     if (!spark.experimental.extraOptimizations.contains(graft.plans.GridJoinRule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.GridJoinRule

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * the true overlap predicate refines, and a dedup on pre-explode row
   * ids collapses the multi-bucket replicas (only them — duplicate
   * input rows keep IEJoin's output multiplicity). The same
-  * grid-prefilter shape as the spatial GridJoin, in one dimension.
+  * grid-prefilter shape as the spatial GridJoinRule, in one dimension.
   *
   * 100 TB design: the shuffle carries (bucket, keys) hash partitions —
   * no pair enumeration beyond co-bucketed candidates. `bucket` trades

@@ -1,102 +1,84 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.{Inner, Cross}
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.{DoubleType, LongType}
-import graft.geo.GeoExpressions.{StDistance, StIntersects}
+import org.apache.spark.sql.types.{DoubleType, LongType, NumericType}
 
-/** Catalyst optimizer rule: rewrites naive spatial theta-joins into
-  * grid-cell equi-joins automatically.
+/** Catalyst optimizer rule: rewrites spatial theta-joins guarded by
+  * the reference's coordinate pre-filter into grid-cell equi-joins.
+  * It is the engine's only grid-join mechanism — the compiler,
+  * analysis and geo queries emit the plain pre-filter SQL and rely on
+  * it.
   *
-  * A user (or the reference's sqlOverride editor) writing
+  * Every spatial join in the reference carries the cheap pre-filter
+  * (pipeline.js:129-132, analysisQueries.js:29,46)
   *
-  * {{{ SELECT ... FROM a JOIN b
-  *     ON ABS(a.centroid_lon - b.centroid_lon) < 0.2
-  *    AND ABS(a.centroid_lat - b.centroid_lat) < 0.2
-  *    AND st_intersects(a.geometry, b.geometry) }}}
+  * {{{ ... ON ABS(a.centroid_lon - b.centroid_lon) < 0.2
+  *        AND ABS(a.centroid_lat - b.centroid_lat) < 0.2
+  *        AND st_intersects(a.geometry, b.geometry) }}}
   *
-  * gets a BroadcastNestedLoopJoin from the stock planner — O(n·m)
-  * pairings. This rule detects the coordinate pre-filter pattern
-  * (|Δlon| < w ∧ |Δlat| < w with w ≤ 0.2) guarding a spatial
-  * predicate, expands the right side to its 3×3 grid-cell
-  * neighborhood (cell = 0.2°), and adds (gx, gy) equalities to the
-  * join condition — Catalyst then plans a hash join keyed on the
-  * cells. The original condition is kept verbatim, so results are
-  * identical; a pair passing |Δ| < cell always lands in a neighboring
-  * cell.
+  * inside an inner join or an EXISTS / NOT EXISTS subquery. As a pure
+  * theta predicate the stock planner runs it as a
+  * BroadcastNestedLoopJoin — O(n·m) pairings. This rule matches an
+  * `Inner`, `LeftSemi` or `LeftAnti` join (EXISTS and NOT EXISTS
+  * arrive as the latter two) whose condition has no equi key and holds
+  * two conjuncts `ABS(x − y) < w` with `w ≤ CellDeg`, deterministic
+  * numeric `x` and `y`, and `x`, `y` drawn from opposite join sides.
+  * The conjuncts are paired by side, not by column name: after a
+  * subquery rewrite the view's `st_x(st_centroid(…))` is inlined in
+  * place of `centroid_lon`.
   *
-  * The compiler already emits grid SQL for its own pipelines
-  * (compile.GridJoin); this rule extends the same protection to
-  * arbitrary user SQL. Registered via [[GraftExtensions]]:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
+  * One side is expanded to its 3×3 cell neighborhood by an `Expand` of
+  * nine projections — whose size estimate carries the ×9, so the
+  * planner does not broadcast a side it thinks is 9× smaller than it
+  * is — and `(gx, gy)` equalities against the other side's own cell
+  * are added to the condition, so Catalyst plans a hash join on the
+  * cells. An inner join expands its smaller side; a semi or anti join
+  * expands its right side, since its left rows are the output. The
+  * original condition is kept verbatim: a pair with |Δ| < cell lands
+  * in exactly one neighboring copy, so results are identical.
+  *
+  * Registered by `Engine.prepare` as an extra optimization. That batch
+  * runs after Spark rewrites EXISTS into semi/anti joins; a rule
+  * injected through `SparkSessionExtensions` runs before it and would
+  * never see them.
   */
-object GridJoinRule extends Rule[LogicalPlan] {
+object GridJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
+  /** Cell size in degrees — equal to the pre-filter window, the
+    * largest size that keeps the 3×3 neighborhood sufficient.
+    */
   val CellDeg = 0.2
-  private val rewritten = TreeNodeTag[Boolean]("graft.gridJoin.rewritten")
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(left, right, Inner, Some(cond), hint)
-        if j.resolved && j.getTagValue(rewritten).isEmpty && eligible(left, right, cond) =>
-      val newJoin = rewrite(left, right, cond, hint)
-      newJoin.setTagValue(rewritten, true)
-      // preserve the original output attribute list
-      Project(j.output.map(a => a: NamedExpression), newJoin)
+    case j @ Join(left, right, joinType @ (Inner | LeftSemi | LeftAnti), Some(cond), hint)
+        if j.resolved && ExtractEquiJoinKeys.unapply(j).isEmpty =>
+      prefilterAxes(splitConjunctivePredicates(cond), left, right) match {
+        case Some(axes) =>
+          // the join keeps its output; the cell columns stay internal
+          Project(j.output, rewrite(joinType, left, right, cond, hint, axes))
+        case None => j
+      }
   }
 
-  /** The |Δ| pre-filter bounds on both axes, with windows ≤ cell, and
-    * a spatial predicate across the two sides.
+  /** Two distinct `ABS(x − y) < w` conjuncts (w ≤ CellDeg) relating
+    * the sides, as (left operand, right operand) pairs.
     */
-  private def eligible(left: LogicalPlan, right: LogicalPlan, cond: Expression): Boolean = {
-    val conjuncts = splitConjuncts(cond)
-    val hasSpatial = conjuncts.exists {
-      case _: StIntersects => true
-      case LessThan(_: StDistance, Literal(_, _)) => true
-      case GreaterThan(Literal(_, _), _: StDistance) => true
-      case _ => false
-    }
-    // already grid-keyed (our compiler's SQL, or a prior application
-    // of this rule) → leave alone, a second 9× expansion is waste
-    val alreadyGridded = cond.exists {
-      case a: Attribute => a.name == "_gx" || a.name == "_gy" ||
-        a.name == "_graft_gx" || a.name == "_graft_gy"
-      case _ => false
-    }
-    hasSpatial && !alreadyGridded &&
-      prefilterPair(conjuncts, left, right, "centroid_lon").isDefined &&
-      prefilterPair(conjuncts, left, right, "centroid_lat").isDefined
-  }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
-    case other => Seq(other)
-  }
-
-  /** Finds ABS(l.col - r.col) < w (either operand order) with
-    * w ≤ CellDeg; returns the (left attr, right attr) pair.
-    */
-  private def prefilterPair(conjuncts: Seq[Expression], left: LogicalPlan,
-                            right: LogicalPlan, colName: String): Option[(Attribute, Attribute)] = {
-    def attrOf(e: Expression, side: LogicalPlan): Option[Attribute] = e match {
-      case a: Attribute if a.name == colName && side.outputSet.contains(a) => Some(a)
-      case Cast(inner, _, _, _) => attrOf(inner, side)
-      case _ => None
-    }
-    conjuncts.collectFirst {
-      case LessThan(Abs(Subtract(x, y, _), _), lit)
-          if literalLe(lit, CellDeg) &&
-            ((attrOf(x, left).isDefined && attrOf(y, right).isDefined) ||
-             (attrOf(x, right).isDefined && attrOf(y, left).isDefined)) =>
-        val la = attrOf(x, left).orElse(attrOf(y, left)).get
-        val ra = attrOf(x, right).orElse(attrOf(y, right)).get
-        (la, ra)
-    }
+  private def prefilterAxes(conjuncts: Seq[Expression], left: LogicalPlan,
+                            right: LogicalPlan): Option[Seq[(Expression, Expression)]] = {
+    def from(e: Expression, side: LogicalPlan): Boolean =
+      e.deterministic && e.dataType.isInstanceOf[NumericType] &&
+        e.references.nonEmpty && e.references.subsetOf(side.outputSet)
+    val axes = conjuncts.collect {
+      case LessThan(Abs(Subtract(x, y, _), _), w) if literalLe(w, CellDeg) => (x, y)
+    }.collect {
+      case (x, y) if from(x, left) && from(y, right) => (x, y)
+      case (x, y) if from(x, right) && from(y, left) => (y, x)
+    }.distinct
+    if (axes.length >= 2) Some(axes.take(2)) else None
   }
 
   private def literalLe(e: Expression, bound: Double): Boolean = e match {
@@ -106,45 +88,36 @@ object GridJoinRule extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  private def cellOf(a: Expression): Expression =
-    Cast(Floor(Divide(Cast(a, DoubleType), Literal(CellDeg, DoubleType))), LongType)
+  private def cellOf(e: Expression): Expression =
+    Cast(Floor(Divide(Cast(e, DoubleType), Literal(CellDeg, DoubleType))), LongType)
 
-  private def rewrite(left: LogicalPlan, right: LogicalPlan,
-                      cond: Expression, hint: JoinHint): Join = {
-    val conjuncts = splitConjuncts(cond)
-    val (lLon, rLon) = prefilterPair(conjuncts, left, right, "centroid_lon").get
-    val (lLat, rLat) = prefilterPair(conjuncts, left, right, "centroid_lat").get
-
-    // 9-way neighbor expansion as a Generate (inline of 9 literal
-    // (dx, dy) structs) — pipelined row multiplication inside the
-    // stage, no join node, so the expansion can never plan as a
-    // nested-loop join
-    val dxAttr = AttributeReference("_graft_dx", LongType, nullable = false)()
-    val dyAttr = AttributeReference("_graft_dy", LongType, nullable = false)()
-    val deltaStructs = for (dx <- -1L to 1L; dy <- -1L to 1L)
-      yield CreateStruct(Seq(Literal(dx, LongType), Literal(dy, LongType)))
-    val generate = Generate(
-      Inline(CreateArray(deltaStructs)),
-      unrequiredChildIndex = Nil, outer = false, qualifier = None,
-      generatorOutput = Seq(dxAttr, dyAttr), child = right)
-
-    // expanded right side with the cell keys projected
-    val gxAttr = Alias(Add(cellOf(rLon), dxAttr), "_graft_gx")()
-    val gyAttr = Alias(Add(cellOf(rLat), dyAttr), "_graft_gy")()
-    val expanded = Project(
-      right.output.map(a => a: NamedExpression) ++ Seq(gxAttr, gyAttr),
-      generate)
-
-    val keyCond = And(
-      EqualTo(gxAttr.toAttribute, cellOf(lLon)),
-      EqualTo(gyAttr.toAttribute, cellOf(lLat)))
-    Join(left, expanded, Inner, Some(And(keyCond, cond)), hint)
+  /** `side` with each row copied to the nine cells around its own
+    * cell of `own`, and the condition equating those copies' cells
+    * with the other side's cell of `other`. The cells are computed
+    * once per row below the `Expand`, not once per copy.
+    */
+  private def grid(side: LogicalPlan, own: Seq[Expression],
+                   other: Seq[Expression]): (LogicalPlan, Expression) = {
+    val cells = own.zipWithIndex.map { case (e, i) => Alias(cellOf(e), s"_graft_c$i")() }
+    val keys = Seq("_graft_gx", "_graft_gy").map(AttributeReference(_, LongType)())
+    val projections = for (dx <- -1L to 1L; dy <- -1L to 1L) yield
+      side.output ++ cells.zip(Seq(dx, dy)).map { case (c, d) =>
+        Add(c.toAttribute, Literal(d, LongType))
+      }
+    val expanded = Expand(projections, side.output ++ keys, Project(side.output ++ cells, side))
+    (expanded, keys.zip(other).map { case (k, e) => EqualTo(k, cellOf(e)) }.reduce(And))
   }
-}
 
-/** Session extension registering the grid-join rewrite. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => GridJoinRule)
+  private def rewrite(joinType: JoinType, left: LogicalPlan, right: LogicalPlan,
+                      cond: Expression, hint: JoinHint,
+                      axes: Seq[(Expression, Expression)]): Join = {
+    val (l, r) = axes.unzip
+    if (joinType == Inner && left.stats.sizeInBytes < right.stats.sizeInBytes) {
+      val (expanded, keys) = grid(left, l, r)
+      Join(expanded, right, joinType, Some(And(keys, cond)), hint)
+    } else {
+      val (expanded, keys) = grid(right, r, l)
+      Join(left, expanded, joinType, Some(And(keys, cond)), hint)
+    }
   }
 }

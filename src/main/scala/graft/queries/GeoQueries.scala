@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.compile.GridJoin
 
 /** Spatial operator coverage (SURVEY §2.2 P1-P7, §2.3 J1-J8, §2.8) —
   * every query runs the real WKB geometry expressions on the Spark
@@ -12,7 +11,9 @@ import graft.compile.GridJoin
   * All joins keep the reference's cheap coordinate pre-filter
   * (|Δlon| < 0.2 AND |Δlat| < 0.2) inside the join condition — it is a
   * *semantic* part of the compiled query (pipeline.js:129-132), not an
-  * optimization, so both sides carry it.
+  * optimization, so both sides carry it. On the Spark side the
+  * pre-filter also makes plans.GridJoinRule plan each join as a hash
+  * join on 0.2-degree grid cells.
   */
 object GeoQueries {
 
@@ -20,13 +21,6 @@ object GeoQueries {
 
   private val pre02 = "CAST(0.2 AS DOUBLE)"
   private val d025 = "CAST(0.25 AS DOUBLE)" // 27830 m / 111320
-
-  // grid CTEs (R8): spatial joins hash-join on 0.2-degree cell keys;
-  // the oracle side keeps the plain formulation (same results)
-  private val gb = GridJoin.gridCte("gb", "geo_buildings")
-  private val gp = GridJoin.gridCte("gp", "geo_places")
-  private def keys(alias: String, lon: String, lat: String) =
-    GridJoin.probeKeys(alias, lon, lat)
 
   private def g(sql: String): (SparkSession, String) => DataFrame =
     (s, dir) => { GeoViews.register(s, dir); s.sql(sql) }
@@ -136,11 +130,9 @@ object GeoQueries {
 
     // J1: inner spatial theta-join (points in polygons) with pre-filter.
     Q("j1_intersect_join",
-      g(s"""WITH $gb
-           |SELECT a.id AS place_id, b.id AS building_id
-           |FROM geo_places a JOIN gb b
-           |  ON ${keys("b", "a.centroid_lon", "a.centroid_lat")}
-           | AND a.id != b.id
+      g(s"""SELECT a.id AS place_id, b.id AS building_id
+           |FROM geo_places a JOIN geo_buildings b
+           |  ON a.id != b.id
            | AND ABS(a.centroid_lon - b.centroid_lon) < $pre02
            | AND ABS(a.centroid_lat - b.centroid_lat) < $pre02
            | AND st_intersects(a.geometry, b.geometry)
@@ -157,12 +149,10 @@ object GeoQueries {
 
     // J2: EXISTS distance semi-join (places near buildings).
     Q("j2_within_semi",
-      g(s"""WITH $gb
-           |SELECT a.id FROM geo_places a
+      g(s"""SELECT a.id FROM geo_places a
            |WHERE EXISTS (
-           |  SELECT 1 FROM gb b
-           |  WHERE ${keys("b", "a.centroid_lon", "a.centroid_lat")}
-           |    AND a.id != b.id
+           |  SELECT 1 FROM geo_buildings b
+           |  WHERE a.id != b.id
            |    AND ABS(a.centroid_lon - b.centroid_lon) < $pre02
            |    AND ABS(a.centroid_lat - b.centroid_lat) < $pre02
            |    AND st_distance(a.geometry, b.geometry) < $d025)
@@ -182,13 +172,11 @@ object GeoQueries {
 
     // J3: NOT EXISTS distance anti-join (exclude).
     Q("j3_exclude_anti",
-      g(s"""WITH $gb
-           |SELECT a.id FROM geo_places a
+      g(s"""SELECT a.id FROM geo_places a
            |WHERE centroid_lon BETWEEN CAST(-1.0 AS DOUBLE) AND CAST(1.0 AS DOUBLE)
            |  AND NOT EXISTS (
-           |  SELECT 1 FROM gb b
-           |  WHERE ${keys("b", "a.centroid_lon", "a.centroid_lat")}
-           |    AND a.id != b.id
+           |  SELECT 1 FROM geo_buildings b
+           |  WHERE a.id != b.id
            |    AND ABS(a.centroid_lon - b.centroid_lon) < $pre02
            |    AND ABS(a.centroid_lat - b.centroid_lat) < $pre02
            |    AND st_distance(a.geometry, b.geometry) < $d025)
@@ -209,11 +197,9 @@ object GeoQueries {
 
     // J4: matched-B side with DISTINCT.
     Q("j4_matched_b_distinct",
-      g(s"""WITH $gp
-           |SELECT DISTINCT b.id, b.display_name, b.centroid_lon, b.centroid_lat
-           |FROM gp a JOIN geo_buildings b
-           |  ON ${keys("a", "b.centroid_lon", "b.centroid_lat")}
-           | AND ABS(a.centroid_lon - b.centroid_lon) < $pre02
+      g(s"""SELECT DISTINCT b.id, b.display_name, b.centroid_lon, b.centroid_lat
+           |FROM geo_places a JOIN geo_buildings b
+           |  ON ABS(a.centroid_lon - b.centroid_lon) < $pre02
            | AND ABS(a.centroid_lat - b.centroid_lat) < $pre02
            | AND st_intersects(a.geometry, b.geometry)
            |ORDER BY id""".stripMargin),
@@ -228,20 +214,16 @@ object GeoQueries {
 
     // J5: bidirectional ID-collect (both sides of the relationship).
     Q("j5_bidirectional_ids",
-      g(s"""WITH $gb,
-           |$gp,
-           |matched AS (
+      g(s"""WITH matched AS (
            |  SELECT a.id FROM geo_places a
-           |  WHERE EXISTS (SELECT 1 FROM gb b
-           |    WHERE ${keys("b", "a.centroid_lon", "a.centroid_lat")}
-           |      AND ABS(a.centroid_lon - b.centroid_lon) < $pre02
+           |  WHERE EXISTS (SELECT 1 FROM geo_buildings b
+           |    WHERE ABS(a.centroid_lon - b.centroid_lon) < $pre02
            |      AND ABS(a.centroid_lat - b.centroid_lat) < $pre02
            |      AND st_intersects(a.geometry, b.geometry))
            |  UNION
            |  SELECT b.id FROM geo_buildings b
-           |  WHERE EXISTS (SELECT 1 FROM gp a
-           |    WHERE ${keys("a", "b.centroid_lon", "b.centroid_lat")}
-           |      AND ABS(a.centroid_lon - b.centroid_lon) < $pre02
+           |  WHERE EXISTS (SELECT 1 FROM geo_places a
+           |    WHERE ABS(a.centroid_lon - b.centroid_lon) < $pre02
            |      AND ABS(a.centroid_lat - b.centroid_lat) < $pre02
            |      AND st_intersects(a.geometry, b.geometry)))
            |SELECT id FROM matched ORDER BY id""".stripMargin),
@@ -262,12 +244,17 @@ object GeoQueries {
            |      AND a.centroid_lat BETWEEN b.ymin AND b.ymax))
            |ORDER BY id""".stripMargin)),
 
-    // J6: point-in-bbox range join + exact refine (filter-refine).
+    // J6: point-in-bbox range join + exact refine (filter-refine). The
+    // Spark side adds the reference pre-filter, which plans the join
+    // on grid cells; the oracle omits it. Result-identical: every
+    // geo_buildings envelope spans ±0.125° around its centroid
+    // (GeoViews' box half-size), so a point inside one is within
+    // 0.125° < 0.2° of its centroid on both axes.
     Q("j6_bbox_range_join",
-      g(s"""WITH $gb
-           |SELECT p.id AS place_id, t.id AS building_id
-           |FROM geo_places p JOIN gb t
-           |  ON ${keys("t", "p.centroid_lon", "p.centroid_lat")}
+      g(s"""SELECT p.id AS place_id, t.id AS building_id
+           |FROM geo_places p JOIN geo_buildings t
+           |  ON ABS(p.centroid_lon - t.centroid_lon) < $pre02
+           | AND ABS(p.centroid_lat - t.centroid_lat) < $pre02
            | AND t.bbox.xmax >= p.centroid_lon AND t.bbox.xmin <= p.centroid_lon
            | AND t.bbox.ymax >= p.centroid_lat AND t.bbox.ymin <= p.centroid_lat
            |WHERE st_intersects(t.geometry, p.geometry)
@@ -281,11 +268,9 @@ object GeoQueries {
 
     // J7: self-join with self-match exclusion (places near places).
     Q("j7_self_distance_pairs",
-      g(s"""WITH $gp
-           |SELECT a.id AS id_a, b.id AS id_b
-           |FROM geo_places a JOIN gp b
-           |  ON ${keys("b", "a.centroid_lon", "a.centroid_lat")}
-           | AND a.id < b.id
+      g(s"""SELECT a.id AS id_a, b.id AS id_b
+           |FROM geo_places a JOIN geo_places b
+           |  ON a.id < b.id
            | AND ABS(a.centroid_lon - b.centroid_lon) < $pre02
            | AND ABS(a.centroid_lat - b.centroid_lat) < $pre02
            | AND st_distance(a.geometry, b.geometry) < $d025
@@ -302,12 +287,10 @@ object GeoQueries {
 
     // J8: intersection geometry + area (polygon clipping).
     Q("j8_intersection_area",
-      g(s"""WITH $gb
-           |SELECT a.id AS id_a, b.id AS id_b,
+      g(s"""SELECT a.id AS id_a, b.id AS id_b,
            |       st_area(st_intersection(a.geometry, b.geometry)) AS overlap_area
-           |FROM geo_buildings a JOIN gb b
-           |  ON ${keys("b", "a.centroid_lon", "a.centroid_lat")}
-           | AND a.id < b.id
+           |FROM geo_buildings a JOIN geo_buildings b
+           |  ON a.id < b.id
            | AND ABS(a.centroid_lon - b.centroid_lon) < $pre02
            | AND ABS(a.centroid_lat - b.centroid_lat) < $pre02
            | AND st_intersects(a.geometry, b.geometry)
@@ -329,13 +312,11 @@ object GeoQueries {
       // geo_segments_wide = the guarded-spread twin (GeoViews) — the
       // pair distance evaluation parallelizes instead of running as
       // one task on a single-file fixture; identical rows
-      g(s"""WITH $gp,
-           |pairs AS (
+      g(s"""WITH pairs AS (
            |  SELECT s.id AS seg_id, p.id AS place_id,
            |         st_distance(s.geometry, p.geometry) AS d
-           |  FROM geo_segments_wide s JOIN gp p
-           |    ON ${keys("p", "s.centroid_lon", "s.centroid_lat")}
-           |   AND ABS(s.centroid_lon - p.centroid_lon) < $pre02
+           |  FROM geo_segments_wide s JOIN geo_places p
+           |    ON ABS(s.centroid_lon - p.centroid_lon) < $pre02
            |   AND ABS(s.centroid_lat - p.centroid_lat) < $pre02)
            |SELECT seg_id, place_id, d FROM pairs
            |WHERE d < $d025

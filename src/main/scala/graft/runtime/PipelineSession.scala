@@ -90,7 +90,7 @@ final class PipelineSession(
       .getOrElse(
         PipelineCompiler.compile(sNodes,
           Options(search = sSearch, limit = sLimit, bbox = sBbox, ftsTables = fts,
-            tableFields = tableFields(sNodes))))
+            tableFields = PipelineCompiler.tableFields(spark, sNodes))))
 
     val sql = compileWith(ftsTables)
     if (sql.isEmpty) return None
@@ -109,12 +109,6 @@ final class PipelineSession(
     onResult(df, System.currentTimeMillis() - t0)
     Some(df)
   }
-
-  private def tableFields(nodes: Seq[PipelineNode]): Map[String, Set[String]] =
-    nodes.map(_.table).filter(_.nonEmpty).distinct.flatMap { t =>
-      try Some(t -> spark.table(t).schema.fieldNames.toSet)
-      catch { case _: Exception => None }
-    }.toMap
 
   def close(): Unit = scheduler.shutdownNow()
 }

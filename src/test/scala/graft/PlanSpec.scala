@@ -42,18 +42,18 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("spatial joins are hash joins on grid cells, not nested loops over data") {
-    for (q <- Seq("j1_intersect_join", "j7_self_distance_pairs", "j9_line_point_distance")) {
+    for (q <- Seq("j1_intersect_join", "j2_within_semi", "j3_exclude_anti",
+        "j5_bidirectional_ids", "j7_self_distance_pairs", "j9_line_point_distance",
+        "pipeline_intersect", "pipeline_exclude", "analysis_within", "analysis_matched_b")) {
       val p = plan(q)
-      // the only nested-loop allowed is the 3-row VALUES cross join
-      // that builds the 3x3 grid expansion
       val bnlj = p.linesIterator.count(l => l.contains("BroadcastNestedLoopJoin"))
       val cross = p.linesIterator.count(l => l.contains("CartesianProduct"))
       assert(cross == 0, s"$q plans a CartesianProduct")
       assert(p.contains("BroadcastHashJoin") || p.contains("SortMergeJoin") ||
         p.contains("ShuffledHashJoin"), s"$q has no hash join")
-      // grid-cell keys present in some join condition
-      assert(p.contains("_gx") && p.contains("_gy"), s"$q lost its grid keys")
-      assert(bnlj <= 2, s"$q has $bnlj nested-loop joins (only the VALUES expansion is expected)")
+      // grid-cell keys (plans.GridJoinRule) present in some join condition
+      assert(p.contains("_graft_gx") && p.contains("_graft_gy"), s"$q lost its grid keys")
+      assert(bnlj == 0, s"$q has $bnlj nested-loop joins")
     }
   }
 

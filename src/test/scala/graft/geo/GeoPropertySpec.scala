@@ -116,14 +116,15 @@ class GeoPropertySpec extends AnyFunSuite {
   }
 
   test("grid-cell neighborhood covers the 0.2-degree pre-filter window") {
-    // soundness of the GridJoin rewrite: |Δ| < 0.2 ⇒ cell indexes
-    // differ by at most 1
+    // soundness of the GridJoinRule rewrite: |Δ| < cell ⇒ cell
+    // indexes differ by at most 1
+    val cell = graft.plans.GridJoinRule.CellDeg
     forSeeds { r =>
       val x1 = coord(r)
-      val x2 = x1 + (r.nextDouble() * 0.4 - 0.2)
-      if (math.abs(x1 - x2) < 0.2) {
-        val c1 = math.floor(x1 / 0.2).toLong
-        val c2 = math.floor(x2 / 0.2).toLong
+      val x2 = x1 + (r.nextDouble() * 2 * cell - cell)
+      if (math.abs(x1 - x2) < cell) {
+        val c1 = math.floor(x1 / cell).toLong
+        val c2 = math.floor(x2 / cell).toLong
         assert(math.abs(c1 - c2) <= 1, s"$x1 vs $x2: cells $c1/$c2")
       }
     }

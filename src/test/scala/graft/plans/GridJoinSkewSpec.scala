@@ -3,7 +3,6 @@ package graft.plans
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.compile.GridJoin
 import graft.ops.Salting
 
 import scala.collection.mutable
@@ -28,7 +27,7 @@ class GridJoinSkewSpec extends AnyFunSuite {
   private val ColdRows = 30000L
   private val Factor = 16
 
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = graft.core.Engine.prepare(SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "8")
     .config("spark.ui.enabled", "false")
@@ -39,7 +38,7 @@ class GridJoinSkewSpec extends AnyFunSuite {
     .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
     .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32k")
     .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
-    .getOrCreate()
+    .getOrCreate())
 
   /** Probe side: HotRows points inside grid cell (0,0), ColdRows spread
     * over ~37 distant cells. Deterministic column arithmetic only.
@@ -81,11 +80,9 @@ class GridJoinSkewSpec extends AnyFunSuite {
   private lazy val expectedCount: Long = {
     probe; matched
     spark.sql(
-      s"""WITH ${GridJoin.gridCte("gb", "skew_b")}
-         |SELECT /*+ BROADCAST(b) */ a.id, b.bid
-         |FROM skew_a a JOIN gb b
-         |  ON ${GridJoin.probeKeys("b", "a.centroid_lon", "a.centroid_lat")}
-         |  AND $preFlt""".stripMargin).count()
+      s"""SELECT /*+ BROADCAST(b) */ a.id, b.bid
+         |FROM skew_a a JOIN skew_b b
+         |  ON $preFlt""".stripMargin).count()
   }
 
   /** Runs `body` while recording per-task shuffle-read record counts,
@@ -123,11 +120,9 @@ class GridJoinSkewSpec extends AnyFunSuite {
   test("AQE skew-split engages on the hot grid cell and preserves results") {
     probe; matched
     val df = spark.sql(
-      s"""WITH ${GridJoin.gridCte("gb", "skew_b")}
-         |SELECT a.id, b.bid
-         |FROM skew_a a JOIN gb b
-         |  ON ${GridJoin.probeKeys("b", "a.centroid_lon", "a.centroid_lat")}
-         |  AND $preFlt""".stripMargin)
+      s"""SELECT a.id, b.bid
+         |FROM skew_a a JOIN skew_b b
+         |  ON $preFlt""".stripMargin)
     // collect() (not count(), which plans its own QueryExecution) so
     // df.queryExecution is the one that ran and carries the final
     // adaptive plan
@@ -152,7 +147,7 @@ class GridJoinSkewSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     try {
       import org.apache.spark.sql.functions._
-      val cellDeg = GridJoin.CellDeg.toDouble
+      val cellDeg = GridJoinRule.CellDeg
       val big = probe
         .withColumn("_gx", floor(col("centroid_lon") / cellDeg).cast("bigint"))
         .withColumn("_gy", floor(col("centroid_lat") / cellDeg).cast("bigint"))
