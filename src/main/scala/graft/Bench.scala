@@ -1,19 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.Driver
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine's cores (the driver contract is local[32]
+    // cores default to the machine's (the driver contract is local[32]
     // on a 32-way host) — a small fixed default would silently bench
     // at a fraction of the available parallelism
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Engine.session()
     // the bounded planning windows (#keys epoch plans, curriculum
     // offsets, AUC rank — all intentionally unpartitioned over tiny
     // tables) each emit a "No Partition Defined" WARN that floods the
@@ -22,34 +15,26 @@ object Bench {
     // unpartitioned corpus-sized window still surfaces in CI.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window", org.apache.logging.log4j.Level.ERROR)
-    // warmup: pay JVM/codegen/session init + view registration once,
-    // outside any query's measured time
-    graft.core.Tables.registerAll(spark, sfDir)
-    graft.queries.GeoViews.register(spark, sfDir)
-    spark.sql("SELECT COUNT(*) FROM lineitem").collect()
     // best-of-N steady-state timing (default 2): the first pass pays
     // JIT/codegen-cache warmup and GC debt from the previous query,
     // the min reflects the query's actual cost — declared in the JSON
     // ("runs"/"agg") so the measurement is transparent
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     // optional comma-separated name filter for iterating on one query
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
-      val dt = (0 until runs).map { _ =>
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(Driver.names)
+    // a query that throws is reported under "failed", never timed
+    val statuses = Driver.run(spark, sfDir, "bench", only) { (_, query) =>
+      (0 until runs).map { _ =>
         val t0 = System.nanoTime()
         // noop sink, not count(): count() lets the optimizer prune
         // every projection of a map-only query (a text-kernel query
         // would time as a bare row count), while the noop write
         // materializes all output columns — the same work DuckDB's
         // fetchall pays in the oracle baseline.
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+        query().write.format("noop").mode("overwrite").save()
         val d = (System.nanoTime() - t0) / 1e9
         // intra-query caches (LSH signatures, shingle rows) are
-        // single-use — dropping them between queries keeps the heap
-        // flat instead of accreting 60 queries of dead cache. The
+        // single-use, and the next run must not read this run's. The
         // periodic GC nudge lets ContextCleaner release dead broadcast
         // blocks so no later query pays a full GC for earlier garbage.
         spark.catalog.clearCache()
@@ -59,8 +44,10 @@ object Bench {
         if (d > 1.0) System.gc()
         d
       }.min
-      name -> dt
     }
+    val results = statuses.collect { case Driver.Status(n, Right(d)) => n -> d }
+    val failed = statuses.flatMap(s => s.error.map(e =>
+      Driver.jsonString(s.name) + ":" + Driver.jsonString(e))).mkString("{", ",", "}")
     // 4 decimals keeps the JSON line short (~2 KB) so a tail-limited
     // log capture can't truncate it mid-line
     def fmt(v: Double): String = BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
@@ -91,7 +78,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val outPath = java.nio.file.Paths.get("bench_out.json").toAbsolutePath.toString
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"agg":"min","anchor_drift":$anchorDrift,"anchors":$anchorJson,"queries":$qs,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"agg":"min","anchor_drift":$anchorDrift,"anchors":$anchorJson,"queries":$qs,"sf":"$sfDir","failed":$failed}"""
     // the driver's log capture keeps only the TAIL of stdout; at 122
     // queries the full per-query map (~3 KB) gets truncated from the
     // front and fails to parse. So: full map → bench_out.json (the

@@ -15,7 +15,7 @@ import graft.session.{LoadHistory, SessionState}
   *
   * Typical session:
   * {{{
-  * val spark = graft.core.Engine.session()
+  * val spark = graft.core.Engine.session() // the one builder; prepares the session
   * val g = new Graft(spark, stateDir = "/tmp/graft-state")
   * g.loadArea("/data/overture", Seq("places/place", "buildings/building"),
   *   bbox = Some(Ingest.BBox(-118.3, 34.0, -118.2, 34.1)))

@@ -12,32 +12,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Engine {
 
-  /** Build a session with scale-appropriate defaults.
-    *
-    * - shuffle.partitions sized to the machine, not the 200 default;
-    *   on a real cluster AQE coalesces post-shuffle partitions anyway.
-    * - AQE on: runtime re-planning (skew join splitting, dynamic
-    *   coalescing) is the 100TB safety net for skewed keys.
+  /** The one session builder for the CLI mains: `local[cores]` with
+    * shuffle partitions = cores (not the 200 default; on a real
+    * cluster AQE coalesces post-shuffle partitions anyway), UTC, no UI,
+    * WARN logging, and the engine's functions and grid-join rule
+    * registered ([[prepare]]).
     */
-  def session(master: String = "local[*]", cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(master)
+  def session(cores: Int = defaultCores): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.geo.GeoFunctions.register(spark)
-    spark
+    prepare(spark)
   }
 
+  /** `SPARK_GRAFT_CPUS` if set, else the machine's processors. */
+  private def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Register graft SQL functions + the grid-join optimizer rule on
-    * an externally-created session (e.g. the driver's Verify/Bench
-    * sessions). Idempotent.
+    * any session, including one built outside [[session]]. Idempotent.
     */
   def prepare(spark: SparkSession): SparkSession = {
     graft.geo.GeoFunctions.register(spark)
@@ -91,9 +89,11 @@ object Tables {
     if (dir == registeredDirs.get(key)) return
     Engine.prepare(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", aqe)
+    // suites share one session and some build it with AQE off; the
+    // queries are written for AQE's runtime re-planning (skew join
+    // splitting, dynamic coalescing)
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     all.foreach { n =>
       if (new java.io.File(path(dir, n)).exists()) {
         val raw = df(spark, dir, n)

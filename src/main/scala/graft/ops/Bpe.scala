@@ -194,8 +194,6 @@ object Bpe {
           if (visible && disjoint && noBigFeeder) { accepted += cand(i); i += 1 }
           else safeRun = false // greedy order beyond here is unprovable this round
         }
-        if (sys.env.contains("GRAFT_BPE_DEBUG"))
-          System.err.println(s"[bpe] round=$r batch=${accepted.size} cand=${cand.length}")
         accepted.foreach { case (a, b, c) =>
           merges += ((r.toLong, a, b, a + b, c)); r += 1
         }

@@ -48,16 +48,13 @@ object Spread {
     * sf0.1 for an unconditioned eval-side spread — while at 100×
     * that same single-task explode dominates the query (curate-mix
     * 17 s vs 8 s at sf10). The optimizer's sizeInBytes estimate
-    * (statistics only, no job) separates the two regimes; the default
+    * (statistics only, no job) separates the two regimes; the 8 MB
     * threshold is far above any real eval set at test scale and far
     * below a corpus slice at production scale, so both ends are
     * decided by orders of magnitude, not estimate precision.
     */
   def ifNarrowAndBig(df: DataFrame, keys: Column*): DataFrame =
-    ifNarrowAndBig(df, 8L << 20, keys: _*)
-
-  def ifNarrowAndBig(df: DataFrame, minBytes: Long, keys: Column*): DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes < minBytes) df
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes < (8L << 20)) df
     else ifNarrow(df, keys: _*)
 
   /** [[ifNarrow]] additionally gated on a JOIN PEER's estimated size

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off artifact: where does a production-merge-count BPE train
   * spend its wall? Runs trainMerges with numMerges=1000 at the given
   * sf dir and prints one JSON line (merges actually landed, wall,
@@ -11,12 +9,7 @@ import org.apache.spark.sql.SparkSession
 object BpeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Engine.session()
     graft.core.Tables.registerAll(spark, sfDir)
     val docs = spark.table("documents")
     docs.count() // warm

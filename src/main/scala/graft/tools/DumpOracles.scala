@@ -5,24 +5,12 @@ package graft.tools
   * oracle be syntax-checked without starting a SparkSession.
   */
 object DumpOracles {
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c    => c.toString
-    }
-
   def main(args: Array[String]): Unit = {
-    val only: Option[Set[String]] =
-      args.headOption.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = args.headOption.map(Driver.names)
     val sqls = graft.SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
     println(sqls.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
+      .map { case (k, v) => s"${Driver.jsonString(k)}: ${Driver.jsonString(v)}" }
       .mkString("{", ",\n", "}"))
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch: print the deterministic PQ codebook trained on the given
@@ -11,11 +10,7 @@ import org.apache.spark.sql.functions._
 object DumpPq {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Engine.session()
     graft.core.Tables.registerAll(spark, sfDir)
     val cb = graft.ops.Similarity.trainPqCodebooks(
       spark.table("embeddings"), "vec_id", "embedding",

@@ -1,24 +1,18 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan for the
   * named SparkEntry queries against a test-data dir. Dev aid only —
-  * `runMain graft.tools.Explain <query>[,<query>...] [sfDir]`.
+  * `runMain graft.tools.Explain [<query>[,<query>...]] [sfDir]`
+  * (no names: every query).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val names = args.headOption.map(_.split(",").toSeq).getOrElse(Seq.empty)
+    val only = args.headOption.map(Driver.names)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
+    val spark = graft.core.Engine.session()
+    Driver.run(spark, sfDir, "explain", only) { (n, query) =>
       println(s"\n========== $n ==========")
-      graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      query().explain("formatted")
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Local scale-up synthesizer: unions N key-offset copies of every
@@ -102,17 +102,10 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, dst) = args.take(2)
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is TIMESTAMP(NANOS): copy it through as raw int64
-      // nanos (registerAll handles either representation)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Engine.session()
+    // events.ts is TIMESTAMP(NANOS): copy it through as raw int64
+    // nanos (registerAll handles either representation)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     graft.core.Tables.all.foreach { t =>
       val in = graft.core.Tables.path(src, t)

@@ -1,67 +1,48 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.PlanGate
 
 /** Detachable scale gate: executes every `SparkEntry.queries` entry on
   * a given SF dir, applies the PlanGate (same checks as
-  * QueriesSmokeSpec), and prints one `[smokegate]` line per query with
-  * its wall seconds plus a final JSON summary — the tool the sf10
-  * (100×) scale proof runs, where an sbt-bound test session would hold
-  * the build lock for hours.
+  * QueriesSmokeSpec), and prints one `[smokegate]` line per passing
+  * query with its wall seconds plus a final JSON summary — the tool
+  * the sf10 (100×) scale proof runs, where an sbt-bound test session
+  * would hold the build lock for hours. A query that fails the plan
+  * gate (`PLAN-FAIL`) or throws is logged as failed on stderr.
   *
   * `runMain graft.tools.SmokeGate <sfDir> [only,names]`
   */
 object SmokeGate {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val only = args.lift(1).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val only = args.lift(1).map(Driver.names)
+    val spark = graft.core.Engine.session()
     // shuffle partitions default to the core count (the local-mode
     // convention everywhere in this repo) but are overridable: at the
     // synthetic 100× scale a 32-partition shuffle of a 10⁸-pair stream
     // spills, which a real cluster (partitions ∝ executors) never sees
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
 
-    var nPass, nFail = 0
-    val times = scala.collection.mutable.LinkedHashMap[String, Double]()
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try {
-          val df = fn(spark, sfDir)
-          val bad =
-            if (graft.plans.PlanGate.intentionalLinearScan(name)) Nil
-            else graft.plans.PlanGate.violations(df)
-          if (bad.nonEmpty) {
-            nFail += 1
-            println(s"[smokegate] $name PLAN-FAIL: ${bad.head.linesIterator.next()}")
-          } else {
-            df.write.format("noop").mode("overwrite").save()
-            val dt = (System.nanoTime() - t0) / 1e9
-            times(name) = dt
-            nPass += 1
-            println(f"[smokegate] $name pass $dt%.2f s")
-          }
-        } catch {
-          case e: Throwable =>
-            nFail += 1
-            println(s"[smokegate] $name ERROR: ${e.getMessage}")
-        }
-        spark.catalog.clearCache()
-        System.gc()
-      }
+    val statuses = Driver.run(spark, sfDir, "smokegate", only) { (name, query) =>
+      val t0 = System.nanoTime()
+      val df = query()
+      val bad = if (PlanGate.intentionalLinearScan(name)) Nil else PlanGate.violations(df)
+      if (bad.nonEmpty)
+        throw new IllegalStateException(s"PLAN-FAIL: ${bad.head.linesIterator.next()}")
+      df.write.format("noop").mode("overwrite").save()
+      val dt = (System.nanoTime() - t0) / 1e9
+      println(f"[smokegate] $name pass $dt%.2f s")
+      // drop this query's cached blocks first, so the collection
+      // frees them before the next query allocates
+      spark.catalog.clearCache(); System.gc()
+      dt
+    }
+    val times = statuses.collect { case Driver.Status(n, Right(dt)) => n -> dt }
+    val nFail = statuses.count(!_.ok)
     def fmt(v: Double) = BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP)
     val qs = times.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString("{", ",", "}")
-    println(s"""{"gate":"smoke","sf":"$sfDir","pass":$nPass,"fail":$nFail,"total_s":${fmt(times.values.sum)},"queries":$qs}""")
+    println(s"""{"gate":"smoke","sf":"$sfDir","pass":${times.size},"fail":$nFail,"total_s":${fmt(times.map(_._2).sum)},"queries":$qs}""")
     spark.stop()
     if (nFail > 0) sys.exit(1)
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The streaming-equals-batch gate for the composed ingest at a
@@ -21,18 +21,11 @@ object StreamGate {
     val sfDir = args(0)
     val outJson = args(1)
     val nBatches = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the progress ring must hold EVERY micro-batch's update or the
-      // durationMs split below silently undercounts machinery time
-      // (default ring = 100 updates; nBatches is a CLI arg)
-      .config("spark.sql.streaming.numRecentProgressUpdates", nBatches + 16)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Engine.session()
+    // the progress ring must hold EVERY micro-batch's update or the
+    // durationMs split below silently undercounts machinery time
+    // (default ring = 100 updates; nBatches is a CLI arg)
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", nBatches + 16)
     graft.core.Tables.registerAll(spark, sfDir)
     val docs = spark.table("documents")
       .select(col("doc_id"), col("text"), col("source"))
@@ -112,8 +105,8 @@ object StreamGate {
     // setup) is micro-batch machinery — the split that adjudicates
     // the stream-vs-batch premium in BASELINE.md. Read from the
     // query's own recentProgress AFTER termination (a synchronous,
-    // complete snapshot — the ring is sized to nBatches + slack in
-    // the session builder above) instead of a StreamingQueryListener:
+    // complete snapshot — the ring is sized to nBatches + slack right
+    // after the session is built) instead of a StreamingQueryListener:
     // listener callbacks arrive on the async bus thread, and a
     // snapshot taken right after awaitTermination can miss the final
     // batch's event.
