@@ -1524,7 +1524,7 @@ object DuckSqlShim {
             sql.substring(j, k).equalsIgnoreCase("join")
           } =>
             fail("ASOF JOIN",
-              "use Graft.asofJoin (ops.AsofJoin) — the engine's one-shuffle " +
+              "use graft.ops.AsofJoin.asof — the engine's one-shuffle " +
                 "as-of operator (backward/forward, tolerance, inner/outer)")
           case "glob" if nextSignificant(sql, i) == '\'' =>
             // `s GLOB 'a*c'` — case-sensitive glob full-match; only

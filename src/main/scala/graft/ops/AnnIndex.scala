@@ -253,6 +253,10 @@ object AnnIndex {
       math.max(pqCodes.dirtyFraction, lshBuckets.dirtyFraction)
   }
 
+  /** [[IndexStore.stats]] for an ANN index ROOT (a [[build]]
+    * directory): the fragmentation of both growing sub-stores, keyed
+    * the same way [[compact]] is.
+    */
   def stats(spark: SparkSession, path: String): Option[Stats] =
     for {
       c <- IndexStore.stats(spark, s"$path/pq_codes")

@@ -199,7 +199,9 @@ object Classifier {
     * `pos_rate`: a calibrated model has pos_rate ≈ avg_prob per
     * bucket) with the corpus-level `auc` (tie-corrected Mann–Whitney
     * rank sum), `brier` (mean squared probability error) and
-    * `accuracy` (@0.5) attached as constant columns.
+    * `accuracy` (@0.5) attached as constant columns. Output columns,
+    * in order: `bucket`, `n`, `avg_prob`, `pos_rate`, `auc`, `brier`,
+    * `accuracy`.
     *
     * 100 TB design: AUC needs every row's rank but NOT a global sort
     * — probabilities are 6-dp-rounded by [[score]], so ranks

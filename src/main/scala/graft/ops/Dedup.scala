@@ -211,28 +211,6 @@ object Dedup {
       .select("id_a", "id_b", "fp_jaccard")
   }
 
-  /** Maximal duplicated token spans (Lee et al. 2022, "Deduplicating
-    * Training Data Makes Language Models Better" — the substring-level
-    * dedup document-level MinHash cannot see): every token n-gram
-    * occurring in ≥2 distinct documents marks its covered positions,
-    * and overlapping/adjacent marks merge into maximal spans.
-    * Returns (doc_id, span_start, span_end, span_tokens) with
-    * 0-based inclusive token positions, one row per maximal span.
-    * Docs shorter than `n` tokens never participate (short-doc
-    * duplication is document-level dedup's job). `crossDocOnly=false`
-    * also marks within-document repeats (≥2 occurrences anywhere).
-    *
-    * Scale shape: the ShingleHashes kernel emits one 60-bit hash per
-    * gram position in a single pass (the suffix-array of the paper
-    * replaced by a hash inverted index — the standard distributed
-    * reformulation); duplicated grams are one (hash) groupBy with
-    * map-side partials, the position join is an equi-join on the hash
-    * (AQE broadcasts the duplicated set when small), and the island
-    * merge is a per-document window — bounded by doc length, never
-    * corpus-wide. Hash collisions (60-bit) can over-mark a span at
-    * ~1e-10 per gram pair — the standard trade for never shuffling
-    * gram strings.
-    */
   /** The positional gram-hash stream duplicateSpans and the span-gram
     * index build share: one (doc_id, gpos, gh) row per token n-gram
     * position, docs shorter than `n` excluded. One ShingleHashes
@@ -308,6 +286,28 @@ object Dedup {
         (size(col("_t")) - size(col("_k"))).cast("long").as("n_removed"))
   }
 
+  /** Maximal duplicated token spans (Lee et al. 2022, "Deduplicating
+    * Training Data Makes Language Models Better" — the substring-level
+    * dedup document-level MinHash cannot see): every token n-gram
+    * occurring in ≥2 distinct documents marks its covered positions,
+    * and overlapping/adjacent marks merge into maximal spans.
+    * Returns (doc_id, span_start, span_end, span_tokens) with
+    * 0-based inclusive token positions, one row per maximal span.
+    * Docs shorter than `n` tokens never participate (short-doc
+    * duplication is document-level dedup's job). `crossDocOnly=false`
+    * also marks within-document repeats (≥2 occurrences anywhere).
+    *
+    * Scale shape: the ShingleHashes kernel emits one 60-bit hash per
+    * gram position in a single pass (the suffix-array of the paper
+    * replaced by a hash inverted index — the standard distributed
+    * reformulation); duplicated grams are one (hash) groupBy with
+    * map-side partials, the position join is an equi-join on the hash
+    * (AQE broadcasts the duplicated set when small), and the island
+    * merge is a per-document window — bounded by doc length, never
+    * corpus-wide. Hash collisions (60-bit) can over-mark a span at
+    * ~1e-10 per gram pair — the standard trade for never shuffling
+    * gram strings.
+    */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
                      n: Int = 8, crossDocOnly: Boolean = true): DataFrame = {
     // the gram table pins eagerly: the dup-gram aggregate and the
@@ -1098,7 +1098,9 @@ object Dedup {
 
   /** Drop exact/fingerprint duplicates, keeping the canonical (min-id)
     * row of each group — the "apply" half of dedup: one digest
-    * shuffle, bodies never move.
+    * shuffle, bodies never move. `normalized` groups on the
+    * normalized-form [[TextAnalysis.fingerprint]] instead of the raw
+    * text's md5.
     */
   def dropExactDuplicates(df: DataFrame, idCol: String, textCol: String,
                           normalized: Boolean = false): DataFrame = {

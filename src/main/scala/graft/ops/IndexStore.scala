@@ -457,7 +457,12 @@ object IndexStore {
       if (nPrefixes == 0) 0.0 else nDirtyPrefixes.toDouble / nPrefixes
   }
 
-  /** [[Stats]] for the index at `path`, or None for a fresh path. */
+  /** [[Stats]] for the index at `path`, or None for a path with no
+    * committed manifest. An ANN index ROOT has no manifest of its own
+    * (its two growing stores keep theirs under `pq_codes` /
+    * `lsh_buckets`), so this returns None there — use
+    * [[AnnIndex.stats]].
+    */
   def stats(spark: SparkSession, path: String): Option[Stats] =
     currentOpt(fsFor(spark, path), path).map { snap =>
       val (anchors, data) = snap.entries.partition(e => !e.contains("_pfx="))

@@ -90,7 +90,12 @@ import org.apache.spark.sql.functions._
   */
 object IngestPipeline {
 
-  /** `shingleN` is the MinHash shingle size (near-dup candidate
+  /** The composed production ingest step over one arriving shard —
+    * quality gate ∘ exact dedup ∘ Bloom-stage decontamination ∘
+    * near-dup dedup ∘ span cut, each dedup against its persisted
+    * index (the stage list above).
+    *
+    * `shingleN` is the MinHash shingle size (near-dup candidate
     * generation); `decontamN` the decontamination n-gram size (eval
     * leakage test) — separate knobs sharing a default, so tuning the
     * leak gram length never silently changes near-dup semantics.

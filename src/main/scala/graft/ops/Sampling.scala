@@ -111,23 +111,6 @@ object Sampling {
     splitAssign(clustered, "cluster_id", splits, restLabel, splitCol)
   }
 
-  /** Frequency capping: keep at most `maxPerKey` rows per `keyCol`
-    * (the per-domain / per-source cap every crawl-curation pipeline
-    * applies so one hot domain cannot dominate the corpus). The kept
-    * subset is the `maxPerKey` SMALLEST id-hashes within the key —
-    * deterministic across runs/engines/repartitioning and unbiased by
-    * input order, consistent with the hash-threshold samplers above.
-    *
-    * 100 TB design: a naive per-key window sorts every row of a hot
-    * key in one task (a 50%-of-corpus domain = an unbounded
-    * partition). Instead, stage 1 windows over (key, salt) — each of
-    * the `saltBuckets` sub-partitions keeps its own `maxPerKey`
-    * smallest, bounding any task at bucket size — and stage 2 re-ranks
-    * the ≤ saltBuckets×maxPerKey survivors per key. The N smallest
-    * per bucket are a superset of the N smallest overall, so the
-    * result is identical to the single-window form (OpsSpec pins the
-    * equivalence).
-    */
   /** Deterministic hash-ordered running token total per key group,
     * added as `_cum_before` (tokens strictly before this row in the
     * (hashKey, id) order) — the primitive token-budget sampling and
@@ -570,7 +553,7 @@ object Sampling {
     *
     * `weights` is one row per key (compose with [[mixtureWeights]] /
     * [[mixtureTemperature]] output); keys absent from it are dropped
-    * (only the keys being mixed are ordered — the [[mixtureDraw]]
+    * (only the keys being mixed are ordered — the [[mixtureSample]]
     * restriction semantics). The per-key rank is the two-level
     * prefix sum (md5-prefix sub-buckets; offsets table #keys×256, no
     * per-key hot partition), the weight join is a #keys-row
@@ -658,6 +641,23 @@ object Sampling {
       .drop("_rn")
   }
 
+  /** Frequency capping: keep at most `maxPerKey` rows per `keyCol`
+    * (the per-domain / per-source cap every crawl-curation pipeline
+    * applies so one hot domain cannot dominate the corpus). The kept
+    * subset is the `maxPerKey` SMALLEST id-hashes within the key —
+    * deterministic across runs/engines/repartitioning and unbiased by
+    * input order, consistent with the hash-threshold samplers above.
+    *
+    * 100 TB design: a naive per-key window sorts every row of a hot
+    * key in one task (a 50%-of-corpus domain = an unbounded
+    * partition). Instead, stage 1 windows over (key, salt) — each of
+    * the `saltBuckets` sub-partitions keeps its own `maxPerKey`
+    * smallest, bounding any task at bucket size — and stage 2 re-ranks
+    * the ≤ saltBuckets×maxPerKey survivors per key. The N smallest
+    * per bucket are a superset of the N smallest overall, so the
+    * result is identical to the single-window form (OpsSpec pins the
+    * equivalence).
+    */
   def capPerKey(df: DataFrame, keyCol: String, idCol: String,
                 maxPerKey: Int, saltBuckets: Int = 16): DataFrame = {
     require(maxPerKey > 0, s"maxPerKey must be positive: $maxPerKey")

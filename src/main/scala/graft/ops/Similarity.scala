@@ -307,7 +307,9 @@ object Similarity {
     * refines with exact cosine inside them.
     *
     * Centroids are caller-provided (id, vector) — train them offline
-    * (k-means or a deterministic sample like "every nth vector"); the
+    * (k-means or a deterministic sample like "every nth vector"; the
+    * [[trainIvfCentroids]] output goes in with `cent_id`/`centroid`
+    * renamed to `idCol`/`vecCol`); the
     * assignment itself is deterministic given the centroids, which
     * keeps results reproducible across runs/engines. The corpus side
     * labels through [[assignClusters]] (plan-literal argmax — no join,

@@ -882,20 +882,6 @@ object TextAnalysis {
       .limit(k)
   }
 
-  /** Sliding-window passage chunking — the RAG/embedding-pipeline
-    * primitive: split each document into token windows of `chunkSize`
-    * tokens starting every `stride` tokens (overlap =
-    * chunkSize − stride). Output: (doc_id, chunk_id, n_tokens,
-    * chunk_text), chunk_id dense from 0 per doc. When stride <
-    * chunkSize the final windows shorten toward the text's tail
-    * (standard sliding-window behavior); callers filter on n_tokens
-    * if overlap-only tails are unwanted. Zero-token docs emit no
-    * chunks.
-    *
-    * Scale shape: pure map side — tokenize, explode a per-row
-    * `sequence` of window starts, slice. No shuffle, no window, no
-    * driver involvement; 100 TB chunks exactly as fast as it scans.
-    */
   /** Top-k adjacent-pair collocations by pointwise mutual information
     * (Church & Hanks 1990) — the classic phrase/collocation miner for
     * tokenizer and vocabulary curation:
@@ -963,6 +949,20 @@ object TextAnalysis {
       .limit(k)
   }
 
+  /** Sliding-window passage chunking — the RAG/embedding-pipeline
+    * primitive: split each document into token windows of `chunkSize`
+    * tokens starting every `stride` tokens (overlap =
+    * chunkSize − stride). Output: (doc_id, chunk_id, n_tokens,
+    * chunk_text), chunk_id dense from 0 per doc. When stride <
+    * chunkSize the final windows shorten toward the text's tail
+    * (standard sliding-window behavior); callers filter on n_tokens
+    * if overlap-only tails are unwanted. Zero-token docs emit no
+    * chunks.
+    *
+    * Scale shape: pure map side — tokenize, explode a per-row
+    * `sequence` of window starts, slice. No shuffle, no window, no
+    * driver involvement; 100 TB chunks exactly as fast as it scans.
+    */
   def chunkPassages(df: DataFrame, idCol: String, textCol: String,
                     chunkSize: Int = 64, stride: Int = 48): DataFrame = {
     require(chunkSize >= 1, "chunkSize must be >= 1")
@@ -1102,16 +1102,6 @@ object TextAnalysis {
         col("min_tokens") +: col("max_tokens") +: pctCols: _*)
   }
 
-  /** Corpus vocabulary report (one row): vocabulary size, hapax count
-    * (terms seen once — the Zipf tail a tokenizer-vocab decision cares
-    * about), total token mass and the share held by the top `k` terms
-    * (head concentration ≈ boilerplate risk).
-    *
-    * Scale shape: one explode → term counts (map-side combine) → two
-    * 1-row aggregates, one over the full vocab, one over a bounded
-    * top-k (TakeOrderedAndProject) — attached by a 1-row crossJoin.
-    * Share = integer-sum ratio → bit-identical across engines.
-    */
   /** Per-slice distribution-shift report: KL(P_key ‖ Q_corpus) of the
     * unigram term distributions, in nats — the standard domain-shift
     * screen over a mixed corpus (a slice whose vocabulary usage
@@ -1196,6 +1186,16 @@ object TextAnalysis {
       round((col("_sy") - slope * col("_sx")) / n, 6).as("zipf_intercept"))
   }
 
+  /** Corpus vocabulary report (one row): vocabulary size, hapax count
+    * (terms seen once — the Zipf tail a tokenizer-vocab decision cares
+    * about), total token mass and the share held by the top `k` terms
+    * (head concentration ≈ boilerplate risk).
+    *
+    * Scale shape: one explode → term counts (map-side combine) → two
+    * 1-row aggregates, one over the full vocab, one over a bounded
+    * top-k (TakeOrderedAndProject) — attached by a 1-row crossJoin.
+    * Share = integer-sum ratio → bit-identical across engines.
+    */
   def vocabReport(df: DataFrame, textCol: String, k: Int = 10): DataFrame = {
     val counts = Spread.ifNarrow(df)
       .select(explode(tokens(col(textCol))).as("term"))
@@ -1211,19 +1211,6 @@ object TextAnalysis {
         col(s"top${k}_tokens").cast("double") / col("total_tokens").cast("double"))
   }
 
-  /** One-row curation funnel report: documents and tokens surviving
-    * each stage of the standard curation pipeline — input → Gopher
-    * quality → exact dedup → benchmark decontamination (the stage
-    * order of `pipeline_curate_mix`) — computed as FLAGS on a single
-    * corpus pass, so the report costs one scan plus one
-    * fingerprint-keyed shuffle instead of one pipeline run per stage.
-    * The exact-dup canonical keeper is the minimum id among QUALITY
-    * SURVIVORS of its md5(text) group (dropping low-quality docs
-    * first must not delete a group's only good copy). Contamination
-    * flags come from [[Decontaminate.overlap]]'s inverted-index JOIN —
-    * not the one-row gram-array form, whose per-row array_intersect
-    * degrades quadratically once the eval gram set stops being tiny.
-    */
   /** Per-key out-of-vocabulary rate against the corpus top-V unigram
     * vocabulary — the domain-coverage screen a fixed tokenizer/vocab
     * implies (a source whose tokens fall outside the reference vocab
@@ -1254,6 +1241,19 @@ object TextAnalysis {
         round(col("n_oov").cast("double") / col("n_tokens").cast("double"), 6))
   }
 
+  /** One-row curation funnel report: documents and tokens surviving
+    * each stage of the standard curation pipeline — input → Gopher
+    * quality → exact dedup → benchmark decontamination (the stage
+    * order of `pipeline_curate_mix`) — computed as FLAGS on a single
+    * corpus pass, so the report costs one scan plus one
+    * fingerprint-keyed shuffle instead of one pipeline run per stage.
+    * The exact-dup canonical keeper is the minimum id among QUALITY
+    * SURVIVORS of its md5(text) group (dropping low-quality docs
+    * first must not delete a group's only good copy). Contamination
+    * flags come from [[Decontaminate.overlap]]'s inverted-index JOIN —
+    * not the one-row gram-array form, whose per-row array_intersect
+    * degrades quadratically once the eval gram set stops being tiny.
+    */
   def curationFunnel(docs: DataFrame, bench: DataFrame,
                      idCol: String = "doc_id", textCol: String = "text",
                      n: Int = 3, minHits: Int = 4): DataFrame =

@@ -62,6 +62,13 @@ object DatasetBridge {
     // LogicalRDD advertises a partitioning over attributes it does not
     // output — and every downstream exchange stays
     val out = qe.analyzed.output
+    // the remap is positional: a length or type mismatch would zip
+    // into a partitioning over the wrong columns (types compare
+    // ignoring nullability, which optimization may tighten)
+    require(physical.output.length == out.length &&
+        physical.output.zip(out).forall { case (p, l) => p.dataType.sameType(l.dataType) },
+      s"localCheckpointPartitioned: physical output [${physical.output.mkString(", ")}] " +
+        s"does not match analyzed output [${out.mkString(", ")}] position by position")
     val attrMap: Map[org.apache.spark.sql.catalyst.expressions.ExprId,
         org.apache.spark.sql.catalyst.expressions.Attribute] =
       physical.output.zip(out).map { case (p, l) => p.exprId -> l }.toMap

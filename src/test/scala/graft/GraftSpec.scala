@@ -6,7 +6,8 @@ import graft.compile.PipelineCompiler.PipelineNode
 import graft.ingest.{Ingest, OvertureFixtures}
 
 /** End-to-end facade exercise: the reference user's whole workflow —
-  * load an area, run pipelines, search, drop — through the public API.
+  * load an area, run pipelines, search, drop — through the public API,
+  * plus the training-data operators called through `graft.ops`.
   */
 class GraftSpec extends AnyFunSuite {
 
@@ -60,33 +61,39 @@ class GraftSpec extends AnyFunSuite {
     assert(g.sessionState.get("pipelineSearch").contains("cafe"))
   }
 
-  test("training-pipeline extensions are reachable through the facade") {
+  test("training-pipeline extensions are reachable through graft.ops") {
     import spark.implicits._
+    import graft.ops.{Dedup, Similarity, TextAnalysis}
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "the quick brown fox jumps over the lazy dog"),
       (3L, "the quick brown fox jumps over the lazy cat"),
       (4L, "completely different text about spark engines")).toDF("doc_id", "text")
-    assert(g.dedupExact(docs, "doc_id", "text").count() == 3) // doc 2 dropped
+    assert(Dedup.dropExactDuplicates(docs, "doc_id", "text").count() == 3) // doc 2 dropped
     val near = g.dedupNear(docs, "doc_id", "text", threshold = 0.25)
       .collect().map(_.getLong(0)).toSet
     assert(near.contains(1L) && !near.contains(2L) && !near.contains(3L) && near.contains(4L))
-    val ann = g.annotateText(docs)
+    val ann = TextAnalysis.annotate(docs)
     assert(ann.columns.contains("lang_pred") && ann.columns.contains("q_tokens"))
     val vecs = (0L until 30L).map { i =>
       val arr = Array.fill(8)(0.01f); arr((i % 3).toInt) = 1.0f; (i, arr)
     }.toDF("vec_id", "embedding")
-    val nn = g.annIvf(vecs, vecs.limit(2), "vec_id", "embedding", k = 3, nlist = 3, nprobe = 1)
+    val cents = Similarity.trainIvfCentroids(vecs, "vec_id", "embedding", k = 3)
+      .select($"cent_id".as("vec_id"), $"centroid".as("embedding"))
+    val nn = Similarity.ivfTopK(vecs, vecs.limit(2), cents, "vec_id", "embedding",
+      k = 3, nprobe = 1)
     assert(nn.count() > 0)
-    assert(g.tfIdfTerms(docs).columns.toSeq == Seq("doc_id", "term", "score", "rank"))
-    assert(g.perplexity(docs).columns.contains("ppl"))
+    assert(TextAnalysis.tfIdfTopTerms(docs, "doc_id", "text").columns.toSeq ==
+      Seq("doc_id", "term", "score", "rank"))
+    assert(TextAnalysis.lmPerplexity(docs, "doc_id", "text").columns.contains("ppl"))
     val tgt = docs.where($"doc_id" === 4L)
-    assert(g.dsirWeights(docs, tgt).count() == 4)
-    assert(g.dsirSample(docs, tgt, k = 2).count() == 2)
+    assert(TextAnalysis.dsirLogWeights(docs, tgt, "doc_id", "text").count() == 4)
+    assert(TextAnalysis.dsirResample(docs, tgt, "doc_id", "text", k = 2).count() == 2)
   }
 
-  test("persisted-index workflows are reachable through the facade") {
+  test("persisted-index workflows are reachable through graft.ops") {
     import spark.implicits._
+    import graft.ops.{AnnIndex, Dedup, Similarity}
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog", "a"),
       (2L, "the quick brown fox jumps over the lazy dog", "a"),
@@ -94,8 +101,9 @@ class GraftSpec extends AnyFunSuite {
       (4L, "the quick brown fox jumps over the lazy dog", "b"), // dups 1 across shards
       (5L, "a genuinely novel document with fresh words", "b")).toDF("doc_id", "text", "source")
     val idx = java.nio.file.Files.createTempDirectory("graft_facade_idx").toString
-    g.dedupIndexWrite(docs.where($"doc_id" <= 3), idx)
-    val kept = g.dedupIncrement(docs.where($"doc_id" > 3), idx, threshold = 0.25)
+    Dedup.writeMinhashIndex(docs.where($"doc_id" <= 3), "doc_id", "text", idx)
+    val kept = Dedup.dedupIncrement(docs.where($"doc_id" > 3), "doc_id", "text", idx,
+        threshold = 0.25)
       .collect().map(_.getLong(0)).toSet
     assert(kept == Set(5L)) // 4 duplicates the indexed corpus
 
@@ -103,14 +111,14 @@ class GraftSpec extends AnyFunSuite {
       val arr = Array.fill(64)(0.01f); arr((i % 4).toInt * 16) = 1.0f; (i, arr)
     }.toDF("vec_id", "embedding")
     val annDir = java.nio.file.Files.createTempDirectory("graft_facade_ann").toString
-    g.annIndexBuild(vecs, annDir, dims = 64, ivfK = 4, pqM = 4, pqK = 4)
+    AnnIndex.build(vecs, "vec_id", "embedding", annDir, dims = 64, ivfK = 4, pqM = 4, pqK = 4)
     val q = vecs.limit(2)
-    val pq = g.annPqTopKEncoded(
-      graft.ops.AnnIndex.readPqCodes(spark, annDir), q,
-      graft.ops.AnnIndex.readPqCodebooks(spark, annDir), k = 3)
+    val pq = Similarity.pqTopKEncoded(
+      AnnIndex.readPqCodes(spark, annDir), q, "vec_id", "embedding",
+      AnnIndex.readPqCodebooks(spark, annDir), k = 3)
     assert(pq.count() > 0)
-    val lsh = g.annLshTopKFromBuckets(vecs,
-      graft.ops.AnnIndex.readLshBuckets(spark, annDir), q, k = 3, hamming = 1)
+    val lsh = Similarity.lshTopKFromBuckets(vecs,
+      AnnIndex.readLshBuckets(spark, annDir), q, "vec_id", "embedding", k = 3, hamming = 1)
     assert(lsh.count() > 0)
   }
 

@@ -609,7 +609,7 @@ class DuckSqlShimSpec extends AnyFunSuite {
     // ASOF JOIN points at the engine operator
     val asofErr = intercept[IllegalArgumentException](
       rw("SELECT * FROM a ASOF JOIN b ON a.k = b.k AND a.t >= b.t"))
-    assert(asofErr.getMessage.contains("asofJoin"))
+    assert(asofErr.getMessage.contains("AsofJoin.asof"))
     // sampled scan executes (row count bounded, exact count is random)
     import spark.implicits._
     (1 to 100).toDF("x").createOrReplaceTempView("samp_t")

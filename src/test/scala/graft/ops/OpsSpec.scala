@@ -1855,7 +1855,11 @@ class OpsSpec extends AnyFunSuite {
     val scored = Seq(
       (1L, 1.0, 0.9), (2L, 1.0, 0.5), (3L, 0.0, 0.5), (4L, 0.0, 0.1)
     ).toDF("doc_id", "label", "prob")
-    val rep = Classifier.evalReport(scored, buckets = 10).collect()
+    val report = Classifier.evalReport(scored, buckets = 10)
+    // the column order the scaladoc lists
+    assert(report.columns.toSeq ==
+      Seq("bucket", "n", "avg_prob", "pos_rate", "auc", "brier", "accuracy"))
+    val rep = report.collect()
     assert(rep.nonEmpty)
     val head = rep.head
     assert(head.getAs[Double]("auc") == 0.875)
@@ -1868,6 +1872,26 @@ class OpsSpec extends AnyFunSuite {
       b5.getAs[Double]("avg_prob") == 0.5)
     // metrics are constant across bucket rows
     assert(rep.map(_.getAs[Double]("auc")).distinct.length == 1)
+  }
+
+  test("localCheckpointPartitioned keeps the hash partitioning: an aggregate on the key plans no Exchange") {
+    // Classifier's featurize shape: repartition on the key with an
+    // explicit count, checkpoint, aggregate on the key downstream.
+    // A child session with AQE on, as `Tables.registerAll` leaves it:
+    // without AQE the plain checkpoint keeps the partitioning too.
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    val keyed = s.range(1, 201).select((col("id") % 7).as("k"), col("id").as("v"))
+      .repartition(4, col("k"))
+    def exchanges(df: org.apache.spark.sql.DataFrame): Int =
+      "Exchange".r.findAllMatchIn(
+        df.groupBy("k").agg(sum("v")).queryExecution.executedPlan.toString).size
+    val kept = org.apache.spark.sql.graft.DatasetBridge.localCheckpointPartitioned(keyed)
+    assert(exchanges(kept) == 0)
+    // the plain checkpoint pins UnknownPartitioning and pays one
+    assert(exchanges(keyed.localCheckpoint(true)) == 1)
+    assert(kept.groupBy("k").agg(sum("v")).collect().toSet ==
+      keyed.groupBy("k").agg(sum("v")).collect().toSet)
   }
 
   test("source similarity: exact jaccard + minhash estimate per overlapping pair") {
