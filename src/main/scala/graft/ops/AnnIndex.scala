@@ -51,15 +51,15 @@ object AnnIndex {
             dims: Int = 64, ivfK: Int = 256, pqM: Int = 4, pqK: Int = 4,
             planes: Int = 8, iters: Int = 2): Unit = {
     // the IVF and PQ trainers are INDEPENDENT sequential collect
-    // chains over the same corpus — overlap them (r15; the inParallel
-    // rationale): each trainer's per-iteration job leaves most of the
-    // scheduler idle between collects, so the two chains interleave
-    // and the build pays ~max(ivf, pq) trainer wall instead of the
-    // sum. Determinism is untouched — each trainer's trajectory
-    // depends only on its own input.
+    // chains over the same corpus — overlap them (r15): each trainer's
+    // per-iteration job leaves most of the scheduler idle between
+    // collects, so the two chains interleave and the build pays
+    // ~max(ivf, pq) trainer wall instead of the sum. Determinism is
+    // untouched — each trainer's trajectory depends only on its own
+    // input.
     @volatile var cent: DataFrame = null
     @volatile var cb: DataFrame = null
-    inParallel(
+    Concurrent.inParallel(
       () => cent = Similarity.trainIvfCentroids(corpus, idCol, vecCol, ivfK, iters),
       () => cb = Similarity.trainPqCodebooks(corpus, idCol, vecCol, dims, pqM, pqK, iters))
     buildFromArtifacts(corpus, idCol, vecCol, path, cent, cb,
@@ -81,11 +81,10 @@ object AnnIndex {
                          planes: Int, iters: Int): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val pfx = codesPfx(idCol)
     IndexStore.reset(spark, s"$path/pq_codes")
     IndexStore.reset(spark, s"$path/lsh_buckets")
-    val manifest = Seq((dims, ivfK, pqM, pqK, planes, iters, idCol))
-      .toDF("dims", "ivf_k", "pq_m", "pq_k", "planes", "iters", "id_col")
+    val manifest = Seq((dims, ivfK, pqM, pqK, planes, iters))
+      .toDF("dims", "ivf_k", "pq_m", "pq_k", "planes", "iters")
     if (corpus.isEmpty) {
       // empty build corpus (index version created purely for appends):
       // schema-only anchors, no encode/shuffle/write machinery. The
@@ -96,7 +95,7 @@ object AnnIndex {
         corpus.select(col(idCol), col(vecCol)), idCol, vecCol, cb)
       val bucketSchema = corpus.select(col(idCol),
         Similarity.lshBucket(col(vecCol), planes).as("bucket")).schema
-      inParallel(
+      Concurrent.inParallel(
         () => writeTable(centroids, s"$path/ivf_centroids"),
         () => writeTable(cb, s"$path/pq_codebooks"),
         () => writeTable(manifest, s"$path/manifest"),
@@ -111,35 +110,16 @@ object AnnIndex {
         corpus.select(col(idCol), col(vecCol),
           Similarity.lshBucket(col(vecCol), planes).as("bucket")),
         idCol, vecCol, cb).localCheckpoint(true)
-      inParallel(
+      Concurrent.inParallel(
         () => writeTable(centroids, s"$path/ivf_centroids"),
         () => writeTable(cb, s"$path/pq_codebooks"),
         () => writeTable(manifest, s"$path/manifest"),
         () => IndexStore.append(combined.select(col(idCol), col("codes")),
-          s"$path/pq_codes", pfx),
+          s"$path/pq_codes"),
         () => IndexStore.append(combined.select(col(idCol), col("bucket")),
-          s"$path/lsh_buckets", pfx))
+          s"$path/lsh_buckets"))
     }
   }
-
-  /** Run independent driver actions (Spark jobs against DISJOINT
-    * output paths) concurrently and propagate the first failure —
-    * the local[32] scheduler interleaves their stages, so a chain of
-    * small artifact writes pays one inter-job latency round instead
-    * of one per write. Safe here because no two tasks touch the same
-    * store path (IndexStore's claim loop would serialize them anyway).
-    * (r15: hoisted to [[Concurrent.inParallel]] so the ingest pipeline
-    * and the incremental bench rows share the pattern.)
-    */
-  private def inParallel(tasks: (() => Unit)*): Unit =
-    Concurrent.inParallel(tasks: _*)
-
-  /** Layout key for the two growing tables: a hash prefix of the
-    * vector id (identity-transform compaction tolerates any bucketing,
-    * but a stable one keeps appends and maintenance aligned).
-    */
-  private def codesPfx(idCol: String) =
-    pmod(xxhash64(col(idCol)), lit(16)).cast("string")
 
   /** The build parameters persisted with the index, as
     * (dims, ivf_k, pq_m, pq_k, planes, iters). */
@@ -149,12 +129,6 @@ object AnnIndex {
         col("planes"), col("iters")).head()
     (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5))
   }
-
-  /** The index's id column name, persisted with the manifest (drives
-    * the layout key for maintenance).
-    */
-  def readIdCol(spark: SparkSession, path: String): String =
-    spark.read.parquet(s"$path/manifest").select(col("id_col")).head().getString(0)
 
   /** Ingest a NEW shard into an existing index without retraining:
     * the persisted codebooks and plane count (recovered from the
@@ -197,20 +171,19 @@ object AnnIndex {
         concat(lit("AnnIndex.append: increment vector length "),
           size(col(vecCol)).cast("string"),
           lit(s" != manifest dims $dims"))).isNull)
-    val pfx = codesPfx(idCol)
     // ONE scan of the shard produces BOTH artifacts — r13 ran the PQ
     // encode and the LSH projection as two separate scans of the
     // increment; the pinned (id, bucket, codes) table is bytes per
     // row, and the two independent store appends then overlap
-    // (disjoint paths — see inParallel)
+    // (disjoint paths, so neither write waits on the other's claim)
     val combined = Similarity.pqEncode(
       guarded.withColumn("bucket", Similarity.lshBucket(col(vecCol), planes)),
       idCol, vecCol, cb).localCheckpoint(true)
-    inParallel(
+    Concurrent.inParallel(
       () => IndexStore.append(combined.select(col(idCol), col("codes")),
-        s"$path/pq_codes", pfx, commitTag.map(_ + ":codes")),
+        s"$path/pq_codes", commitTag.map(_ + ":codes")),
       () => IndexStore.append(combined.select(col(idCol), col("bucket")),
-        s"$path/lsh_buckets", pfx, commitTag.map(_ + ":buckets")))
+        s"$path/lsh_buckets", commitTag.map(_ + ":buckets")))
   }
 
   def readIvfCentroids(spark: SparkSession, path: String): DataFrame =
@@ -227,17 +200,14 @@ object AnnIndex {
 
   /** Compact the two append-accumulating tables (`pq_codes`,
     * `lsh_buckets`) after a run of [[append]]s — file layout only,
-    * rows unchanged, dirty hash-prefix partitions only
+    * rows unchanged: each store's data directories fold into one
     * ([[IndexStore.compact]]'s manifest contract: appends landing
     * mid-compaction are carried forward, no quiesce window). The
     * centroid/codebook/manifest tables never grow, so they never
     * need it.
     */
-  def compact(spark: SparkSession, path: String, parts: Int = 32): Unit = {
-    val pfx = codesPfx(readIdCol(spark, path))
-    IndexStore.compact(spark, s"$path/pq_codes", pfx, identity, parts)
-    IndexStore.compact(spark, s"$path/lsh_buckets", pfx, identity, parts)
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    Seq("pq_codes", "lsh_buckets").foreach(t => IndexStore.compact(spark, s"$path/$t"))
 
   /** Fragmentation summary of BOTH growing sub-stores of an ANN index
     * ROOT — the counterpart [[compact]] accepts, so a maintenance
@@ -247,8 +217,7 @@ object AnnIndex {
     * until both sub-stores have a committed manifest.
     */
   final case class Stats(pqCodes: IndexStore.Stats, lshBuckets: IndexStore.Stats) {
-    /** Worst fragmentation across the two stores — the number the
-      * scheduler thresholds on. */
+    /** 1 when either store holds more than one data directory. */
     def dirtyFraction: Double =
       math.max(pqCodes.dirtyFraction, lshBuckets.dirtyFraction)
   }

@@ -758,13 +758,13 @@ object Dedup {
   def pinnedLineRows(inc: DataFrame, idCol: String, textCol: String): DataFrame =
     lineRows(inc, idCol, textCol).localCheckpoint(true)
 
+  /** Modulus for the permutation family (2³¹−1, prime). */
+  final val MinhashP = 2147483647L
+
   /** MinHash signatures in wide form: one row per doc, k `sig<i>`
     * columns — a single shuffle (groupBy id) with k min-aggregates,
     * instead of exploding every shingle k times.
     */
-  /** Modulus for the permutation family (2³¹−1, prime). */
-  final val MinhashP = 2147483647L
-
   def minhashSignaturesWide(df: DataFrame, idCol: String, textCol: String,
                             k: Int = 16, n: Int = 3): DataFrame = {
     // ONE md5 per shingle; the k permutations are affine maps of the

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One persisted dedup-index family: the [[IndexStore]] table every new
@@ -19,10 +19,8 @@ import org.apache.spark.sql.functions._
   *  - [[IncrementalIndex.Line]] — line hashes, one (lh, min_doc) row per
   *    distinct non-blank line; [[Dedup.removeDuplicateLinesIncrement]].
   *
-  * A family is its KEY column, the `_pfx` hash-prefix layout derived
-  * from that key (rows with equal keys land under the same `_pfx=`
-  * directory, so [[IndexStore.compact]]'s per-partition folds are
-  * global folds), and whether it keeps a `min_doc` per key. `min_doc`
+  * A family is its KEY column and whether it keeps a `min_doc` per
+  * key; the [[IndexStore]] layout does not depend on the key. `min_doc`
   * (the smallest doc id that contributed the key) is what makes a
   * RETRY of an already-appended shard verdict-stable: each increment's
   * probe keeps only index rows with `min_doc < doc_id`, so a doc's own
@@ -36,7 +34,7 @@ import org.apache.spark.sql.functions._
   * owns everything else: write, append (inline or deferred through an
   * [[AppendBarrier]]), read, compact and the pin-or-read snapshot.
   */
-final class IncrementalIndex private (val family: String, key: String, pfx: Column,
+final class IncrementalIndex private (val family: String, key: String,
                                       keepsMinDoc: Boolean) {
 
   /** Index rows from an occurrence table holding this family's key
@@ -56,7 +54,7 @@ final class IncrementalIndex private (val family: String, key: String, pfx: Colu
   def write(rows: DataFrame, path: String, append: Boolean = false,
             tag: Option[String] = None): Unit = {
     if (!append) IndexStore.reset(rows.sparkSession, path)
-    IndexStore.append(rows, path, pfx, tag)
+    IndexStore.append(rows, path, tag)
   }
 
   /** [[write]] of `rows`, eagerly pinned, returning the pin — the build
@@ -75,7 +73,7 @@ final class IncrementalIndex private (val family: String, key: String, pfx: Colu
     */
   def append(rows: => DataFrame, path: String, tag: Option[String],
              barrier: Option[AppendBarrier]): Unit = {
-    def run(): Unit = IndexStore.append(rows, path, pfx, tag)
+    def run(): Unit = IndexStore.append(rows, path, tag)
     barrier match {
       case Some(b) => b.submitFor(path)(run())
       case None => run()
@@ -97,24 +95,21 @@ final class IncrementalIndex private (val family: String, key: String, pfx: Colu
     if (keepsMinDoc) minPerKey(live, "min_doc", "_imn") else live
   }
 
-  /** Fold the dirty hash-prefix partitions ([[IndexStore.compact]]):
-    * per-key minima merge to one row per key and the append-accumulated
-    * small files are rewritten. Verdicts are unchanged — the probe
-    * folds the same minima at read time.
+  /** Fold the index's append-accumulated data directories into one
+    * ([[IndexStore.compact]]): per-key minima merge to one row per key.
+    * Verdicts are unchanged — the probe folds the same minima at read
+    * time.
     */
-  def compact(spark: SparkSession, path: String, parts: Int = 32): Unit =
-    IndexStore.compact(spark, path, pfx,
-      if (keepsMinDoc) minPerKey(_, "min_doc", "min_doc") else identity, parts)
+  def compact(spark: SparkSession, path: String): Unit =
+    IndexStore.compact(spark, path,
+      if (keepsMinDoc) minPerKey(_, "min_doc", "min_doc") else identity)
 }
 
 object IncrementalIndex {
-  private def pmod16(key: String): Column = pmod(col(key), lit(16)).cast("string")
-
-  val Digest = new IncrementalIndex("digest", "digest", substring(col("digest"), 1, 1),
-    keepsMinDoc = true)
-  val Minhash = new IncrementalIndex("minhash", "id", pmod16("id"), keepsMinDoc = false)
-  val Span = new IncrementalIndex("span", "gh", pmod16("gh"), keepsMinDoc = true)
-  val Line = new IncrementalIndex("line", "lh", pmod16("lh"), keepsMinDoc = true)
+  val Digest = new IncrementalIndex("digest", "digest", keepsMinDoc = true)
+  val Minhash = new IncrementalIndex("minhash", "id", keepsMinDoc = false)
+  val Span = new IncrementalIndex("span", "gh", keepsMinDoc = true)
+  val Line = new IncrementalIndex("line", "lh", keepsMinDoc = true)
 
   /** The family called `family` ("digest", "minhash", "span", "line"). */
   def named(family: String): Option[IncrementalIndex] =

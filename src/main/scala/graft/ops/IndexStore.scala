@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Manifest-committed storage for the persisted-index families (listed
   * in [[IncrementalIndex]]) and the ANN index tables. The index directory is
@@ -11,7 +12,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * {{{
   *   <path>/manifest/v00000001, v00000002, ...   one small text file per commit
-  *   <path>/data-<uuid>/_pfx=<p>/part-*.parquet  a commit's rows, hash-prefix partitioned
+  *   <path>/data-<uuid>/part-*.parquet           a commit's rows
   *   <path>/anchor-<uuid>/part-*.parquet         zero-row schema anchor (empty index)
   * }}}
   *
@@ -30,10 +31,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     later [[vacuum]] reclaims. There is no instant at which the
   *     index path is missing or half-swapped.
   *   - '''append/compact interleave''': compaction snapshots version
-  *     `k`, rewrites `k`'s leaves, then commits against the LATEST
-  *     version — any append that landed after `k` is carried forward
-  *     (its leaves are not in the rewritten set), so neither writer
-  *     loses rows and no quiesce window is required.
+  *     `k`, rewrites `k`'s data directories, then commits against the
+  *     LATEST version — any append that landed after `k` is carried
+  *     forward (its directory is not in the rewritten set), so neither
+  *     writer loses rows and no quiesce window is required.
   *
   * '''Idempotence tags''' make appends replay-safe: a commit carrying
   * `tag` is skipped when any prior manifest already recorded that tag
@@ -47,13 +48,15 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * cadence instead of growing one tag line per batch for the index's
   * life.
   *
-  * '''Layout''': each commit's rows land hash-prefix partitioned
-  * (`_pfx=` directory partitioning on a caller-supplied derivation of
-  * the index key, e.g. `substr(digest, 1, 1)`), so [[compact]]
-  * touches ONLY partitions that accumulated more than one leaf —
-  * at a steady ingest cadence most of a mature index is already
-  * compacted and each maintenance pass rewrites the dirty fraction,
-  * not the corpus-sized whole.
+  * '''Layout''': each commit is one plain data directory whose file
+  * count AQE sizes from the commit's runtime bytes (a `REBALANCE`
+  * hint), so a small append is one file. Every probe joins the whole
+  * snapshot, so no directory layout would be pruned; [[compact]] folds
+  * all data directories into one whenever there is more than one.
+  * Manifests written with the earlier hash-prefix layout list one
+  * leaf per prefix below each data directory (`data-<uuid>/<leaf>`);
+  * they read, compact and vacuum the same way (a leaf belongs to the
+  * data directory it sits in).
   *
   * '''Concurrency contract''': manifest versions are claimed by
   * exclusive create (`fs.create(..., overwrite = false)`), the
@@ -267,77 +270,72 @@ object IndexStore {
     name
   }
 
-  /** Commit `df` as a new append. Rows land under a fresh
-    * `data-<uuid>` directory, hash-prefix partitioned by `pfx`
-    * (a derivation of the index key — rows with equal keys must map
-    * to equal prefixes, so per-partition compaction folds globally).
-    * A `tag` makes the commit idempotent: if any prior manifest
-    * recorded it, nothing is written and false returns. An absent
-    * manifest initializes implicitly with this commit's rows.
-    * Rows shuffle once on the prefix (`parts` targets, default = one
-    * writer per prefix group) so each append lands ONE file per
-    * touched prefix — an unshuffled partitionBy write would emit
-    * #tasks × #prefixes tiny files and every future index read would
-    * pay their footers. Returns true iff a new version committed.
+  /** Commit `df` as a new append: its rows land in one fresh
+    * `data-<uuid>` directory. A `tag` makes the commit idempotent: if
+    * any prior manifest recorded it, nothing is written and false
+    * returns. An absent manifest initializes implicitly with this
+    * commit's rows; a zero-row commit records only its tag (and an
+    * anchor on a fresh path). Returns true iff a new version committed.
     */
-  def append(df: DataFrame, path: String, pfx: Column,
-             tag: Option[String] = None, parts: Int = 16): Boolean = {
+  def append(df: DataFrame, path: String, tag: Option[String] = None): Boolean = {
     val spark = df.sparkSession
     val fs = fsFor(spark, path)
     // cheap pre-check outside the write: a replayed batch skips the
     // data write entirely, not just the manifest line
     if (tag.exists(t => currentOpt(fs, path).exists(_.covers(t))))
       return false
-    val name = s"data-${java.util.UUID.randomUUID().toString.take(12)}"
-    df.withColumn("_pfx", pfx.cast("string"))
-      .repartition(parts, col("_pfx"))
-      .write.partitionBy("_pfx").mode("overwrite").parquet(s"$path/$name")
-    // a zero-row frame writes no partition directories — the commit
-    // then records only the tag (and an anchor on a fresh path)
-    val leaves = leafDirs(fs, path, name)
+    val written = writeData(fs, df, path)
     commit(fs, path) { snapOpt =>
       if (tag.exists(t => snapOpt.exists(_.covers(t)))) None
       else {
         val prior = snapOpt.map(_.entries).getOrElse(Seq.empty)
         val entries =
-          if (prior.isEmpty && leaves.isEmpty)
+          if (prior.isEmpty && written.isEmpty)
             Seq(writeAnchor(spark, path, df.schema))
-          else prior ++ leaves
+          else prior ++ written
         Some((entries, snapOpt.map(_.tags).getOrElse(Set.empty) ++ tag,
           snapOpt.map(_.marks).getOrElse(Map.empty)))
       }
     }
   }
 
-  private def leafDirs(fs: FileSystem, path: String, dataDir: String): Seq[String] = {
-    val p = new Path(s"$path/$dataDir")
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("_pfx="))
-      .map(st => s"$dataDir/${st.getPath.getName}")
-      .sorted
-  }
-
-  private def pfxOf(entry: String): String = {
-    val base = entry.substring(entry.lastIndexOf('/') + 1)
-    if (base.startsWith("_pfx=")) base.drop(5) else ""
-  }
-
-  /** Rewrite the index's DIRTY partitions — prefix groups holding
-    * more than one leaf directory (touched by several commits since
-    * the last maintenance) — folding rows through `transform` (e.g.
-    * the per-gram minima merge) and landing the result as one fresh
-    * partitioned data directory. Clean partitions are not read, not
-    * rewritten, and keep their manifest entries — the property that
-    * keeps maintenance proportional to the uncompacted fraction
-    * instead of the corpus. With `dirtyOnly = false` every partition
-    * rewrites (full defrag). Anchors survive only while the index
-    * has no data. Commits against the LATEST manifest, so appends
-    * landing mid-compaction are carried forward untouched.
+  /** Write `df` to a fresh `data-<uuid>` directory and return its
+    * name, or None when `df` had no rows. The `REBALANCE` hint lets
+    * AQE size the file count from the runtime bytes; an unshuffled
+    * write would land one tiny file per input task. A zero-row write
+    * still lands one footer-only file, so emptiness is read from the
+    * footers and the empty directory is removed.
     */
-  def compact(spark: SparkSession, path: String, pfx: Column,
+  private def writeData(fs: FileSystem, df: DataFrame, path: String): Option[String] = {
+    val name = s"data-${java.util.UUID.randomUUID().toString.take(12)}"
+    val dir = new Path(path, name)
+    df.hint("rebalance").write.mode("overwrite").parquet(dir.toString)
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    val hasRows = fs.listStatus(dir).iterator
+      .filter(_.getPath.getName.startsWith("part-"))
+      .exists { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try reader.getRecordCount > 0 finally reader.close()
+      }
+    if (hasRows) Some(name) else { fs.delete(dir, true); None }
+  }
+
+  private def isAnchor(entry: String): Boolean = entry.startsWith("anchor-")
+
+  /** The data directory a manifest entry belongs to: the entry itself,
+    * or for an earlier-layout `data-<uuid>/<leaf>` entry its parent.
+    */
+  private def dataDirOf(entry: String): String = entry.split("/", 2)(0)
+
+  /** Fold every data directory of the current snapshot into one fresh
+    * data directory, passing the rows through `transform` (e.g. the
+    * per-gram minima merge). A no-op while the index holds at most one
+    * data directory. Anchors survive only while the index has no data.
+    * Commits against the LATEST manifest, so appends landing
+    * mid-compaction are carried forward untouched.
+    */
+  def compact(spark: SparkSession, path: String,
               transform: DataFrame => DataFrame = identity,
-              parts: Int = 32, dirtyOnly: Boolean = true,
               tagRetention: Int = 1024): Unit = {
     val fs = fsFor(spark, path)
     // maintenance time is also tag-checkpoint time: without it the
@@ -345,23 +343,15 @@ object IndexStore {
     // (O(n²) cumulative manifest bytes at micro-batch cadence)
     retireTags(spark, path, tagRetention)
     val snap = currentOpt(fs, path).getOrElse(return)
-    val dataLeaves = snap.entries.filter(_.contains("_pfx="))
-    val byPfx = dataLeaves.groupBy(pfxOf)
-    val victim = byPfx.filter { case (_, ls) => !dirtyOnly || ls.size > 1 }
-      .values.flatten.toSeq.sorted
-    if (victim.isEmpty) return
-    val name = s"data-${java.util.UUID.randomUUID().toString.take(12)}"
+    val victim = snap.entries.filterNot(isAnchor)
+    if (victim.map(dataDirOf).distinct.size <= 1) return
     val folded = transform(spark.read.parquet(victim.map(e => s"$path/$e"): _*))
-    folded
-      .withColumn("_pfx", pfx.cast("string"))
-      .repartition(parts, col("_pfx"))
-      .write.partitionBy("_pfx").mode("overwrite").parquet(s"$path/$name")
-    val leaves = leafDirs(fs, path, name)
+    val written = writeData(fs, folded, path)
     val victimSet = victim.toSet
     commit(fs, path) { snapOpt =>
       val latest = snapOpt.getOrElse(Snapshot(0L, Seq.empty, Set.empty))
-      val all = latest.entries.filterNot(victimSet) ++ leaves
-      val (anch, data) = all.partition(e => !e.contains("_pfx="))
+      val all = latest.entries.filterNot(victimSet) ++ written
+      val (anch, data) = all.partition(isAnchor)
       // anchors are redundant once real data exists; an index whose
       // every row folded away keeps (or mints) one to stay readable
       val entries =
@@ -418,7 +408,7 @@ object IndexStore {
   def vacuum(spark: SparkSession, path: String): Unit = {
     val fs = fsFor(spark, path)
     val snap = currentOpt(fs, path).getOrElse(return)
-    val liveRoots = snap.entries.map(e => e.split("/", 2)(0)).toSet
+    val liveRoots = snap.entries.map(dataDirOf).toSet
     fs.listStatus(new Path(path)).toSeq
       .filter(st => st.isDirectory &&
         (st.getPath.getName.startsWith("data-") || st.getPath.getName.startsWith("anchor-")) &&
@@ -426,9 +416,8 @@ object IndexStore {
       .foreach(st => fs.delete(st.getPath, true))
   }
 
-  /** Leaf directories of the current manifest, relative to `path` —
-    * the observable layout (specs assert dirty-partition rewrites
-    * against it).
+  /** Entries of the current manifest, relative to `path` — the
+    * observable layout (specs assert compaction rewrites against it).
     */
   def liveEntries(spark: SparkSession, path: String): Seq[String] =
     currentOpt(fsFor(spark, path), path).map(_.entries).getOrElse(Seq.empty)
@@ -441,18 +430,23 @@ object IndexStore {
     currentOpt(fsFor(spark, path), path).exists(_.covers(tag))
 
   /** Health summary of the current manifest — the numbers a
-    * maintenance scheduler needs: how fragmented each prefix group is
-    * (leaves accumulate one per append until a compaction folds
-    * them), how many groups [[compact]] would rewrite, and how many
-    * idempotence tags the manifest carries (each a completed ingest
-    * batch). Manifest-only: no data file is opened, so the check is
-    * safe to run on every ingest tick.
+    * maintenance scheduler needs: how many data directories have
+    * accumulated (one per append until a compaction folds them),
+    * whether [[compact]] would rewrite them, and how many idempotence
+    * tags the manifest carries (each a completed ingest batch).
+    * Manifest-only: no data file is opened, so the check is safe to
+    * run on every ingest tick.
+    *
+    * The index is one group: `nPrefixes` is 1 when it holds data,
+    * `nDirtyPrefixes` is 1 when it holds more than one data directory,
+    * and `maxLeavesPerPrefix` is the number of data directories.
+    * `nDataLeaves` counts manifest data entries (an earlier-layout
+    * directory lists one per prefix).
     */
   final case class Stats(version: Long, nDataLeaves: Int, nAnchors: Int,
                          nTags: Int, nPrefixes: Int, nDirtyPrefixes: Int,
                          maxLeavesPerPrefix: Int, nTagMarks: Int = 0) {
-    /** The fraction of prefix groups a dirty-only [[compact]] would
-      * rewrite — the index's fragmentation measure. */
+    /** 1 when [[compact]] would rewrite the index, else 0. */
     def dirtyFraction: Double =
       if (nPrefixes == 0) 0.0 else nDirtyPrefixes.toDouble / nPrefixes
   }
@@ -465,12 +459,10 @@ object IndexStore {
     */
   def stats(spark: SparkSession, path: String): Option[Stats] =
     currentOpt(fsFor(spark, path), path).map { snap =>
-      val (anchors, data) = snap.entries.partition(e => !e.contains("_pfx="))
-      val byPfx = data.groupBy(pfxOf)
+      val (anchors, data) = snap.entries.partition(isAnchor)
+      val nDirs = data.map(dataDirOf).distinct.size
       Stats(snap.version, data.size, anchors.size, snap.tags.size,
-        byPfx.size, byPfx.count(_._2.size > 1),
-        if (byPfx.isEmpty) 0 else byPfx.valuesIterator.map(_.size).max,
-        snap.marks.size)
+        math.min(nDirs, 1), if (nDirs > 1) 1 else 0, nDirs, snap.marks.size)
     }
 
   /** Destroy the index directory (the `append = false` reset path of

@@ -429,11 +429,11 @@ object IngestPipeline {
 
   /** One maintenance pass over a set of persisted pipeline indexes —
     * the piece that makes a MONTH-long micro-batch stream viable:
-    * without it, every ingest tick appends one file per dirty prefix
-    * and one idempotence tag line to each manifest, forever. Per
-    * index: checkpoint the tag list ([[IndexStore.retireTags]] with
-    * `tagRetention`), then fold dirty prefix groups when the
-    * fragmentation crosses `dirtyThreshold` (the family's
+    * without it, every ingest tick appends one data directory and one
+    * idempotence tag line to each manifest, forever. Per index:
+    * checkpoint the tag list ([[IndexStore.retireTags]] with
+    * `tagRetention`), then, when the index holds more than one data
+    * directory, fold them into one (the family's
     * [[IncrementalIndex.compact]]). Results are NEVER changed by
     * maintenance — every family's read path aggregates the same
     * minima the compaction folds.
@@ -442,15 +442,12 @@ object IngestPipeline {
     * `"digest"` (also the URL index — same (digest, min_doc) shape),
     * `"minhash"`, `"span"`, `"line"`; an unknown name throws
     * IllegalArgumentException before any index is touched. Stats are
-    * manifest-only reads; the compact pass touches only dirty prefix
-    * directories. Safe to call from a `foreachBatch` tail — the
-    * single-writer contract the streaming sinks already hold covers
-    * maintenance too.
+    * manifest-only reads. Safe to call from a `foreachBatch` tail —
+    * the single-writer contract the streaming sinks already hold
+    * covers maintenance too.
     */
   def maintainIndexes(spark: SparkSession, indexes: Seq[(String, String)],
-                      dirtyThreshold: Double = 0.3,
-                      tagRetention: Int = 1024,
-                      parts: Int = 32): Seq[MaintenanceReport] = {
+                      tagRetention: Int = 1024): Seq[MaintenanceReport] = {
     // every family resolves before any manifest is touched: a bad name
     // fails the whole pass, never half-way through it
     val resolved = indexes.map { case (path, family) =>
@@ -460,8 +457,9 @@ object IngestPipeline {
     resolved.flatMap { case (path, family, index) =>
       IndexStore.stats(spark, path).map { before =>
         IndexStore.retireTags(spark, path, tagRetention)
-        val doCompact = before.dirtyFraction >= dirtyThreshold
-        if (doCompact) index.compact(spark, path, parts)
+        // more than one data directory
+        val doCompact = before.nDirtyPrefixes > 0
+        if (doCompact) index.compact(spark, path)
         val after = IndexStore.stats(spark, path).getOrElse(before)
         MaintenanceReport(path, family, before, doCompact, after)
       }

@@ -293,10 +293,6 @@ object Multimodal {
 
   // ── real audio codec (JDK javax.sound — WAV/PCM, no external libs) ─
 
-  /** REAL audio decode via `javax.sound.sampled` (WAV/AIFF/AU PCM ship
-    * with the JDK). Returns (sampleRate, channels, mono samples in
-    * [-1, 1]) or None for undecodable bytes.
-    */
   /** The JDK's registered audio-file readers, resolved once per
     * executor JVM and ordered so MIDI-capable readers probe LAST:
     * `AudioSystem.getAudioInputStream` tries providers in registry
@@ -355,6 +351,10 @@ object Multimodal {
       new java.io.ByteArrayInputStream(bytes))
   }
 
+  /** REAL audio decode via `javax.sound.sampled` (WAV/AIFF/AU PCM ship
+    * with the JDK). Returns (sampleRate, channels, mono samples in
+    * [-1, 1]) or None for undecodable bytes.
+    */
   def decodeAudio(content: Array[Byte], maxFrames: Int = 1 << 20): Option[(Float, Int, Array[Double])] =
     if (content == null || content.isEmpty) None
     else

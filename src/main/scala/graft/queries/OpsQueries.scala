@@ -142,12 +142,6 @@ object OpsQueries {
        | / (sqrt((SELECT SUM(CAST(e AS DOUBLE)*CAST(e AS DOUBLE)) FROM (SELECT unnest($a) e)))
        |   * sqrt((SELECT SUM(CAST(e AS DOUBLE)*CAST(e AS DOUBLE)) FROM (SELECT unnest($b) e)))))""".stripMargin
 
-  /** DuckDB replica of Similarity.trainIvfCentroids: unrolled Lloyd
-    * iterations with the same deterministic recipe — md5-ordered init,
-    * sequential-fold cosine argmax (ties to larger index), per-dim
-    * DECIMAL(38,15) sums divided in double, empty clusters keeping
-    * their previous centroid.
-    */
   /** The k-means CTE chain alone (through `cent<iters>`, no leading
     * WITH / trailing comma) — shared by the centroid dump and the
     * SemDeDup drop oracle.
@@ -295,6 +289,12 @@ object OpsQueries {
        |$cb)""".stripMargin
   }
 
+  /** DuckDB replica of Similarity.trainIvfCentroids: unrolled Lloyd
+    * iterations with the same deterministic recipe — md5-ordered init,
+    * sequential-fold cosine argmax (ties to larger index), per-dim
+    * DECIMAL(38,15) sums divided in double, empty clusters keeping
+    * their previous centroid.
+    */
   private def trainOracleSql(k: Int, iters: Int, dims: Int): String =
     s"""WITH ${trainCtes(k, iters, dims)},
        |expanded AS (

@@ -14,12 +14,17 @@ import graft.fts.FtsIndex
   * fallback, R12).
   *
   * Driver-side orchestration only — the heavy lifting stays in Spark
-  * jobs; nothing here touches executors.
+  * jobs; nothing here touches executors. The constructor prepares
+  * `spark` once ([[graft.core.Engine.prepare]]): the DuckDB-dialect
+  * functions a shimmed override calls and the grid-join rule every
+  * compiled spatial pipeline relies on.
   */
 final class PipelineSession(
     spark: SparkSession,
     debounceMs: Long = 300,
     onResult: (DataFrame, Long) => Unit = (_, _) => ()) {
+
+  graft.core.Engine.prepare(spark)
 
   @volatile var nodes: Seq[PipelineNode] = Seq.empty
   @volatile var search: String = ""
@@ -83,10 +88,7 @@ final class PipelineSession(
       .filter(t => t.nonEmpty && FtsIndex.hasIndex(spark, t)).toSet
 
     def compileWith(fts: Set[String]): String = sOverride
-      .map(t => if (sqlDialect == "duckdb") {
-        graft.functions.DuckFunctions.register(spark)
-        graft.compile.DuckSqlShim.rewrite(t)
-      } else t)
+      .map(t => if (sqlDialect == "duckdb") graft.compile.DuckSqlShim.rewrite(t) else t)
       .getOrElse(
         PipelineCompiler.compile(sNodes,
           Options(search = sSearch, limit = sLimit, bbox = sBbox, ftsTables = fts,

@@ -271,6 +271,14 @@ object CurationStreams {
       .start()
   }
 
+  /** Pipeline row carrying its token count through the chain, so the
+    * tokenizer kernel runs ONCE per document (repetitionStats already
+    * pays it; its n_tokens field is kernel-parity-pinned to
+    * tokenCount).
+    */
+  final case class CurateDoc(doc_id: Long, text: String, source: String,
+                             n_tokens: Long)
+
   /** The composed continuous curation pipeline — quality gate ∘
     * stateful exact dedup ∘ benchmark decontamination ∘ stateful
     * token-budget admission — wired as ONE streaming query, the
@@ -301,14 +309,6 @@ object CurationStreams {
     * map work; the benchmark gram row broadcasts once. Output:
     * (doc_id, source, n_tokens) of admitted documents.
     */
-  /** Pipeline row carrying its token count through the chain, so the
-    * tokenizer kernel runs ONCE per document (repetitionStats already
-    * pays it; its n_tokens field is kernel-parity-pinned to
-    * tokenCount).
-    */
-  final case class CurateDoc(doc_id: Long, text: String, source: String,
-                             n_tokens: Long)
-
   def curateChain(docs: org.apache.spark.sql.Dataset[DedupDoc],
                   gramRow: DataFrame, budgetPerKey: Long,
                   minTokens: Long = 25, maxDupFrac: Double = 0.55,
@@ -513,8 +513,7 @@ object CurationStreams {
       urlCol: Option[String] = None, urlIndexPath: Option[String] = None,
       publicSuffixes: Option[Set[String]] = None,
       lineIndexPath: Option[String] = None,
-      maintainEvery: Int = 8, dirtyThreshold: Double = 0.3,
-      tagRetention: Int = 1024,
+      maintainEvery: Int = 8, tagRetention: Int = 1024,
       onMaintenance: Seq[graft.ops.IngestPipeline.MaintenanceReport] => Unit =
         _ => ()): StreamingQuery = {
     // fail at START time, not first-micro-batch time, when the source
@@ -552,7 +551,7 @@ object CurationStreams {
     }
     // maintenance is scheduled FROM ingest ticks — every
     // `maintainEvery` micro-batches the foreachBatch tail retires
-    // committed idempotence tags and folds dirty index prefixes
+    // committed idempotence tags and folds each index's data directories
     // ([[graft.ops.IngestPipeline.maintainIndexes]]); without this a
     // month-long stream accumulates manifest lines and small files
     // until an operator intervenes out-of-band. Runs AFTER the sink
@@ -565,7 +564,7 @@ object CurationStreams {
       sink(batch, id)
       if (maintainEvery > 0 && (id + 1) % maintainEvery == 0)
         onMaintenance(graft.ops.IngestPipeline.maintainIndexes(
-          spark, maintained, dirtyThreshold, tagRetention))
+          spark, maintained, tagRetention))
     }
     src.writeStream
       .outputMode(OutputMode.Append())

@@ -27,17 +27,23 @@ class FuzzySkewSpec extends AnyFunSuite {
   private val ColdRows = 500L
   private val Factor   = 8
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "16")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
+  // the suite's SQL confs live on a child session: `getOrCreate` would
+  // apply them to the session every suite shares
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+      .newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "16")
+    s.conf.set("spark.sql.session.timeZone", "UTC")
     // force the shuffle join path — at corpus scale neither side
     // broadcasts; AQE off so nothing re-splits the hot key for us and
     // the contrast is the operator's own doing
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .getOrCreate()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
 
   /** 85% of names share the block key 'ac'. Bulk rows get md5 tails
     * (mutually dissimilar, JW ~0.6 — candidate work without

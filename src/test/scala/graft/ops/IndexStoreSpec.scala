@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The manifest-committed index store: tag idempotence, hash-prefix
-  * layout, dirty-partition-only compaction, append/compact
-  * interleave, and crash recovery (orphan data dirs, incomplete
-  * manifests).
+/** The manifest-committed index store: tag idempotence, one data
+  * directory per commit, compaction into one directory, append/compact
+  * interleave, crash recovery (orphan data dirs, incomplete
+  * manifests), and manifests written with the earlier hash-prefix
+  * layout.
   */
 class IndexStoreSpec extends AnyFunSuite {
 
@@ -20,7 +21,6 @@ class IndexStoreSpec extends AnyFunSuite {
 
   import spark.implicits._
 
-  private def pfx = pmod(col("gh"), lit(4)).cast("string")
   private def tmp() = java.nio.file.Files.createTempDirectory("graft_idx").toString
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
@@ -34,44 +34,49 @@ class IndexStoreSpec extends AnyFunSuite {
     val fresh = IndexStore.read(spark, path)
     assert(fresh.columns.toSeq == Seq("gh", "min_doc") && fresh.count() == 0)
 
-    assert(IndexStore.append(shard, path, pfx, Some("s1")))
+    assert(IndexStore.append(shard, path, Some("s1")))
     // replayed tag: nothing written, nothing duplicated
-    assert(!IndexStore.append(shard, path, pfx, Some("s1")))
+    assert(!IndexStore.append(shard, path, Some("s1")))
     val got = IndexStore.read(spark, path)
-    assert(got.columns.toSeq == Seq("gh", "min_doc"), "layout column must not leak")
+    assert(got.columns.toSeq == Seq("gh", "min_doc"), "no layout column may leak")
     assert(rows(got) == rows(shard))
     assert(IndexStore.hasTag(spark, path, "s1") && !IndexStore.hasTag(spark, path, "s2"))
 
     // a zero-row tagged append still records its tag (an empty shard
     // is a completed shard)
-    assert(IndexStore.append(shard.where(lit(false)), path, pfx, Some("s2")))
+    assert(IndexStore.append(shard.where(lit(false)), path, Some("s2")))
     assert(IndexStore.hasTag(spark, path, "s2"))
     assert(rows(IndexStore.read(spark, path)) == rows(shard))
   }
 
-  test("compaction rewrites ONLY dirty partitions and folds per key") {
+  test("an append writes one plain data directory, no prefix partitions") {
     val path = tmp()
-    // shard 1 touches prefixes 0..3; shard 2 only prefixes 0 and 1
+    val shard = (0L until 16L).map(g => (g, 100L + g)).toDF("gh", "min_doc")
+      .repartition(4)
+    IndexStore.append(shard, path)
+    val entries = IndexStore.liveEntries(spark, path)
+    assert(entries.size == 1 && entries.head.startsWith("data-") && !entries.head.contains("/"))
+    val listed = new java.io.File(s"$path/${entries.head}").listFiles().toSeq
+    assert(!listed.exists(_.isDirectory), s"no partition directories: ${listed.map(_.getName)}")
+    // AQE sizes the file count from the bytes: a tiny commit is one file
+    assert(listed.count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")) == 1)
+    assert(rows(IndexStore.read(spark, path)) == rows(shard))
+  }
+
+  test("compaction folds every data directory into one, per key") {
+    val path = tmp()
     val s1 = (0L until 16L).map(g => (g, 100L + g)).toDF("gh", "min_doc")
     val s2 = Seq((0L, 90L), (4L, 95L), (1L, 201L), (5L, 202L)).toDF("gh", "min_doc")
-    IndexStore.append(s1, path, pfx)
-    IndexStore.append(s2, path, pfx)
+    IndexStore.append(s1, path)
+    IndexStore.append(s2, path)
     val before = IndexStore.liveEntries(spark, path)
-    def ofPfx(entries: Seq[String], p: String) =
-      entries.filter(_.endsWith(s"_pfx=$p")).toSet
-    assert(ofPfx(before, "0").size == 2 && ofPfx(before, "1").size == 2)
-    assert(ofPfx(before, "2").size == 1 && ofPfx(before, "3").size == 1)
+    assert(before.size == 2)
 
-    IndexStore.compact(spark, path, pfx,
-      _.groupBy(col("gh")).agg(min(col("min_doc")).as("min_doc")), parts = 8)
+    IndexStore.compact(spark, path,
+      _.groupBy(col("gh")).agg(min(col("min_doc")).as("min_doc")))
     val after = IndexStore.liveEntries(spark, path)
-    // untouched partitions keep their ORIGINAL leaf directories —
-    // compaction never read or rewrote them
-    assert(ofPfx(after, "2") == ofPfx(before, "2"))
-    assert(ofPfx(after, "3") == ofPfx(before, "3"))
-    // dirty partitions collapsed to fresh single leaves
-    assert(ofPfx(after, "0").size == 1 && (ofPfx(after, "0") & ofPfx(before, "0")).isEmpty)
-    assert(ofPfx(after, "1").size == 1 && (ofPfx(after, "1") & ofPfx(before, "1")).isEmpty)
+    // one fresh data directory after compaction
+    assert(after.size == 1 && after.head.startsWith("data-") && !before.contains(after.head))
     // content: global per-gram minima over both shards, one row per gh
     val got = IndexStore.read(spark, path)
     val want = s1.union(s2).groupBy(col("gh")).agg(min(col("min_doc")).as("min_doc"))
@@ -79,20 +84,64 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(got.count() == got.select("gh").distinct().count())
   }
 
+  test("a manifest with earlier-layout prefix leaves reads, compacts, vacuums") {
+    val path = tmp()
+    // two commits written by the earlier layout: each data directory
+    // holds one leaf per hash prefix, and the manifest lists the leaves
+    def writeOld(df: org.apache.spark.sql.DataFrame, dir: String): Unit =
+      df.withColumn("_pfx", pmod(col("gh"), lit(2)).cast("string"))
+        .write.partitionBy("_pfx").parquet(s"$path/$dir")
+    val old1 = (0L until 6L).map(g => (g, 100L + g)).toDF("gh", "min_doc")
+    val old2 = Seq((0L, 90L), (2L, 300L)).toDF("gh", "min_doc")
+    writeOld(old1, "data-old1")
+    writeOld(old2, "data-old2")
+    new java.io.File(s"$path/manifest").mkdirs()
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$path/manifest/v00000001"),
+      ("#graft-index-manifest 1\nt 7\ne data-old1/_pfx=0\ne data-old1/_pfx=1\n" +
+        "e data-old2/_pfx=0\n#END\n").getBytes("UTF-8"))
+
+    val got = IndexStore.read(spark, path)
+    assert(got.columns.toSeq == Seq("gh", "min_doc"))
+    assert(rows(got) == rows(old1.union(old2)))
+    assert(IndexStore.hasTag(spark, path, "7"))
+    val st = IndexStore.stats(spark, path).get
+    assert(st.nDataLeaves == 3 && st.maxLeavesPerPrefix == 2 && st.nDirtyPrefixes == 1)
+
+    // a new-layout append lands next to the old leaves
+    val s3 = Seq((1L, 50L), (9L, 400L)).toDF("gh", "min_doc")
+    assert(IndexStore.append(s3, path, Some("8")))
+    assert(rows(IndexStore.read(spark, path)) == rows(old1.union(old2).union(s3)))
+
+    IndexStore.compact(spark, path,
+      _.groupBy(col("gh")).agg(min(col("min_doc")).as("min_doc")))
+    val after = IndexStore.liveEntries(spark, path)
+    assert(after.size == 1 && after.head.startsWith("data-") && !after.head.contains("/"))
+    val want = old1.union(old2).union(s3)
+      .groupBy(col("gh")).agg(min(col("min_doc")).as("min_doc"))
+    assert(rows(IndexStore.read(spark, path)) == rows(want))
+    assert(IndexStore.hasTag(spark, path, "7") && IndexStore.hasTag(spark, path, "8"))
+
+    // vacuum reclaims both earlier-layout directories, never the live one
+    IndexStore.vacuum(spark, path)
+    assert(!new java.io.File(s"$path/data-old1").exists() &&
+      !new java.io.File(s"$path/data-old2").exists())
+    assert(rows(IndexStore.read(spark, path)) == rows(want))
+  }
+
   test("an append landing MID-compaction is carried forward, not lost") {
     val path = tmp()
     val s1 = (0L until 8L).map(g => (g, 100L + g)).toDF("gh", "min_doc")
     val s2 = (0L until 8L).map(g => (g, 200L + g)).toDF("gh", "min_doc")
     val late = Seq((0L, 50L), (99L, 51L)).toDF("gh", "min_doc")
-    IndexStore.append(s1, path, pfx)
-    IndexStore.append(s2, path, pfx)
+    IndexStore.append(s1, path)
+    IndexStore.append(s2, path)
     // the transform hook runs after compaction snapshots its victims
     // and before its manifest commit — exactly the window the old
     // rename-swap maintenance lost appends in
-    IndexStore.compact(spark, path, pfx, { df =>
-      IndexStore.append(late, path, pfx, Some("late"))
+    IndexStore.compact(spark, path, { df =>
+      IndexStore.append(late, path, Some("late"))
       df.groupBy(col("gh")).agg(min(col("min_doc")).as("min_doc"))
-    }, parts = 4)
+    })
     val got = IndexStore.read(spark, path)
     // the late append survives un-compacted; the victims folded
     val want = s1.union(s2).groupBy(col("gh")).agg(min(col("min_doc")).as("min_doc"))
@@ -104,15 +153,13 @@ class IndexStoreSpec extends AnyFunSuite {
   test("a crashed compaction (or append) leaves the manifest pointing at the old files") {
     val path = tmp()
     val s1 = (0L until 8L).map(g => (g, 100L + g)).toDF("gh", "min_doc")
-    IndexStore.append(s1, path, pfx)
+    IndexStore.append(s1, path)
     val before = rows(IndexStore.read(spark, path))
     val entriesBefore = IndexStore.liveEntries(spark, path)
 
     // a compaction that died after its data rewrite but before its
     // manifest commit = an orphan data directory
-    Seq((0L, 1L)).toDF("gh", "min_doc")
-      .withColumn("_pfx", pfx.cast("string"))
-      .write.partitionBy("_pfx").parquet(s"$path/data-orphancrash")
+    Seq((0L, 1L)).toDF("gh", "min_doc").write.parquet(s"$path/data-orphancrash")
     assert(rows(IndexStore.read(spark, path)) == before)
     assert(IndexStore.liveEntries(spark, path) == entriesBefore)
 
@@ -120,11 +167,11 @@ class IndexStoreSpec extends AnyFunSuite {
     // no terminator: readers skip it, the next commit claims a
     // strictly higher version
     val burned = new java.io.FileOutputStream(s"$path/manifest/v00009999")
-    burned.write("#graft-index-manifest 1\ne data-orphancrash/_pfx=0\n".getBytes("UTF-8"))
+    burned.write("#graft-index-manifest 1\ne data-orphancrash\n".getBytes("UTF-8"))
     burned.close()
     assert(rows(IndexStore.read(spark, path)) == before)
     val s2 = Seq((1L, 7L)).toDF("gh", "min_doc")
-    IndexStore.append(s2, path, pfx)
+    IndexStore.append(s2, path)
     assert(rows(IndexStore.read(spark, path)) == before ++ rows(s2))
     assert(new java.io.File(s"$path/manifest").list()
       .exists(_ > "v00009999"), "the next commit claims a version above the burned one")
@@ -150,8 +197,8 @@ class IndexStoreSpec extends AnyFunSuite {
               .map(g => (g, (w * 100 + s * 10) + g)).toDF("gh", "min_doc")
             // replay every append once — exactly-once must hold under
             // interleaving with OTHER writers' commits in between
-            assert(IndexStore.append(shard, path, pfx, Some(s"w$w-s$s")))
-            assert(!IndexStore.append(shard, path, pfx, Some(s"w$w-s$s")))
+            assert(IndexStore.append(shard, path, Some(s"w$w-s$s")))
+            assert(!IndexStore.append(shard, path, Some(s"w$w-s$s")))
           }
         } catch { case t: Throwable => errors.add(t) }
       })
@@ -159,8 +206,8 @@ class IndexStoreSpec extends AnyFunSuite {
     val compactor = new Thread(() => {
       try {
         (0 until 3).foreach { _ =>
-          IndexStore.compact(spark, path, pfx,
-            _.groupBy(col("gh")).agg(min(col("min_doc")).as("min_doc")), parts = 4)
+          IndexStore.compact(spark, path,
+            _.groupBy(col("gh")).agg(min(col("min_doc")).as("min_doc")))
           // the index must be READABLE at every instant of maintenance
           IndexStore.read(spark, path).count()
         }
@@ -188,17 +235,19 @@ class IndexStoreSpec extends AnyFunSuite {
     val path = tmp()
     assert(IndexStore.stats(spark, path).isEmpty, "fresh path has no stats")
     val s1 = (0L until 16L).map(g => (g, 100L + g)).toDF("gh", "min_doc")
-    val s2 = Seq((0L, 90L), (1L, 91L)).toDF("gh", "min_doc") // prefixes 0,1 only
-    IndexStore.append(s1, path, pfx, Some("t1"))
+    val s2 = Seq((0L, 90L), (1L, 91L)).toDF("gh", "min_doc")
+    // the index is one group: nPrefixes is 1 once it holds data, and
+    // maxLeavesPerPrefix counts its data directories
+    IndexStore.append(s1, path, Some("t1"))
     val one = IndexStore.stats(spark, path).get
-    assert(one.nPrefixes == 4 && one.nDirtyPrefixes == 0 &&
+    assert(one.nPrefixes == 1 && one.nDirtyPrefixes == 0 &&
       one.maxLeavesPerPrefix == 1 && one.nTags == 1 && one.dirtyFraction == 0.0)
-    IndexStore.append(s2, path, pfx, Some("t2"))
+    IndexStore.append(s2, path, Some("t2"))
     val two = IndexStore.stats(spark, path).get
-    assert(two.nDataLeaves == 6 && two.nDirtyPrefixes == 2 &&
-      two.maxLeavesPerPrefix == 2 && two.dirtyFraction == 0.5 && two.nTags == 2)
-    IndexStore.compact(spark, path, pfx,
-      _.groupBy(col("gh")).agg(min(col("min_doc")).as("min_doc")), parts = 4)
+    assert(two.nDataLeaves == 2 && two.nDirtyPrefixes == 1 &&
+      two.maxLeavesPerPrefix == 2 && two.dirtyFraction == 1.0 && two.nTags == 2)
+    IndexStore.compact(spark, path,
+      _.groupBy(col("gh")).agg(min(col("min_doc")).as("min_doc")))
     val post = IndexStore.stats(spark, path).get
     assert(post.nDirtyPrefixes == 0 && post.maxLeavesPerPrefix == 1 &&
       post.nTags == 2, "compaction defragments but keeps the tag history")
@@ -212,8 +261,8 @@ class IndexStoreSpec extends AnyFunSuite {
     // lines and counting
     (0 until 20).foreach { b =>
       val shard = Seq((b.toLong, 100L + b)).toDF("gh", "min_doc")
-      assert(IndexStore.append(shard, path, pfx, Some(s"$b:codes")))
-      assert(IndexStore.append(shard, path, pfx, Some(s"$b:buckets")))
+      assert(IndexStore.append(shard, path, Some(s"$b:codes")))
+      assert(IndexStore.append(shard, path, Some(s"$b:buckets")))
     }
     IndexStore.retireTags(spark, path, keepLast = keep)
     val st = IndexStore.stats(spark, path).get
@@ -229,46 +278,45 @@ class IndexStoreSpec extends AnyFunSuite {
 
     // an IN-window replay skips via its verbatim tag
     val before = rows(IndexStore.read(spark, path))
-    assert(!IndexStore.append(Seq((99L, 1L)).toDF("gh", "min_doc"), path, pfx, Some("18:codes")))
+    assert(!IndexStore.append(Seq((99L, 1L)).toDF("gh", "min_doc"), path, Some("18:codes")))
     // an OUT-of-window replay of a retired batchId skips via the watermark
-    assert(!IndexStore.append(Seq((99L, 1L)).toDF("gh", "min_doc"), path, pfx, Some("3:buckets")))
+    assert(!IndexStore.append(Seq((99L, 1L)).toDF("gh", "min_doc"), path, Some("3:buckets")))
     assert(IndexStore.hasTag(spark, path, "3:buckets") && IndexStore.hasTag(spark, path, "18:codes"))
     assert(rows(IndexStore.read(spark, path)) == before, "replays must mutate nothing")
     // a genuinely NEW batch above the window still commits
-    assert(IndexStore.append(Seq((77L, 7L)).toDF("gh", "min_doc"), path, pfx, Some("20:codes")))
+    assert(IndexStore.append(Seq((77L, 7L)).toDF("gh", "min_doc"), path, Some("20:codes")))
 
     // non-numeric tags never retire
-    assert(IndexStore.append(Seq((78L, 8L)).toDF("gh", "min_doc"), path, pfx, Some("manual-backfill")))
+    assert(IndexStore.append(Seq((78L, 8L)).toDF("gh", "min_doc"), path, Some("manual-backfill")))
     IndexStore.retireTags(spark, path, keepLast = 0)
     assert(IndexStore.hasTag(spark, path, "manual-backfill"))
     // keepLast=0 retires everything numeric; watermark still covers them
-    assert(!IndexStore.append(Seq((99L, 1L)).toDF("gh", "min_doc"), path, pfx, Some("20:codes")))
+    assert(!IndexStore.append(Seq((99L, 1L)).toDF("gh", "min_doc"), path, Some("20:codes")))
     assert(IndexStore.stats(spark, path).get.nTags == 1)
 
     // compaction runs the checkpoint as part of maintenance
     val path2 = tmp()
     (0 until 10).foreach { b =>
       IndexStore.append(Seq((b.toLong % 4, b.toLong)).toDF("gh", "min_doc"),
-        path2, pfx, Some(b.toString))
+        path2, Some(b.toString))
     }
-    IndexStore.compact(spark, path2, pfx,
+    IndexStore.compact(spark, path2,
       _.groupBy(col("gh")).agg(min(col("min_doc")).as("min_doc")),
-      parts = 4, tagRetention = 2)
+      tagRetention = 2)
     val st2 = IndexStore.stats(spark, path2).get
     assert(st2.nTags == 2 && st2.nTagMarks == 1)
     assert(IndexStore.hasTag(spark, path2, "0") && IndexStore.hasTag(spark, path2, "9"))
   }
 
-  test("NULL layout keys land in the default partition and survive round trips") {
+  test("NULL keys survive append and compaction round trips") {
     val path = tmp()
     val s = Seq((Some("ab12"), 1L), (None, 2L), (None, 3L))
       .toDF("digest", "min_doc")
-    val dpfx = substring(col("digest"), 1, 1)
-    IndexStore.append(s, path, dpfx)
+    IndexStore.append(s, path)
     assert(rows(IndexStore.read(spark, path)) == rows(s))
-    IndexStore.append(s.withColumn("min_doc", col("min_doc") + 10), path, dpfx)
-    IndexStore.compact(spark, path, dpfx,
-      _.groupBy(col("digest")).agg(min(col("min_doc")).as("min_doc")), parts = 4)
+    IndexStore.append(s.withColumn("min_doc", col("min_doc") + 10), path)
+    IndexStore.compact(spark, path,
+      _.groupBy(col("digest")).agg(min(col("min_doc")).as("min_doc")))
     val want = s.union(s.withColumn("min_doc", col("min_doc") + 10))
       .groupBy(col("digest")).agg(min(col("min_doc")).as("min_doc"))
     assert(rows(IndexStore.read(spark, path)) == rows(want))
@@ -283,7 +331,7 @@ class IndexStoreSpec extends AnyFunSuite {
     // Per-path awaits (awaitFor) join only that path's appends.
     val path = tmp()
     val other = tmp()
-    IndexStore.append(Seq((1L, 10L)).toDF("gh", "min_doc"), path, pfx)
+    IndexStore.append(Seq((1L, 10L)).toDF("gh", "min_doc"), path)
     IndexStore.init(spark, other,
       Seq((0L, 0L)).toDF("gh", "min_doc").schema)
     val pinned = IndexStore.read(spark, path) // snapshot taken HERE
@@ -291,10 +339,10 @@ class IndexStoreSpec extends AnyFunSuite {
     val started = new java.util.concurrent.CountDownLatch(1)
     barrier.submitFor(path) {
       started.await()
-      IndexStore.append(Seq((2L, 20L)).toDF("gh", "min_doc"), path, pfx)
+      IndexStore.append(Seq((2L, 20L)).toDF("gh", "min_doc"), path)
     }
     barrier.submitFor(other) {
-      IndexStore.append(Seq((3L, 30L)).toDF("gh", "min_doc"), other, pfx)
+      IndexStore.append(Seq((3L, 30L)).toDF("gh", "min_doc"), other)
     }
     // awaitFor joins ONLY the named path's appends: `other` completes
     // here while `path`'s append is still gated on the latch

@@ -310,7 +310,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     val minBefore = IncrementalIndex.Digest.read(spark, path)
       .groupBy("digest").agg(min("min_doc").as("m"))
       .collect().map(_.toSeq).toSet
-    IncrementalIndex.Digest.compact(spark, path, parts = 1)
+    IncrementalIndex.Digest.compact(spark, path)
     val after = IncrementalIndex.Digest.read(spark, path)
     assert(after.groupBy("digest").agg(min("min_doc").as("m"))
       .collect().map(_.toSeq).toSet == minBefore)

@@ -2473,7 +2473,7 @@ class OpsSpec extends AnyFunSuite {
 
     // the root-path stats the maintenance scheduler keys on (the
     // compact() counterpart): both sub-stores summarized; build+append
-    // left each prefix group with two leaves → dirty until compaction
+    // left each store with two data directories → dirty until compaction
     assert(AnnIndex.stats(spark, path).exists(st =>
       st.pqCodes.nDataLeaves > 0 && st.lshBuckets.nDataLeaves > 0 &&
         st.dirtyFraction > 0.0))
@@ -2487,11 +2487,9 @@ class OpsSpec extends AnyFunSuite {
   test("index compaction: content-identical swap, fewer files, merged span minima") {
     graft.core.Tables.registerAll(spark, "/root/testdata/sf0.001")
     val docs = spark.table("documents").select(col("doc_id"), col("text"))
-    // live leaf directories per hash prefix — the manifest-committed
-    // layout's observable maintenance state
-    def leavesPerPfx(p: String) = IndexStore.liveEntries(spark, p)
-      .filter(_.contains("_pfx="))
-      .groupBy(e => e.substring(e.lastIndexOf('=') + 1)).view.mapValues(_.size).toMap
+    // live data directories — the manifest-committed layout's
+    // observable maintenance state
+    def dataDirs(p: String) = IndexStore.liveEntries(spark, p).count(_.startsWith("data-"))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
 
     // MinHash signature index: rows are load-bearing — layout only
@@ -2500,11 +2498,10 @@ class OpsSpec extends AnyFunSuite {
     Dedup.writeMinhashIndex(docs.where($"doc_id" > 20), "doc_id", "text", mh,
       append = true)
     val mhBefore = rows(IncrementalIndex.Minhash.read(spark, mh))
-    assert(leavesPerPfx(mh).values.exists(_ > 1), "two appends leave dirty prefixes")
-    IncrementalIndex.Minhash.compact(spark, mh, parts = 8)
+    assert(dataDirs(mh) > 1, "two appends leave two data directories")
+    IncrementalIndex.Minhash.compact(spark, mh)
     assert(rows(IncrementalIndex.Minhash.read(spark, mh)) == mhBefore)
-    assert(leavesPerPfx(mh).values.forall(_ == 1),
-      "every prefix holds ONE leaf after compaction")
+    assert(dataDirs(mh) == 1, "the index holds ONE data directory after compaction")
 
     // span-gram index: compaction also merges per-shard minima — the
     // read-time aggregate must see identical per-gram minima, one
@@ -2516,7 +2513,7 @@ class OpsSpec extends AnyFunSuite {
     val minBefore = IncrementalIndex.Span.read(spark, sg)
       .groupBy("gh").agg(min("min_doc").as("m"))
     val minMapBefore = rows(minBefore)
-    IncrementalIndex.Span.compact(spark, sg, parts = 1)
+    IncrementalIndex.Span.compact(spark, sg)
     val after = IncrementalIndex.Span.read(spark, sg)
     assert(rows(after.groupBy("gh").agg(min("min_doc").as("m"))) == minMapBefore)
     assert(after.count() == minMapBefore.size, "one row per gram after merge")
@@ -2533,13 +2530,12 @@ class OpsSpec extends AnyFunSuite {
     val lnBefore = IncrementalIndex.Line.read(spark, ln)
     val lnMinBefore = rows(lnBefore.groupBy("lh").agg(min("min_doc").as("m")))
     assert(lnBefore.count() > lnMinBefore.size, "the appends repeat line hashes")
-    assert(leavesPerPfx(ln).values.exists(_ > 1), "two appends leave dirty prefixes")
-    IncrementalIndex.Line.compact(spark, ln, parts = 1)
+    assert(dataDirs(ln) > 1, "two appends leave two data directories")
+    IncrementalIndex.Line.compact(spark, ln)
     val lnAfter = IncrementalIndex.Line.read(spark, ln)
     assert(rows(lnAfter.groupBy("lh").agg(min("min_doc").as("m"))) == lnMinBefore)
     assert(lnAfter.count() == lnMinBefore.size, "one row per line hash after merge")
-    assert(leavesPerPfx(ln).values.forall(_ == 1),
-      "every prefix holds ONE leaf after compaction")
+    assert(dataDirs(ln) == 1, "the index holds ONE data directory after compaction")
 
     // ANN index: serving bit-identical across the compaction swap
     graft.core.Tables.registerAll(spark, "/root/testdata/sf0.001")
@@ -2553,7 +2549,7 @@ class OpsSpec extends AnyFunSuite {
     val cb = AnnIndex.readPqCodebooks(spark, ann)
     val servedBefore = rows(Similarity.pqTopKEncoded(
       AnnIndex.readPqCodes(spark, ann), queries, "vec_id", "embedding", cb, k = 10))
-    AnnIndex.compact(spark, ann, parts = 1)
+    AnnIndex.compact(spark, ann)
     assert(rows(Similarity.pqTopKEncoded(
       AnnIndex.readPqCodes(spark, ann), queries, "vec_id", "embedding", cb,
       k = 10)) == servedBefore)

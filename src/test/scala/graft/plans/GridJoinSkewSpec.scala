@@ -27,18 +27,26 @@ class GridJoinSkewSpec extends AnyFunSuite {
   private val ColdRows = 30000L
   private val Factor = 16
 
-  lazy val spark: SparkSession = graft.core.Engine.prepare(SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "true")
-    // force the shuffle join path — at 100 TB neither side broadcasts
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32k")
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
-    .getOrCreate())
+  // the suite's SQL confs live on a child session: `getOrCreate` would
+  // apply them to the session every suite shares
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+      .newSession()
+    Seq(
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.adaptive.enabled" -> "true",
+      // force the shuffle join path — at 100 TB neither side broadcasts
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16k"
+    ).foreach { case (k, v) => s.conf.set(k, v) }
+    graft.core.Engine.prepare(s)
+  }
 
   /** Probe side: HotRows points inside grid cell (0,0), ColdRows spread
     * over ~37 distant cells. Deterministic column arithmetic only.
@@ -143,6 +151,8 @@ class GridJoinSkewSpec extends AnyFunSuite {
 
   test("salted grid join bounds per-task load with AQE off entirely") {
     probe; matched
+    val prev = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+      .map(k => k -> spark.conf.get(k))
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     try {
@@ -181,9 +191,6 @@ class GridJoinSkewSpec extends AnyFunSuite {
       assert(maxTask < HotRows / 4,
         s"salting did not bound the hot reducer: max task reads $maxTask records " +
           s"(expected ~${HotRows / Factor}, profile: ${taskRecords.sortBy(-_).take(8).mkString(",")})")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-    }
+    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 }

@@ -130,6 +130,20 @@ class RuntimeSpec extends AnyFunSuite {
     sess.close()
   }
 
+  test("pipeline session: a duckdb override resolves on a fresh child session") {
+    // a child session starts with an empty temp-function registry and
+    // no extra optimizer rules: `list_sum` resolves, and spatial
+    // pipelines plan as grid joins, only because the constructor
+    // prepared the session
+    val fresh = spark.newSession()
+    val sess = new PipelineSession(fresh, debounceMs = 10)
+    assert(fresh.experimental.extraOptimizations.contains(graft.plans.GridJoinRule))
+    sess.sqlDialect = "duckdb"
+    sess.update(sqlOverride = Some("SELECT list_sum([1, 2, 3]) AS s"))
+    assert(sess.executeNow().get.head().getLong(0) == 6L)
+    sess.close()
+  }
+
   test("pipeline session: sqlOverride replaces compiled SQL") {
     val sess = new PipelineSession(spark, debounceMs = 10)
     sess.update(
