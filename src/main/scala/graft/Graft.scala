@@ -49,7 +49,7 @@ final class Graft(val spark: SparkSession, stateDir: String) {
       baseDir: String,
       keys: Seq[String],
       bbox: Option[Ingest.BBox] = None,
-      limit: Option[Int] = Some(33000)): Map[String, Ingest.LoadResult] =
+      limit: Option[Int] = Some(Ingest.AreaLimit)): Map[String, Ingest.LoadResult] =
     keys.map { key =>
       val res = Ingest.loadTheme(spark, baseDir, key, bbox, limit)
       if (ThemeMeta.themeMeta.get(key).exists(_.searchable))

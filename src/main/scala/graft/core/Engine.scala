@@ -34,18 +34,30 @@ object Engine {
   private def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors())
 
-  /** Register graft SQL functions + the grid-join optimizer rule on
-    * any session, including one built outside [[session]]. Idempotent.
+  /** Sessions [[prepare]] has run on, held weakly so a dropped session
+    * can still be collected. `SparkSession` keeps object identity for
+    * equality, so a `newSession()` child is a different key and is
+    * prepared on its own.
     */
-  def prepare(spark: SparkSession): SparkSession = {
-    graft.geo.GeoFunctions.register(spark)
-    graft.functions.TextExpressions.register(spark)
-    graft.functions.DuckFunctions.register(spark)
-    // the one registration of the grid-join rewrite: every spatial
-    // join (compiled pipelines and pasted SQL alike) relies on it
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.GridJoinRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.GridJoinRule
+  private val prepared = new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
+
+  /** Register graft SQL functions and the engine's optimizer rules
+    * ([[graft.plans.GridJoinRule]], [[graft.plans.LocalUnionRule]]) on
+    * any session, including one built outside [[session]]. Runs once
+    * per session; later calls return at once.
+    */
+  def prepare(spark: SparkSession): SparkSession = prepared.synchronized {
+    if (!prepared.containsKey(spark)) {
+      graft.geo.GeoFunctions.register(spark)
+      graft.functions.TextExpressions.register(spark)
+      graft.functions.DuckFunctions.register(spark)
+      // the one registration of the grid-join rewrite: every spatial
+      // join (compiled pipelines and pasted SQL alike) relies on it
+      val rules = Seq(graft.plans.GridJoinRule, graft.plans.LocalUnionRule)
+        .filterNot(spark.experimental.extraOptimizations.contains)
+      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations ++ rules
+      prepared.put(spark, java.lang.Boolean.TRUE)
+    }
     spark
   }
 }

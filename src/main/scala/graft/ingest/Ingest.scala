@@ -1,12 +1,21 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.storage.StorageLevel
 import graft.model.ThemeMeta
 
 /** Theme ingestion: file discovery → spatial file pruning → canonical
   * projection with bbox pushdown → bounded materialization → view
   * registration.
+  *
+  * Materialization is a size decision, not a mode: a load capped at
+  * [[AreaLimit]] rows or fewer is collected once into a driver-held
+  * `LocalRelation`, so Catalyst folds the projections, filters and
+  * limits of later edits over it on the driver with no Spark job (the
+  * reference serves each interaction from small in-process per-theme
+  * tables). An uncapped or larger load stays distributed and is
+  * persisted (`MEMORY_AND_DISK`).
   *
   * Spark-first re-expression of the reference's loadTheme
   * (/root/reference/src/lib/themes.js:204-410): the reference's 3-file
@@ -27,20 +36,26 @@ object Ingest {
 
   final case class BBox(xmin: Double, ymin: Double, xmax: Double, ymax: Double)
 
+  /** The app's per-theme area cap: the most rows an area load keeps
+    * (the default of [[graft.Graft.loadArea]]). A load capped at or
+    * below it is held on the driver.
+    */
+  val AreaLimit = 33000
+
   /** Load one theme into a canonical cached view.
     *
     * @param baseDir directory containing `<theme_type>/` parquet datasets
     * @param key     theme/type key, e.g. "places/place"
     * @param bbox    optional spatial window (file-pruned + pushed down)
-    * @param limit   optional max rows to materialize
+    * @param limit   optional max rows to materialize; at most
+    *                [[AreaLimit]] keeps the rows on the driver
     */
   def loadTheme(
       spark: SparkSession,
       baseDir: String,
       key: String,
       bbox: Option[BBox] = None,
-      limit: Option[Int] = None,
-      persist: Boolean = true): LoadResult = {
+      limit: Option[Int] = None): LoadResult = {
     val t0 = System.nanoTime()
     graft.core.Engine.prepare(spark)
     val table = ThemeMeta.tableName(key)
@@ -68,10 +83,14 @@ object Ingest {
     val projected = filtered.selectExpr(CacheSelect.buildCacheSelect(cols, key): _*)
     val bounded = limit.map(projected.limit).getOrElse(projected)
 
-    // 4. materialize + register (S4)
-    val cached = if (persist) bounded.persist(StorageLevel.MEMORY_AND_DISK) else bounded
+    // 4. materialize + register (S4): capped → driver rows, else persisted
+    val (cached, rowCount) =
+      if (limit.exists(_ <= AreaLimit)) DatasetBridge.collectToLocal(bounded)
+      else {
+        val p = bounded.persist(StorageLevel.MEMORY_AND_DISK)
+        (p, p.count())
+      }
     cached.createOrReplaceTempView(table)
-    val rowCount = cached.count()
     LoadResult(table, cached, rowCount, allPaths.length, paths.length,
       (System.nanoTime() - t0) / 1000000)
   }

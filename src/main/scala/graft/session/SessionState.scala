@@ -40,36 +40,18 @@ final class SessionState(spark: SparkSession, dir: String) {
     val files = Option(d.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
     files.flatMap { f =>
-      try {
-        val reader = org.apache.parquet.hadoop.ParquetReader
-          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-            new org.apache.hadoop.fs.Path(f.getPath))
-          .withConf(new org.apache.hadoop.conf.Configuration())
-          .build()
-        try Iterator.continually(reader.read()).takeWhile(_ != null).flatMap { g =>
-          // optional fields: a missing key/val is an unusable row
-          if (g.getFieldRepetitionCount("key") > 0 && g.getFieldRepetitionCount("val") > 0)
-            Some(g.getString("key", 0) -> g.getString("val", 0))
-          else None
-        }.toList
-        finally reader.close()
+      try DriverParquet.read(f.getPath).flatMap { g =>
+        // optional fields: a missing key/val is an unusable row
+        if (g.getFieldRepetitionCount("key") > 0 && g.getFieldRepetitionCount("val") > 0)
+          Some(g.getString("key", 0) -> g.getString("val", 0))
+        else None
       } catch { case _: Exception => Nil }
     }.toMap
   }
 
-  private def writeFile(target: java.io.File, entries: Seq[(String, String)]): Unit = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(s"${target.getPath}/part-00000.parquet"))
-      .withConf(conf).withType(schema).build()
-    val gf = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
-    try entries.foreach { case (k, v) =>
-      val g = gf.newGroup()
-      g.append("key", k)
-      g.append("val", v)
-      w.write(g)
-    } finally w.close()
-  }
+  private def writeFile(target: java.io.File, entries: Seq[(String, String)]): Unit =
+    DriverParquet.write(s"${target.getPath}/part-00000.parquet", schema,
+      entries.map { case (k, v) => Seq("key" -> k, "val" -> v) })
 
   /** Write-new + swap: the live dir is renamed aside (not deleted)
     * before the new dir is renamed in, so a crash or failed rename at

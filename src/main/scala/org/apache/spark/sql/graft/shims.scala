@@ -27,6 +27,24 @@ object DatasetBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Collect `df` once, as `Dataset.collect` does (one SQL execution,
+    * internal rows, no conversion to external `Row`s), and return a
+    * DataFrame over a `LocalRelation` of those rows: a plan held on
+    * the driver, whose projections, filters and limits Catalyst folds
+    * without scheduling a job. Returns the DataFrame and its row count.
+    */
+  def collectToLocal(df: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, Long) = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+    val qe = ds.queryExecution
+    val rows = org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan.executeCollect()
+    }
+    val local = org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      qe.analyzed.output.map(_.newInstance()), rows.toSeq)
+    (org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, local), rows.length.toLong)
+  }
+
   /** Eager local checkpoint that PRESERVES the child's physical
     * output partitioning (and ordering) in the resulting LogicalRDD —
     * `Dataset.localCheckpoint` pins `UnknownPartitioning`, so a table

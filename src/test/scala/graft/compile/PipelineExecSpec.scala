@@ -18,12 +18,13 @@ class PipelineExecSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
-    val dir = java.nio.file.Files.createTempDirectory("graft_pipe").toString
     OvertureFixtures.write(s, dir, n = 120, files = 2)
     Ingest.loadTheme(s, dir, "places/place")
     Ingest.loadTheme(s, dir, "buildings/building")
     s
   }
+
+  private lazy val dir = java.nio.file.Files.createTempDirectory("graft_pipe").toString
 
   private def node(
       id: String = "p1", nodeType: String = "source", op: String = "",
@@ -95,5 +96,40 @@ class PipelineExecSpec extends AnyFunSuite {
     val sql = compile(Seq(node()), Options(limit = 3000))
     val edited = sql.replace("LIMIT 3000", "LIMIT 7")
     assert(spark.sql(edited).count() == 7)
+  }
+
+  test("intersect and exclude over capped (driver-held) loads still plan grid joins") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    val filters = Seq(
+      node(id = "p2", nodeType = "combine", op = "intersect",
+        table = "buildings_building", key = "buildings/building"),
+      node(id = "p2", nodeType = "combine", op = "exclude",
+        table = "buildings_building", key = "buildings/building",
+        distance = Some(27830.0)))
+    def ids(f: PipelineNode) = PipelineCompiler.run(spark, Seq(node(), f))
+      .select("id", "_source").collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    val persisted = filters.map(ids)
+    val keys = Seq("places/place", "buildings/building")
+    try {
+      keys.foreach(k => Ingest.loadTheme(spark, dir, k, limit = Some(Ingest.AreaLimit)))
+      assert(spark.table("places_place").queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      filters.zip(persisted).foreach { case (f, expected) =>
+        val df = PipelineCompiler.run(spark, Seq(node(), f))
+        val got = df.select("id", "_source").collect()
+          .map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+        assert(got == expected, s"${f.op}: capped and persisted loads disagree")
+        val optimized = df.queryExecution.optimizedPlan.toString
+        assert(optimized.contains("_graft_gx") && optimized.contains("_graft_gy"),
+          s"${f.op}: GridJoinRule did not fire:\n$optimized")
+        val plan = df.queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+        assert(plan.collectWithSubqueries { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
+          s"${f.op}: nested-loop join planned:\n$plan")
+      }
+    } finally keys.foreach(k => Ingest.loadTheme(spark, dir, k))
   }
 }

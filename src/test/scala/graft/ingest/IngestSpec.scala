@@ -59,6 +59,23 @@ class IngestSpec extends AnyFunSuite {
     Ingest.dropTheme(spark, "buildings/building")
   }
 
+  test("a load capped at the area limit is driver-held; a larger or uncapped one is persisted") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def optimized(t: String) = spark.table(t).queryExecution.optimizedPlan
+    val capped = Ingest.loadTheme(spark, fixtureDir, "places/place", limit = Some(Ingest.AreaLimit))
+    assert(optimized("places_place").isInstanceOf[LocalRelation], optimized("places_place"))
+    assert(capped.rowCount == 200)
+    val cappedIds = spark.table("places_place").select("id").collect().map(_.getString(0)).sorted
+    Ingest.loadTheme(spark, fixtureDir, "places/place")
+    assert(optimized("places_place").isInstanceOf[InMemoryRelation], optimized("places_place"))
+    assert(spark.table("places_place").select("id").collect().map(_.getString(0)).sorted
+      .sameElements(cappedIds))
+    Ingest.loadTheme(spark, fixtureDir, "places/place", limit = Some(Ingest.AreaLimit + 1))
+    assert(optimized("places_place").isInstanceOf[InMemoryRelation], optimized("places_place"))
+    Ingest.dropTheme(spark, "places/place")
+  }
+
   test("footer bbox manifest matches data") {
     val paths = FileIndex.listParquet(s"$fixtureDir/places_place")
     val manifest = FileIndex.build(spark, paths)

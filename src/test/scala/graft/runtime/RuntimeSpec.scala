@@ -65,6 +65,41 @@ class RuntimeSpec extends AnyFunSuite {
     assert(df.columns.contains("ts"))
   }
 
+  test("load history: a driver-side append reads back with rows Spark wrote earlier") {
+    import org.apache.spark.sql.functions.current_timestamp
+    import org.apache.spark.sql.types.TimestampType
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_hist_mixed").toString
+    // a row as earlier versions wrote it: a Spark parquet job, whose
+    // default timestamp type is INT96
+    Seq(LoadHistory.Entry("places/place", "old", "", 33000, cached = false, 60, 2, 123)).toDF()
+      .withColumn("ts", current_timestamp())
+      .write.mode("append").parquet(s"$dir/_load_history")
+    LoadHistory.append(spark, dir, LoadHistory.Entry(
+      "buildings/building", "new", "[-2,-1,2,1]", 500, cached = true, 10, 1, 45))
+    val df = LoadHistory.read(spark, dir)
+    assert(df.schema("ts").dataType == TimestampType)
+    val rows = df.orderBy("release").collect()
+    assert(rows.map(_.getAs[String]("release")).toSeq == Seq("new", "old"))
+    assert(rows.map(_.getAs[Long]("row_count")).toSeq == Seq(10L, 60L))
+    assert(rows.head.getAs[Boolean]("cached") && rows.head.getAs[Long]("lim") == 500L)
+    // both stamps are real times, a few minutes apart at most
+    val ts = rows.map(_.getAs[java.sql.Timestamp]("ts").getTime)
+    assert(ts.forall(_ > 0) && math.abs(ts(0) - ts(1)) < 600000L)
+    // the appended file is the driver writer's: INT64 TIMESTAMP(MICROS, UTC)
+    val appended = new java.io.File(s"$dir/_load_history").listFiles().toSeq
+      .map(_.getPath).filter(_.endsWith(".parquet"))
+      .filterNot { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f), new org.apache.hadoop.conf.Configuration()))
+        try r.getFooter.getFileMetaData.getSchema.getType(Seq("ts"): _*).asPrimitiveType
+          .getPrimitiveTypeName.name == "INT96"
+        finally r.close()
+      }
+    assert(appended.size == 1)
+  }
+
   test("query runner records ring with preview, duration, errors") {
     val r = new QueryRunner
     val out = r.run("q1", "SELECT 1")(42)
