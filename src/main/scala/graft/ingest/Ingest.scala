@@ -70,8 +70,10 @@ object Ingest {
       case None => allPaths
     }
 
-    // 2. schema peek (footer-only) drives the adaptive projection (S2)
-    val src = spark.read.parquet(paths: _*)
+    // 2. schema peek drives the adaptive projection (S2): one footer
+    // read on the driver, as Spark's inference reads the first file,
+    // but without its one-task job
+    val src = spark.read.schema(FileIndex.sparkSchema(spark, paths.head)).parquet(paths: _*)
     val cols = src.schema.fieldNames.toSet
 
     // 3. bbox predicate pushed into the scan (R2) + canonical projection (R3)

@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Manifest-committed storage for the persisted-index families (listed
   * in [[IncrementalIndex]]) and the ANN index tables. The index directory is
@@ -314,7 +312,7 @@ object IndexStore {
     val hasRows = fs.listStatus(dir).iterator
       .filter(_.getPath.getName.startsWith("part-"))
       .exists { st =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        val reader = graft.ingest.FileIndex.open(st.getPath, conf)
         try reader.getRecordCount > 0 finally reader.close()
       }
     if (hasRows) Some(name) else { fs.delete(dir, true); None }

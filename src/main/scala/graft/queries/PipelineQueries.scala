@@ -284,7 +284,7 @@ object PipelineQueries {
     // S10: session KV round-trip (deterministic output, VALUES oracle).
     Q("s10_session_kv",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_skv").toString
+        val tmp = graft.ops.TableWrite.scratchDir("graft_skv")
         val st = new graft.session.SessionState(s, tmp)
         st.set("pipelineSearch", "cafe")
         st.set("pipelineLimit", "5000")
@@ -307,7 +307,7 @@ object PipelineQueries {
     // exercised.
     Q("s9_load_history",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_lh").toString
+        val tmp = graft.ops.TableWrite.scratchDir("graft_lh")
         graft.session.LoadHistory.append(s, tmp, graft.session.LoadHistory.Entry(
           "places/place", "local", "[-4,-2,4,2]", 33000, cached = false, 100, 4, 42))
         graft.session.LoadHistory.read(s, tmp)

@@ -68,7 +68,7 @@ object StreamGate {
       docsWeb.where(col("doc_id") >= lo && col("doc_id") < hi)
     }
 
-    val base = java.nio.file.Files.createTempDirectory("graft_streamgate").toString
+    val base = graft.ops.TableWrite.scratchDir("graft_streamgate")
     val srcDir = s"$base/src"
     new java.io.File(srcDir).mkdirs()
     (0 until nBatches).foreach { i =>

@@ -45,6 +45,31 @@ object DatasetBridge {
     (org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, local), rows.length.toLong)
   }
 
+  /** The driver-held rows of `df`: its optimized plan when that is a
+    * batch `LocalRelation` (a local relation with its projections and
+    * filters folded by `ConvertToLocalRelation`), else None.
+    */
+  def localRelation(df: org.apache.spark.sql.DataFrame)
+      : Option[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+      .queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation if !l.isStreaming => Some(l)
+      case _ => None
+    }
+
+  /** `df`, a projection over a local relation, folded into one local
+    * relation by the optimizer's own `ConvertToLocalRelation` rule,
+    * without running the rest of the optimizer; `df` itself when its
+    * analyzed plan does not fold.
+    */
+  def foldLocal(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+    org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation(ds.queryExecution.analyzed) match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => ofRows(ds.sparkSession, l)
+      case _ => df
+    }
+  }
+
   /** Eager local checkpoint that PRESERVES the child's physical
     * output partitioning (and ordering) in the resulting LogicalRDD —
     * `Dataset.localCheckpoint` pins `UnknownPartitioning`, so a table

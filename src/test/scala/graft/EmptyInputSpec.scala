@@ -28,7 +28,7 @@ class EmptyInputSpec extends AnyFunSuite {
     * expects).
     */
   private def truncatedDir(rows: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_rows$rows").toString
+    val dir = graft.TempDir(s"graft_rows$rows").toString
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.core.Tables.all.foreach { t =>
       val src = s"/root/testdata/sf0.001/$t.parquet"

@@ -24,7 +24,7 @@ class FacadeSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private lazy val g = new Graft(spark,
-    java.nio.file.Files.createTempDirectory("facade_state").toString)
+    graft.TempDir("facade_state").toString)
 
   private def documents: DataFrame = {
     graft.core.Tables.registerAll(spark, dir)
@@ -57,7 +57,7 @@ class FacadeSpec extends AnyFunSuite {
     Pin("repetitionStats", "text_repetition", drops = false,
       d => g.repetitionStats(d).select(col("doc_id"), col("rep_stats.*"))),
     Pin("writeShards", "sample_shard_snake", drops = false, { d =>
-      val out = java.nio.file.Files.createTempDirectory("facade_shards").toString
+      val out = graft.TempDir("facade_shards").toString
       g.writeShards(d, out, "n_chars", nShards = 4, bandWidth = 16)
       spark.read.parquet(out)
     }))
@@ -83,7 +83,7 @@ class FacadeSpec extends AnyFunSuite {
   }
 
   private lazy val places: DataFrame = {
-    val area = java.nio.file.Files.createTempDirectory("facade_area").toString
+    val area = graft.TempDir("facade_area").toString
     OvertureFixtures.write(spark, area, n = 150, files = 3)
     g.loadArea(area, Seq("places/place"))
     spark.table("places_place")
@@ -93,7 +93,7 @@ class FacadeSpec extends AnyFunSuite {
     val want = rows(places)
     assert(want.nonEmpty)
     Seq(None, Some(4)).foreach { z =>
-      val out = java.nio.file.Files.createTempDirectory("facade_export").toString
+      val out = graft.TempDir("facade_export").toString
       g.exportTable("places_place", out, zorderPartitions = z)
       assert(rowsLike(spark.read.parquet(out), places) == want, s"zorderPartitions = $z")
     }
@@ -114,7 +114,7 @@ class FacadeSpec extends AnyFunSuite {
     val fresh = spark.newSession()
     assert(!fresh.catalog.functionExists("list_sum"))
     val v = new Graft(fresh,
-      java.nio.file.Files.createTempDirectory("facade_fresh").toString)
+      graft.TempDir("facade_fresh").toString)
       .duckSql("SELECT list_sum([1, 2, 3])").head().getAs[Number](0)
     assert(v.longValue == 6L)
   }

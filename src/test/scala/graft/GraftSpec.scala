@@ -19,9 +19,9 @@ class GraftSpec extends AnyFunSuite {
     .getOrCreate()
 
   private lazy val (dataDir, g) = {
-    val dd = java.nio.file.Files.createTempDirectory("graft_area").toString
+    val dd = graft.TempDir("graft_area").toString
     OvertureFixtures.write(spark, dd, n = 150, files = 3)
-    val sd = java.nio.file.Files.createTempDirectory("graft_state").toString
+    val sd = graft.TempDir("graft_state").toString
     (dd, new Graft(spark, sd))
   }
 
@@ -100,7 +100,7 @@ class GraftSpec extends AnyFunSuite {
       (3L, "completely different text about spark engines", "a"),
       (4L, "the quick brown fox jumps over the lazy dog", "b"), // dups 1 across shards
       (5L, "a genuinely novel document with fresh words", "b")).toDF("doc_id", "text", "source")
-    val idx = java.nio.file.Files.createTempDirectory("graft_facade_idx").toString
+    val idx = graft.TempDir("graft_facade_idx").toString
     Dedup.writeMinhashIndex(docs.where($"doc_id" <= 3), "doc_id", "text", idx)
     val kept = Dedup.dedupIncrement(docs.where($"doc_id" > 3), "doc_id", "text", idx,
         threshold = 0.25)
@@ -110,7 +110,7 @@ class GraftSpec extends AnyFunSuite {
     val vecs = (0L until 24L).map { i =>
       val arr = Array.fill(64)(0.01f); arr((i % 4).toInt * 16) = 1.0f; (i, arr)
     }.toDF("vec_id", "embedding")
-    val annDir = java.nio.file.Files.createTempDirectory("graft_facade_ann").toString
+    val annDir = graft.TempDir("graft_facade_ann").toString
     AnnIndex.build(vecs, "vec_id", "embedding", annDir, dims = 64, ivfK = 4, pqM = 4, pqK = 4)
     val q = vecs.limit(2)
     val pq = Similarity.pqTopKEncoded(
@@ -127,7 +127,7 @@ class GraftSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, length}
     val docs = (1 to 40).map(i => (i.toLong, "x" * (i % 7 + 1))).toDF("doc_id", "text")
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val out = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val out = graft.TempDir("graft_shards").toString
     g.writeShards(docs, out, "n_chars", nShards = 4)
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
       .map(_.getName).filter(_.startsWith("shard=")).sorted

@@ -699,7 +699,7 @@ class DuckSqlShimSpec extends AnyFunSuite {
   test("dynamic PIVOT (no IN list) through the data-aware resolver") {
     import spark.implicits._
     val g = new graft.Graft(spark,
-      java.nio.file.Files.createTempDirectory("shim_dynpv").toString)
+      graft.TempDir("shim_dynpv").toString)
     // string pivot column; NULL pivot values are excluded, columns
     // come out sorted by value (all DuckDB-1.0-verified)
     Seq(("x", Option("b"), 1), ("x", Option("a"), 2), ("y", Option("a"), 3),

@@ -24,7 +24,7 @@ class PipelineExecSpec extends AnyFunSuite {
     s
   }
 
-  private lazy val dir = java.nio.file.Files.createTempDirectory("graft_pipe").toString
+  private lazy val dir = graft.TempDir("graft_pipe").toString
 
   private def node(
       id: String = "p1", nodeType: String = "source", op: String = "",

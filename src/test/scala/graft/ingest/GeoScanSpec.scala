@@ -23,7 +23,7 @@ class GeoScanSpec extends AnyFunSuite {
 
   /** 4 parquet files, each covering its own 10-wide x-band. */
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("geoscan").toFile
+    val d = graft.TempDir("geoscan").toFile
     d.deleteOnExit()
     (0 until 4).foreach { band =>
       val rows = (0 until 25).map { i =>
@@ -87,7 +87,7 @@ class GeoScanSpec extends AnyFunSuite {
   }
 
   test("refresh() picks up appended files") {
-    val d = java.nio.file.Files.createTempDirectory("geoscan_r").toFile
+    val d = graft.TempDir("geoscan_r").toFile
     d.deleteOnExit()
     def writeBand(band: Int): Unit =
       (0 until 10).map(i => (band * 100L + i, band * 10.0 + i * 0.9, 1.0))

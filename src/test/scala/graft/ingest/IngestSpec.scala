@@ -13,7 +13,7 @@ class IngestSpec extends AnyFunSuite {
     .getOrCreate()
 
   private lazy val fixtureDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_overture").toString
+    val dir = graft.TempDir("graft_overture").toString
     OvertureFixtures.write(spark, dir, n = 200, files = 4)
     dir
   }
@@ -76,6 +76,26 @@ class IngestSpec extends AnyFunSuite {
     Ingest.dropTheme(spark, "places/place")
   }
 
+  test("the load schema is read from one footer, as Spark's inference reads it") {
+    def sameAsInferred(paths: Seq[String]): Unit = {
+      // the footer keeps the file's non-null fields; a file relation
+      // reads every field as nullable, given or inferred
+      val footer = FileIndex.sparkSchema(spark, paths.head)
+      assert(spark.read.schema(footer).parquet(paths: _*).schema ==
+        spark.read.parquet(paths: _*).schema)
+    }
+    // files Spark wrote: the schema comes from the footer's row metadata
+    sameAsInferred(FileIndex.listParquet(s"$fixtureDir/places_place"))
+    // a file parquet-hadoop wrote on the driver, without Spark metadata:
+    // the parquet schema is converted under the session's conf
+    val hist = graft.TempDir("graft_schema_hist").toString
+    graft.session.LoadHistory.append(spark, hist, graft.session.LoadHistory.Entry(
+      "places/place", "local", "[-4,-2,4,2]", 33000, cached = false, 100, 4, 42))
+    val files = FileIndex.listParquet(s"$hist/_load_history")
+    assert(files.size == 1)
+    sameAsInferred(files)
+  }
+
   test("footer bbox manifest matches data") {
     val paths = FileIndex.listParquet(s"$fixtureDir/places_place")
     val manifest = FileIndex.build(spark, paths)
@@ -108,7 +128,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("exportTheme with z-order clustering writes spatially tight files") {
     Ingest.loadTheme(spark, fixtureDir, "places/place")
-    val out = java.nio.file.Files.createTempDirectory("graft_export").toString
+    val out = graft.TempDir("graft_export").toString
     Ingest.exportTheme(spark, "places_place", out, zorderPartitions = Some(4))
     val files = FileIndex.listParquet(out)
     assert(files.size == 4)

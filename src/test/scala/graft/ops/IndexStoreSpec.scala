@@ -21,7 +21,7 @@ class IndexStoreSpec extends AnyFunSuite {
 
   import spark.implicits._
 
-  private def tmp() = java.nio.file.Files.createTempDirectory("graft_idx").toString
+  private def tmp() = graft.TempDir("graft_idx").toString
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).toSet

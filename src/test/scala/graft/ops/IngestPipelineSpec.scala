@@ -55,7 +55,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     val bench = Seq((100L, s"$benchGram ${uniq(100, 10)}", "b"))
       .toDF("doc_id", "text", "source")
 
-    val base = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    val base = graft.TempDir("graft_ingest").toString
     def run(shard: org.apache.spark.sql.DataFrame) =
       IngestPipeline.ingestShard(shard, bench,
         s"$base/digest", s"$base/minhash", s"$base/span",
@@ -117,7 +117,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     val bench = Seq((100L, s"$benchGram ${uniq(100, 10)}", "b"))
       .toDF("doc_id", "text", "source")
 
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_ingstr").toString
+    val srcDir = graft.TempDir("graft_ingstr").toString
     Seq(shard1 -> "b1", shard2 -> "b2").foreach { case (df, name) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/_stage_$name")
       val part = new java.io.File(s"$srcDir/_stage_$name").listFiles()
@@ -128,7 +128,7 @@ class IngestPipelineSpec extends AnyFunSuite {
         java.nio.file.attribute.FileTime.fromMillis(
           1000000000000L + (if (name == "b1") 0 else 60000L)))
     }
-    val base = java.nio.file.Files.createTempDirectory("graft_ingstr_state").toString
+    val base = graft.TempDir("graft_ingstr_state").toString
     val q = graft.streaming.CurationStreams.startIngestPipelineStream(
       spark, srcDir, bench, s"$base/digest", s"$base/minhash", s"$base/span",
       s"$base/out", s"$base/cp", shard1.schema,
@@ -185,7 +185,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     ).toDF("doc_id", "html", "url", "source")
     val bench = Seq((100L, uniq(100, 10), "b")).toDF("doc_id", "text", "source")
 
-    val base = java.nio.file.Files.createTempDirectory("graft_ingweb").toString
+    val base = graft.TempDir("graft_ingweb").toString
     def run(shard: org.apache.spark.sql.DataFrame) =
       IngestPipeline.ingestShard(shard, bench,
         s"$base/digest", s"$base/minhash", s"$base/span",
@@ -227,7 +227,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     ).map(_.toDF("doc_id", "text", "source"))
     val bench = Seq((100L, "eval leak gram " + uniq(100, 10), "b"))
       .toDF("doc_id", "text", "source")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_maint_src").toString
+    val srcDir = graft.TempDir("graft_maint_src").toString
     shards.zipWithIndex.foreach { case (df, i) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/_stage_$i")
       val part = new java.io.File(s"$srcDir/_stage_$i").listFiles()
@@ -237,7 +237,7 @@ class IngestPipelineSpec extends AnyFunSuite {
       java.nio.file.Files.setLastModifiedTime(dest,
         java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
-    val base = java.nio.file.Files.createTempDirectory("graft_maint").toString
+    val base = graft.TempDir("graft_maint").toString
     val reports = scala.collection.mutable.ArrayBuffer[Seq[IngestPipeline.MaintenanceReport]]()
     def start(cp: String, out: String) =
       graft.streaming.CurationStreams.startIngestPipelineStream(
@@ -291,7 +291,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     val old = docs.where($"doc_id" <= 10)
     val inc = docs.where($"doc_id" > 10)
-    val path = java.nio.file.Files.createTempDirectory("graft_dgidx").toString
+    val path = graft.TempDir("graft_dgidx").toString
     Dedup.writeDigestIndex(old, "doc_id", "text", path)
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id").collect().map(_.getLong(0)).toSet
@@ -327,7 +327,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     val shard = Seq((1L, uniq(1, 30), "s"), (2L, uniq(2, 30), "s"))
       .toDF("doc_id", "text", "source")
     val bench = Seq((100L, "b")).toDF("doc_id", "source")
-    val base = java.nio.file.Files.createTempDirectory("graft_bloom_fail").toString
+    val base = graft.TempDir("graft_bloom_fail").toString
     val e = intercept[org.apache.spark.sql.AnalysisException](
       IngestPipeline.ingestShard(shard, bench,
         s"$base/digest", s"$base/minhash", s"$base/span").collect())
@@ -337,7 +337,7 @@ class IngestPipelineSpec extends AnyFunSuite {
   test("maintainIndexes rejects an unknown family before touching any manifest") {
     val docs = Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"))
       .toDF("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory("graft_maint_bad").toString
+    val base = graft.TempDir("graft_maint_bad").toString
     // tagged commits: with zero retention a maintenance pass would
     // retire the tags into a watermark, committing a new version
     Dedup.writeDigestIndex(docs, "doc_id", "text", s"$base/digest", commitTag = Some("7"))

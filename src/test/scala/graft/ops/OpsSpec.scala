@@ -40,7 +40,7 @@ class OpsSpec extends AnyFunSuite {
         Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16, bands = 4, n = 3, threshold = t))
       .select("doc_id").collect().map(_.getLong(0)).toSet
 
-    val idx = java.nio.file.Files.createTempDirectory("graft_idx_spec").toString
+    val idx = graft.TempDir("graft_idx_spec").toString
     val part1 = docs.where($"doc_id" <= 2)                    // 2 is an exact dup of 1
     val part2 = docs.where($"doc_id" > 2 && $"doc_id" <= 4)   // near/fingerprint dups of 1
     val part3 = docs.where($"doc_id" > 4)
@@ -309,7 +309,7 @@ class OpsSpec extends AnyFunSuite {
 
     // the amortized form: a persisted corpus signature table gives the
     // same pairs without re-scanning the corpus per batch
-    val sigDir = java.nio.file.Files.createTempDirectory("graft_sigs").toString
+    val sigDir = graft.TempDir("graft_sigs").toString
     Dedup.minhashSignaturesWide(corpus, "doc_id", "text").write
       .mode("overwrite").parquet(sigDir)
     val viaSigs = Dedup.minhashLshPairsAcrossSigs(
@@ -1331,7 +1331,7 @@ class OpsSpec extends AnyFunSuite {
     val batch = Dedup.removeDuplicateLines(all, "doc_id", "text")
       .where($"doc_id" > 2L).orderBy("doc_id").collect()
 
-    val path = java.nio.file.Files.createTempDirectory("graft_line_idx").toString
+    val path = graft.TempDir("graft_line_idx").toString
     Dedup.writeLineIndex(all.where($"doc_id" <= 2L), "doc_id", "text", path)
     val inc = all.where($"doc_id" > 2L)
     def run() = Dedup.removeDuplicateLinesIncrement(inc, "doc_id", "text", path,
@@ -1466,8 +1466,8 @@ class OpsSpec extends AnyFunSuite {
       assert(a.collect().map(_.toString).sorted.toSeq ==
         b.collect().map(_.toString).sorted.toSeq)
     // spans
-    val sp1 = java.nio.file.Files.createTempDirectory("sp1").toString
-    val sp2 = java.nio.file.Files.createTempDirectory("sp2").toString
+    val sp1 = graft.TempDir("sp1").toString
+    val sp2 = graft.TempDir("sp2").toString
     Dedup.writeSpanGramIndex(old, "doc_id", "text", sp1, n = 5)
     Dedup.writeSpanGramIndex(old, "doc_id", "text", sp2, n = 5)
     cmp(
@@ -1475,8 +1475,8 @@ class OpsSpec extends AnyFunSuite {
       Dedup.removeDuplicateSpansIncrement(inc, "doc_id", "text", sp2, n = 5,
         pinnedGrams = Some(Dedup.pinnedSpanGrams(inc, "doc_id", "text", n = 5))))
     // lines
-    val ln1 = java.nio.file.Files.createTempDirectory("ln1").toString
-    val ln2 = java.nio.file.Files.createTempDirectory("ln2").toString
+    val ln1 = graft.TempDir("ln1").toString
+    val ln2 = graft.TempDir("ln2").toString
     Dedup.writeLineIndex(old, "doc_id", "text", ln1)
     Dedup.writeLineIndex(old, "doc_id", "text", ln2)
     cmp(
@@ -1484,8 +1484,8 @@ class OpsSpec extends AnyFunSuite {
       Dedup.removeDuplicateLinesIncrement(inc, "doc_id", "text", ln2,
         pinnedLines = Some(Dedup.pinnedLineRows(inc, "doc_id", "text"))))
     // minhash
-    val mh1 = java.nio.file.Files.createTempDirectory("mh1").toString
-    val mh2 = java.nio.file.Files.createTempDirectory("mh2").toString
+    val mh1 = graft.TempDir("mh1").toString
+    val mh2 = graft.TempDir("mh2").toString
     Dedup.writeMinhashIndex(old, "doc_id", "text", mh1, k = 16, n = 3)
     Dedup.writeMinhashIndex(old, "doc_id", "text", mh2, k = 16, n = 3)
     cmp(
@@ -1516,8 +1516,8 @@ class OpsSpec extends AnyFunSuite {
         b.collect().map(_.toString).sorted.toSeq)
     // spans: IncrementalIndex.build must leave the same on-disk index
     // AND the pinned probe the same verdicts
-    val sp1 = java.nio.file.Files.createTempDirectory("sp1p").toString
-    val sp2 = java.nio.file.Files.createTempDirectory("sp2p").toString
+    val sp1 = graft.TempDir("sp1p").toString
+    val sp2 = graft.TempDir("sp2p").toString
     Dedup.writeSpanGramIndex(old, "doc_id", "text", sp1, n = 5)
     val spRows = IncrementalIndex.Span.build(
       IncrementalIndex.Span.rows(Dedup.spanGrams(old, "doc_id", "text", 5)), sp2)
@@ -1527,8 +1527,8 @@ class OpsSpec extends AnyFunSuite {
       Dedup.removeDuplicateSpansIncrement(inc, "doc_id", "text", sp2, n = 5,
         pinnedIndex = Some(spRows)))
     // lines
-    val ln1 = java.nio.file.Files.createTempDirectory("ln1p").toString
-    val ln2 = java.nio.file.Files.createTempDirectory("ln2p").toString
+    val ln1 = graft.TempDir("ln1p").toString
+    val ln2 = graft.TempDir("ln2p").toString
     Dedup.writeLineIndex(old, "doc_id", "text", ln1)
     val lnRows = IncrementalIndex.Line.build(
       IncrementalIndex.Line.rows(Dedup.lineRows(old, "doc_id", "text")), ln2)
@@ -1539,8 +1539,8 @@ class OpsSpec extends AnyFunSuite {
         pinnedIndex = Some(lnRows)))
     // minhash: the pinned wide signature table serves both the
     // corpus's own pair scan and the increment's banded probe
-    val mh1 = java.nio.file.Files.createTempDirectory("mh1p").toString
-    val mh2 = java.nio.file.Files.createTempDirectory("mh2p").toString
+    val mh1 = graft.TempDir("mh1p").toString
+    val mh2 = graft.TempDir("mh2p").toString
     Dedup.writeMinhashIndex(old, "doc_id", "text", mh1, k = 16, n = 3)
     val mhSigs = IncrementalIndex.Minhash.build(
       Dedup.minhashSignaturesWide(old, "doc_id", "text", k = 16, n = 3), mh2)
@@ -2382,7 +2382,7 @@ class OpsSpec extends AnyFunSuite {
     graft.core.Tables.registerAll(spark, "/root/testdata/sf0.001")
     val emb = spark.table("embeddings")
     val queries = emb.orderBy("vec_id").limit(5)
-    val path = java.nio.file.Files.createTempDirectory("graft_ann_idx").toString
+    val path = graft.TempDir("graft_ann_idx").toString
     AnnIndex.build(emb, "vec_id", "embedding", path,
       dims = 64, ivfK = 8, pqM = 4, pqK = 4, planes = 8, iters = 2)
 
@@ -2428,7 +2428,7 @@ class OpsSpec extends AnyFunSuite {
     val old = emb.where(col("vec_id") <= bnd)
     val inc = emb.where(col("vec_id") > bnd)
     assert(old.count() > 0 && inc.count() > 0)
-    val path = java.nio.file.Files.createTempDirectory("graft_ann_app").toString
+    val path = graft.TempDir("graft_ann_app").toString
     AnnIndex.build(old, "vec_id", "embedding", path,
       dims = 64, ivfK = 4, pqM = 4, pqK = 4, planes = 8, iters = 2)
     assert(AnnIndex.readManifest(spark, path) == (64, 4, 4, 4, 8, 2))
@@ -2493,7 +2493,7 @@ class OpsSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
 
     // MinHash signature index: rows are load-bearing — layout only
-    val mh = java.nio.file.Files.createTempDirectory("graft_cmp_mh").toString
+    val mh = graft.TempDir("graft_cmp_mh").toString
     Dedup.writeMinhashIndex(docs.where($"doc_id" <= 20), "doc_id", "text", mh)
     Dedup.writeMinhashIndex(docs.where($"doc_id" > 20), "doc_id", "text", mh,
       append = true)
@@ -2506,7 +2506,7 @@ class OpsSpec extends AnyFunSuite {
     // span-gram index: compaction also merges per-shard minima — the
     // read-time aggregate must see identical per-gram minima, one
     // row per gram afterwards
-    val sg = java.nio.file.Files.createTempDirectory("graft_cmp_sg").toString
+    val sg = graft.TempDir("graft_cmp_sg").toString
     Dedup.writeSpanGramIndex(docs.where($"doc_id" <= 20), "doc_id", "text", sg, n = 5)
     Dedup.writeSpanGramIndex(docs.where($"doc_id" > 20), "doc_id", "text", sg,
       n = 5, append = true)
@@ -2523,7 +2523,7 @@ class OpsSpec extends AnyFunSuite {
     // each append holds its own (lh, min_doc) rows for the same lines
     val lines = docs.select(col("doc_id"),
       concat(lit("SHARED NAV BAR\n"), col("text")).as("text"))
-    val ln = java.nio.file.Files.createTempDirectory("graft_cmp_ln").toString
+    val ln = graft.TempDir("graft_cmp_ln").toString
     Dedup.writeLineIndex(lines.where($"doc_id" <= 20), "doc_id", "text", ln)
     Dedup.writeLineIndex(lines.where($"doc_id" > 10), "doc_id", "text", ln,
       append = true)
@@ -2541,7 +2541,7 @@ class OpsSpec extends AnyFunSuite {
     graft.core.Tables.registerAll(spark, "/root/testdata/sf0.001")
     val emb = spark.table("embeddings")
     val bnd = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
-    val ann = java.nio.file.Files.createTempDirectory("graft_cmp_ann").toString
+    val ann = graft.TempDir("graft_cmp_ann").toString
     AnnIndex.build(emb.where($"vec_id" <= bnd), "vec_id", "embedding", ann,
       dims = 64, ivfK = 4, pqM = 4, pqK = 4, planes = 8, iters = 2)
     AnnIndex.append(emb.where($"vec_id" > bnd), "vec_id", "embedding", ann)

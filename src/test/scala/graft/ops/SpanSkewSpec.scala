@@ -86,7 +86,7 @@ class SpanSkewSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     val old = docs.where($"doc_id" <= 10)
     val inc = docs.where($"doc_id" > 10)
-    val path = java.nio.file.Files.createTempDirectory("graft_spanidx").toString
+    val path = graft.TempDir("graft_spanidx").toString
     Dedup.writeSpanGramIndex(old, "doc_id", "text", path, n = 5)
 
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet

@@ -129,7 +129,7 @@ class GridJoinRuleSpec extends AnyFunSuite {
 
   test("NOT EXISTS pasted as DuckDB SQL plans as a grid hash join") {
     val g = new graft.Graft(spark,
-      java.nio.file.Files.createTempDirectory("gridjoin_state").toString)
+      graft.TempDir("gridjoin_state").toString)
     assertGridded(g.duckSql(notExistsSql),
       subquerySql(notExists, window("a", "b"), boxDist))
   }

@@ -1,18 +1,24 @@
 package graft.runtime
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.graft.DatasetBridge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.compile.PipelineCompiler
 import graft.compile.PipelineCompiler.{Options, PipelineNode}
+import graft.fts.FtsIndex
 import graft.ingest.{Ingest, OvertureFixtures}
 
 /** Pipeline edits over capped area loads run on the driver: the loads
   * are `LocalRelation`s, and Catalyst folds a single-source edit, and
   * (through `LocalUnionRule`) a union edit, into one local scan that
-  * `collect()` returns without scheduling a Spark job.
+  * `collect()` returns without scheduling a Spark job. The load itself
+  * runs one job (its collect), and the FTS index over it is built on
+  * the driver.
   */
 class LocalEditSpec extends AnyFunSuite {
+
+  private lazy val dir = graft.TempDir("graft_local_edit").toString
 
   lazy val spark: SparkSession = {
     val s = graft.core.Engine.prepare(SparkSession.builder()
@@ -21,13 +27,13 @@ class LocalEditSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate())
-    val dir = java.nio.file.Files.createTempDirectory("graft_local_edit").toString
     OvertureFixtures.write(s, dir, n = 120, files = 2)
-    Seq("places/place", "buildings/building").foreach { k =>
-      Ingest.loadTheme(s, dir, k, limit = Some(Ingest.AreaLimit))
-    }
+    Seq("places/place", "buildings/building").foreach(loadCapped(s, _))
     s
   }
+
+  private def loadCapped(s: SparkSession, key: String): Ingest.LoadResult =
+    Ingest.loadTheme(s, dir, key, limit = Some(Ingest.AreaLimit))
 
   private val MarkerKey = "graft.test.marker"
 
@@ -81,5 +87,47 @@ class LocalEditSpec extends AnyFunSuite {
       bySource = df.collect().groupBy(_.getAs[String]("_source")).map { case (k, v) => k -> v.length }
     } == 0)
     assert(bySource == Map("places/place" -> 20, "buildings/building" -> 20))
+  }
+
+  test("the FTS index over a capped load is built with no Spark job") {
+    assert(jobsDuring(FtsIndex.build(spark, "places_place")) == 0)
+    assert(DatasetBridge.localRelation(spark.table(FtsIndex.indexName("places_place"))).isDefined)
+    FtsIndex.drop(spark, "places_place")
+  }
+
+  test("a capped load of a one-file fixture runs one Spark job, its collect") {
+    val one = graft.TempDir("graft_local_one").toString
+    OvertureFixtures.write(spark, one, n = 40, files = 1)
+    var res: Ingest.LoadResult = null
+    assert(jobsDuring {
+      res = Ingest.loadTheme(spark, one, "places/place", limit = Some(Ingest.AreaLimit))
+    } == 1)
+    assert(res.rowCount == 40 && res.fileCount == 1)
+    loadCapped(spark, "places/place")
+  }
+
+  test("a search edit over the driver-built index returns the rows it returns over a persisted load") {
+    def searchEdit(): Seq[Row] = {
+      FtsIndex.build(spark, "places_place")
+      PipelineCompiler.run(spark, Seq(places),
+          Options(search = "place 7 shop", limit = 1000, ftsTables = Set("places_place")))
+        .collect().toSeq.sortBy(_.getAs[String]("id"))
+    }
+    val overLocal = searchEdit()
+    Ingest.loadTheme(spark, dir, "places/place")
+    assert(DatasetBridge.localRelation(spark.table("places_place")).isEmpty)
+    val overPersisted = try searchEdit() finally {
+      FtsIndex.drop(spark, "places_place")
+      Ingest.dropTheme(spark, "places/place")
+      loadCapped(spark, "places/place")
+    }
+    assert(overLocal.nonEmpty)
+    assert(overLocal.map(_.getAs[String]("id")) == overPersisted.map(_.getAs[String]("id")))
+    // the same index rows; a score's sum may add its terms in another order
+    overLocal.zip(overPersisted).foreach { case (a, b) =>
+      val i = a.fieldIndex("_score")
+      assert(a.toSeq.patch(i, Nil, 1) == b.toSeq.patch(i, Nil, 1))
+      assert(math.abs(a.getDouble(i) - b.getDouble(i)) <= 1e-12 * math.abs(b.getDouble(i)))
+    }
   }
 }

@@ -15,14 +15,14 @@ class RuntimeSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
-    val dir = java.nio.file.Files.createTempDirectory("graft_rt").toString
+    val dir = graft.TempDir("graft_rt").toString
     OvertureFixtures.write(s, dir, n = 60, files = 2)
     Ingest.loadTheme(s, dir, "places/place")
     s
   }
 
   test("session state round-trips, upserts, deletes, survives reload") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess").toString
+    val dir = graft.TempDir("graft_sess").toString
     val st = new SessionState(spark, dir)
     st.set("pipeline", """[{"id":"p1"}]""")
     st.set("pipelineSearch", "cafe")
@@ -41,7 +41,7 @@ class RuntimeSpec extends AnyFunSuite {
   }
 
   test("session state debounces: burst of sets → one deferred flush, sync forces it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess_db").toString
+    val dir = graft.TempDir("graft_sess_db").toString
     val st = new SessionState(spark, dir)
     (1 to 5).foreach(i => st.set(s"k$i", s"v$i"))
     // nothing on disk yet — mutations buffer for the debounce window
@@ -55,7 +55,7 @@ class RuntimeSpec extends AnyFunSuite {
   }
 
   test("load history appends with timestamps") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hist").toString
+    val dir = graft.TempDir("graft_hist").toString
     LoadHistory.append(spark, dir, LoadHistory.Entry(
       "places/place", "local", "[-2,-1,2,1]", 33000, cached = false, 60, 2, 123))
     LoadHistory.append(spark, dir, LoadHistory.Entry(
@@ -69,7 +69,7 @@ class RuntimeSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.current_timestamp
     import org.apache.spark.sql.types.TimestampType
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_hist_mixed").toString
+    val dir = graft.TempDir("graft_hist_mixed").toString
     // a row as earlier versions wrote it: a Spark parquet job, whose
     // default timestamp type is INT96
     Seq(LoadHistory.Entry("places/place", "old", "", 33000, cached = false, 60, 2, 123)).toDF()

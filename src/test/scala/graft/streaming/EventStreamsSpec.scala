@@ -30,7 +30,7 @@ class EventStreamsSpec extends AnyFunSuite {
   test("streaming tumbling agg equals batch tumbling agg") {
     // stream source needs plain parquet with the normalized schema —
     // write the batch view out once
-    val src = java.nio.file.Files.createTempDirectory("graft_stream_src").toString
+    val src = graft.TempDir("graft_stream_src").toString
     eventsBatch.write.mode("overwrite").parquet(src)
 
     val q = EventStreams.startTumblingStream(spark, src, "stream_tumbling")
@@ -49,7 +49,7 @@ class EventStreamsSpec extends AnyFunSuite {
 
   test("streaming stream-static asof equals the batch asof join") {
     import org.apache.spark.sql.functions._
-    val src = java.nio.file.Files.createTempDirectory("graft_asof_src").toString
+    val src = graft.TempDir("graft_asof_src").toString
     eventsBatch.write.mode("overwrite").parquet(src)
 
     // sparse static checkpoints (hours with >= 2 events per user —
@@ -115,7 +115,7 @@ class EventStreamsSpec extends AnyFunSuite {
     // watermark flush) processed one per micro-batch — a genuinely
     // multi-batch stateful run where sessions split across batches
     // and CLOSE via the event-time timeout, not a terminal flush
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_sess_src")
+    val srcDir = graft.TempDir("graft_sess_src")
     val evdf = eventsBatch
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
     val ranked = evdf.withColumn("_rk",
@@ -131,7 +131,7 @@ class EventStreamsSpec extends AnyFunSuite {
       ranked.where(col("_rk") > n / 2).drop("_rk"),
       sentinel)
     slices.zipWithIndex.foreach { case (df, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_sess_tmp$i")
+      val tmp = graft.TempDir(s"graft_sess_tmp$i")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -192,11 +192,11 @@ class EventStreamsSpec extends AnyFunSuite {
       Seq(row(3, t0.plusHours(10), 2L)),
       Seq(row(4, t0.plusMinutes(2), 1L)),
       Seq(row(5, t0.plusHours(2000), -1L)))
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_sess_late")
+    val srcDir = graft.TempDir("graft_sess_late")
     slices.zipWithIndex.foreach { case (rows, i) =>
       val df = spark.createDataFrame(
         java.util.Arrays.asList(rows: _*), EventStreams.eventSchema)
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_late_tmp$i")
+      val tmp = graft.TempDir(s"graft_late_tmp$i")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -239,11 +239,11 @@ class EventStreamsSpec extends AnyFunSuite {
       Seq(row(3, t0.plusHours(10), 2L)),
       Seq(row(4, t0.plusHours(11), 1L), row(5, t0.plusHours(11).plusMinutes(2), 1L)),
       Seq(row(6, t0.plusHours(2000), -1L)))
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_sess_return")
+    val srcDir = graft.TempDir("graft_sess_return")
     slices.zipWithIndex.foreach { case (rows, i) =>
       val df = spark.createDataFrame(
         java.util.Arrays.asList(rows: _*), EventStreams.eventSchema)
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_ret_tmp$i")
+      val tmp = graft.TempDir(s"graft_ret_tmp$i")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -298,13 +298,13 @@ class EventStreamsSpec extends AnyFunSuite {
     val ev = eventsBatch
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
     def writeSlices(df: org.apache.spark.sql.DataFrame, tag: String): String = {
-      val srcDir = java.nio.file.Files.createTempDirectory(s"graft_ij_$tag")
+      val srcDir = graft.TempDir(s"graft_ij_$tag")
       val ranked = df.withColumn("_rk",
         row_number().over(Window.orderBy(col("ts"), col("event_id"))))
       val n = ranked.count()
       Seq(ranked.where(col("_rk") <= n / 2), ranked.where(col("_rk") > n / 2))
         .map(_.drop("_rk")).zipWithIndex.foreach { case (s, i) =>
-          val tmp = java.nio.file.Files.createTempDirectory(s"graft_ij_tmp_$tag$i")
+          val tmp = graft.TempDir(s"graft_ij_tmp_$tag$i")
           s.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = new java.io.File(tmp.toString).listFiles()
             .find(_.getName.endsWith(".parquet")).get
@@ -349,7 +349,7 @@ class EventStreamsSpec extends AnyFunSuite {
 
   test("streaming dedup drops within-watermark duplicates exactly once") {
     // an at-least-once source: every event written twice
-    val src = java.nio.file.Files.createTempDirectory("graft_dedup_src").toString
+    val src = graft.TempDir("graft_dedup_src").toString
     val base = eventsBatch.limit(500)
     base.write.mode("overwrite").parquet(src)
     base.write.mode("append").parquet(src)
@@ -372,7 +372,7 @@ class EventStreamsSpec extends AnyFunSuite {
   test("streaming curation (sample + quality gate + annotate) equals batch") {
     graft.core.Tables.registerAll(spark, dir)
     val docs = spark.table("documents")
-    val src = java.nio.file.Files.createTempDirectory("graft_curate_src").toString
+    val src = graft.TempDir("graft_curate_src").toString
     docs.write.mode("overwrite").parquet(src)
 
     val q = CurationStreams.startCurationStream(
@@ -391,7 +391,7 @@ class EventStreamsSpec extends AnyFunSuite {
     graft.core.Tables.registerAll(spark, dir)
     val docs = spark.table("documents")
     val model = CurationStreams.trainUnigramModel(docs)
-    val src = java.nio.file.Files.createTempDirectory("graft_score_src").toString
+    val src = graft.TempDir("graft_score_src").toString
     docs.write.mode("overwrite").parquet(src)
 
     val q = CurationStreams.startScoredStream(
@@ -422,7 +422,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val emb = spark.table("embeddings")
     val bench = emb.where(col("vec_id") < 10)
     val corpus = emb.where(col("vec_id") >= 10)
-    val src = java.nio.file.Files.createTempDirectory("graft_semdec_src").toString
+    val src = graft.TempDir("graft_semdec_src").toString
     corpus.write.mode("overwrite").parquet(src)
 
     // the benchmark ships as plan literals, so the SAME call compiles
@@ -452,7 +452,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val docs = spark.table("documents")
     val model = graft.ops.Retrieval.bm25Model(docs, "doc_id", "text",
       Seq("spark", "merge", "window"))
-    val src = java.nio.file.Files.createTempDirectory("graft_bm25_src").toString
+    val src = graft.TempDir("graft_bm25_src").toString
     docs.write.mode("overwrite").parquet(src)
 
     val q = CurationStreams.startBm25ScoredStream(
@@ -507,7 +507,7 @@ class EventStreamsSpec extends AnyFunSuite {
     assert(!out(12L).isNullAt(2))
 
     // batch ≡ streaming byte-identically AT the cap
-    val src = java.nio.file.Files.createTempDirectory("graft_cap_src").toString
+    val src = graft.TempDir("graft_cap_src").toString
     corpus.write.mode("overwrite").parquet(src)
     val q = CurationStreams.startScoredStream(
       spark, src, "stream_capped", corpus.schema, model)
@@ -538,7 +538,7 @@ class EventStreamsSpec extends AnyFunSuite {
     assert(viaJoin.values.exists(_._2)) // fixture plants real overlap
 
     // and the SAME projection runs as a stateless ingest stream
-    val src = java.nio.file.Files.createTempDirectory("graft_decon_src").toString
+    val src = graft.TempDir("graft_decon_src").toString
     corpus.write.mode("overwrite").parquet(src)
     val q = CurationStreams.startDecontaminatedStream(
       spark, src, "stream_decon", corpus.schema, gramRow, n = 3, minHits = 2)
@@ -549,7 +549,7 @@ class EventStreamsSpec extends AnyFunSuite {
   test("gopher filter runs unchanged on a stream, byte-identical to batch") {
     graft.core.Tables.registerAll(spark, dir)
     val docs = spark.table("documents")
-    val src = java.nio.file.Files.createTempDirectory("graft_gopher_src").toString
+    val src = graft.TempDir("graft_gopher_src").toString
     docs.write.mode("overwrite").parquet(src)
 
     // the filter is a stateless map-side projection, so the SAME
@@ -572,7 +572,7 @@ class EventStreamsSpec extends AnyFunSuite {
 
   test("stateful streaming exact dedup: first-seen wins across micro-batches, equals batch on the union") {
     import org.apache.spark.sql.functions.col
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_dedup_src").toString
+    val srcDir = graft.TempDir("graft_dedup_src").toString
     val mk = (rows: Seq[(Long, String, String)], name: String) => {
       import spark.implicits._
       rows.toDF("doc_id", "text", "source")
@@ -620,7 +620,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .select(col("doc_id"), col("text"), col("source"))
     val gramRow = graft.ops.Decontaminate.benchGramRow(bench, "text", 3)
 
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_chain1").toString
+    val srcDir = graft.TempDir("graft_chain1").toString
     corpus.coalesce(1).write.mode("overwrite").parquet(srcDir)
     val q = CurationStreams.startCuratedChainStream(
       spark, srcDir, "stream_chain1", corpus.schema, gramRow,
@@ -675,7 +675,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val slice1 = corpus.where(col("doc_id") <= mid)
     val slice2 = corpus.where(col("doc_id") > mid).union(synth)
 
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_chain2").toString
+    val srcDir = graft.TempDir("graft_chain2").toString
     Seq(slice1 -> "b1", slice2 -> "b2").foreach { case (df, name) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/_stage_$name")
       val part = new java.io.File(s"$srcDir/_stage_$name").listFiles()
@@ -728,7 +728,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val slice1 = corpus.where(col("doc_id") <= mid)
     val slice2 = corpus.where(col("doc_id") > mid).union(synth)
 
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_incdedup").toString
+    val srcDir = graft.TempDir("graft_incdedup").toString
     Seq(slice1 -> "b1", slice2 -> "b2").foreach { case (df, name) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/_stage_$name")
       val part = new java.io.File(s"$srcDir/_stage_$name").listFiles()
@@ -739,7 +739,7 @@ class EventStreamsSpec extends AnyFunSuite {
         java.nio.file.attribute.FileTime.fromMillis(
           1000000000000L + (if (name == "b1") 0 else 60000L)))
     }
-    val base = java.nio.file.Files.createTempDirectory("graft_incded_state").toString
+    val base = graft.TempDir("graft_incded_state").toString
     val q = CurationStreams.startIncrementalDedupStream(
       spark, srcDir, s"$base/index", s"$base/out", s"$base/cp",
       corpus.schema, k = 16, bands = 4, n = 3, threshold = 0.25)
@@ -771,7 +771,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val slice1 = corpus.where(col("doc_id") <= mid)
     val slice2 = corpus.where(col("doc_id") > mid)
 
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_incspan").toString
+    val srcDir = graft.TempDir("graft_incspan").toString
     Seq(slice1 -> "b1", slice2 -> "b2").foreach { case (df, name) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/_stage_$name")
       val part = new java.io.File(s"$srcDir/_stage_$name").listFiles()
@@ -782,7 +782,7 @@ class EventStreamsSpec extends AnyFunSuite {
         java.nio.file.attribute.FileTime.fromMillis(
           1000000000000L + (if (name == "b1") 0 else 60000L)))
     }
-    val base = java.nio.file.Files.createTempDirectory("graft_incspan_state").toString
+    val base = graft.TempDir("graft_incspan_state").toString
     val q = CurationStreams.startIncrementalSpanDedupStream(
       spark, srcDir, s"$base/index", s"$base/out", s"$base/cp",
       corpus.schema, n = 5)
@@ -814,7 +814,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val slice2 = ((11L to 14L).map(i => (i, words(i.toInt, 12), "s")) :+
       ((15L, words(1, 12), "s"))) // near-dup of doc 1 across batches
       .toDF("doc_id", "text", "source")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_eo_src").toString
+    val srcDir = graft.TempDir("graft_eo_src").toString
     Seq(slice1 -> "b1", slice2 -> "b2").foreach { case (df, name) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/_stage_$name")
       val part = new java.io.File(s"$srcDir/_stage_$name").listFiles()
@@ -825,7 +825,7 @@ class EventStreamsSpec extends AnyFunSuite {
         java.nio.file.attribute.FileTime.fromMillis(
           1000000000000L + (if (name == "b1") 0 else 60000L)))
     }
-    val base = java.nio.file.Files.createTempDirectory("graft_eo_state").toString
+    val base = graft.TempDir("graft_eo_state").toString
     val schema = slice1.schema
     def run(cp: String): Unit = {
       val q = CurationStreams.startIncrementalDedupStream(
@@ -877,7 +877,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .withColumn("n_tokens",
         graft.ops.TextAnalysis.tokenCount(col("text")).cast("long"))
       .select(col("doc_id"), col("source"), col("n_tokens"))
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_budget_src").toString
+    val srcDir = graft.TempDir("graft_budget_src").toString
     docs.coalesce(1).write.mode("overwrite").parquet(srcDir)
 
     val q = CurationStreams.startTokenBudgetStream(
@@ -896,7 +896,7 @@ class EventStreamsSpec extends AnyFunSuite {
 
   test("stateful streaming token-budget gate: budget persists across micro-batches") {
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_budget2_src").toString
+    val srcDir = graft.TempDir("graft_budget2_src").toString
     val mk = (rows: Seq[(Long, String, Long)], name: String) => {
       rows.toDF("doc_id", "source", "n_tokens")
         .coalesce(1).write.mode("overwrite").parquet(s"$srcDir/_stage_$name")
