@@ -15,7 +15,7 @@ object Engine {
   /** The one session builder for the CLI mains: `local[cores]` with
     * shuffle partitions = cores (not the 200 default; on a real
     * cluster AQE coalesces post-shuffle partitions anyway), UTC, no UI,
-    * WARN logging, and the engine's functions and grid-join rule
+    * WARN logging, and the engine's functions and optimizer rules
     * registered ([[prepare]]).
     */
   def session(cores: Int = defaultCores): SparkSession = {
@@ -42,7 +42,7 @@ object Engine {
   private val prepared = new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
 
   /** Register graft SQL functions and the engine's optimizer rules
-    * ([[graft.plans.GridJoinRule]], [[graft.plans.LocalUnionRule]]) on
+    * ([[graft.plans.GridJoinRule]], then [[graft.plans.LocalEvalRule]]) on
     * any session, including one built outside [[session]]. Runs once
     * per session; later calls return at once.
     */
@@ -52,8 +52,9 @@ object Engine {
       graft.functions.TextExpressions.register(spark)
       graft.functions.DuckFunctions.register(spark)
       // the one registration of the grid-join rewrite: every spatial
-      // join (compiled pipelines and pasted SQL alike) relies on it
-      val rules = Seq(graft.plans.GridJoinRule, graft.plans.LocalUnionRule)
+      // join (compiled pipelines and pasted SQL alike) relies on it;
+      // the driver-side fold runs after it, so it sees the grid keys
+      val rules = Seq(graft.plans.GridJoinRule, graft.plans.LocalEvalRule)
         .filterNot(spark.experimental.extraOptimizations.contains)
       spark.experimental.extraOptimizations = spark.experimental.extraOptimizations ++ rules
       prepared.put(spark, java.lang.Boolean.TRUE)

@@ -7,6 +7,12 @@ import org.apache.spark.sql.functions._
   * (fts.js:70-114): FTS ranked search when an index exists, ILIKE
   * substring fallback (shortest-name-first) otherwise; multi-table
   * fan-out with per-table failure isolation.
+  *
+  * Over a driver-held table and index (a capped area load) the whole
+  * search — the score aggregate, its join with the table and the
+  * top-k — folds on the driver through `plans.LocalEvalRule`, so a
+  * search collects with no Spark job; over distributed tables it runs
+  * on Spark.
   */
 object Bm25 {
 
@@ -37,16 +43,18 @@ object Bm25 {
   def scores(spark: SparkSession, table: String, query: String): DataFrame =
     spark.sql(scoreSql(table, query))
 
-  /** Ranked FTS search over one table (reference fts.js:79-91). */
-  def ftsSearch(spark: SparkSession, table: String, query: String, limit: Int = 10): DataFrame = {
-    val s = scores(spark, table, query)
-    spark.table(table)
-      .join(s, "id")
-      .select(col("id"), col("display_name"), col("centroid_lon"), col("centroid_lat"),
-        col("_score"), lit(table).as("source_table"))
-      .orderBy(desc("_score"), col("id"))
-      .limit(limit)
-  }
+  /** Ranked FTS search over one table (reference fts.js:79-91), as
+    * one SQL statement: one parse and one analysis, where a chain of
+    * DataFrame calls analyzes the growing plan once per call.
+    */
+  def ftsSearch(spark: SparkSession, table: String, query: String, limit: Int = 10): DataFrame =
+    spark.sql(
+      s"""SELECT t.id, t.display_name, t.centroid_lon, t.centroid_lat, s._score,
+         |  '${escapeSqlString(table)}' AS source_table
+         |FROM `${table.replace("`", "``")}` t
+         |JOIN (${scoreSql(table, query)}) s ON t.id = s.id
+         |ORDER BY s._score DESC, t.id
+         |LIMIT $limit""".stripMargin)
 
   /** ILIKE fallback, shortest-name-first (fts.js:98-109). */
   def ilikeSearch(spark: SparkSession, table: String, query: String, limit: Int = 10): DataFrame =
@@ -70,14 +78,19 @@ object Bm25 {
   }
 
   /** Multi-table fan-out with per-table isolation (fts.js:70-114):
-    * one broken table never poisons the whole search.
+    * one broken table never poisons the whole search. The per-table
+    * searches are independent (their planning, and their driver-side
+    * evaluation over driver-held tables), so they overlap; the rows
+    * come back in table order.
     */
   def searchAll(spark: SparkSession, tables: Seq[String], query: String,
                 limit: Int = 10): Seq[Row] =
-    tables.flatMap { t =>
-      try searchTable(spark, t, query, limit).collect().toSeq
-      catch { case _: Exception => Seq.empty }
-    }
+    tables.map { t =>
+      graft.ops.Concurrent.forkValue {
+        try searchTable(spark, t, query, limit).collect().toSeq
+        catch { case _: Exception => Seq.empty[Row] }
+      }
+    }.flatMap(_())
 
   /** Single-plan form of the multi-table fan-out: the per-table
     * two-tier searches union into one DataFrame (schemas are

@@ -1,14 +1,8 @@
 package graft.fts
 
-import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.DatasetBridge
-import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Full-text index: a per-table term-statistics DataFrame registered
   * as `fts_main_<table>`, replacing DuckDB's FTS extension index
@@ -18,11 +12,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * BM25 needs, precomputed so a search is a broadcast-able semi-join
   * + group-by instead of a full-corpus scan.
   *
-  * Scale: the build is a size decision. A driver-held table (a capped
-  * area load) is indexed on the driver into a driver-held index, with
-  * no Spark job, as the reference indexes its small in-process
-  * tables; any other table gets two shuffles (terms→tf, id→doclen)
-  * and a broadcast of the 1-row corpus stats, checkpointed.
+  * Scale: one plan, and a size decision on where it runs. Over a
+  * driver-held table (a capped area load) `plans.LocalEvalRule` folds
+  * the whole build on the driver into a driver-held index, with no
+  * Spark job, as the reference indexes its small in-process tables;
+  * over any other table it runs as two shuffles (terms→tf,
+  * id→doclen) and a broadcast of the 1-row corpus stats,
+  * checkpointed.
   */
 object FtsIndex {
 
@@ -54,13 +50,13 @@ object FtsIndex {
     * stemmer per token — DuckDB FTS's default behavior
     * (PRAGMA create_fts_index stemmer='porter').
     *
-    * The build is a size decision, like the load it indexes: over a
-    * driver-held table (its optimized plan is a `LocalRelation`, as
-    * every capped area load is) the term statistics are counted on
-    * the driver and the index is itself a `LocalRelation`, with no
-    * Spark job; any other table gets the distributed build. Both
-    * paths take their tokens from the same Spark expressions and share
-    * the `idf` column, so they build the same rows.
+    * The build is one plan, `idf(distributedStats(...))`. Over a
+    * driver-held table (every capped area load) `plans.LocalEvalRule`
+    * optimizes it to a `LocalRelation`, evaluated on the driver with
+    * Spark's interpreted expressions, and that relation is registered
+    * as the index, with no Spark job; otherwise the plan runs on Spark
+    * and is checkpointed. Either way the rows are the ones Spark's
+    * execution of the same plan returns.
     */
   def build(spark: SparkSession, table: String, stem: Boolean = false): DataFrame = {
     val docs = spark.table(table)
@@ -68,12 +64,11 @@ object FtsIndex {
         split(lower(coalesce(col("search_name"), lit(""))), "[^a-z0-9]+").as("tokens"))
     if (stem) stemmed.add(table) else stemmed.remove(table)
 
-    val index = DatasetBridge.localRelation(docs) match {
-      case Some(local) =>
-        // the idf projection folds on the driver too; register the
-        // folded rows, so a search does not evaluate it again
-        DatasetBridge.foldLocal(idf(DatasetBridge.ofRows(spark, localStats(local, stem))))
-      case None => idf(distributedStats(docs, stem)).localCheckpoint(true)
+    val stats = idf(distributedStats(docs, stem))
+    // register the folded rows, so a search does not evaluate them again
+    val index = DatasetBridge.localRelation(stats) match {
+      case Some(local) => DatasetBridge.ofRows(spark, local)
+      case None => stats.localCheckpoint(true)
     }
     index.createOrReplaceTempView(indexName(table))
     index
@@ -84,9 +79,10 @@ object FtsIndex {
     stats.withColumn("idf",
       log(lit(1.0) + (col("ndocs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
 
-  /** (term, id, tf, doclen, df, ndocs, avgdl) counted by Spark: two
-    * shuffles (terms→tf, id→doclen) and a broadcast of the one-row
-    * corpus stats. The caller materializes the index via
+  /** (term, id, tf, doclen, df, ndocs, avgdl): two shuffles
+    * (terms→tf, id→doclen) and a broadcast of the one-row corpus
+    * stats when Spark runs it. The caller materializes a distributed
+    * index via
     * localCheckpoint, not persist(): an FTS index is a long-lived
     * artifact (DuckDB's PRAGMA create_fts_index materializes too), and
     * checkpoint blocks live at the RDD level, so a catalog-cache sweep
@@ -115,48 +111,6 @@ object FtsIndex {
     tf.join(doclen, "id")
       .join(dft, "term")
       .crossJoin(broadcast(stats))
-  }
-
-  /** The same statistics as [[distributedStats]], counted on the
-    * driver over the (id, tokens) rows of a local relation. As in the
-    * Spark path, a NULL id is a document of its own for `df`, `ndocs`
-    * and `avgdl` but has no index rows (the inner join on id drops it).
-    */
-  private def localStats(docs: LocalRelation, stem: Boolean): LocalRelation = {
-    val tf = mutable.HashMap.empty[(UTF8String, UTF8String), Long]
-    val doclen = mutable.HashMap.empty[UTF8String, Long]
-    docs.data.foreach { row =>
-      val id = if (row.isNullAt(0)) null else row.getUTF8String(0)
-      val tokens = row.getArray(1)
-      var i = 0
-      while (i < tokens.numElements()) {
-        val raw = tokens.getUTF8String(i)
-        if (raw.numBytes > 0) {
-          val term = if (stem) UTF8String.fromString(Porter.stem(raw.toString)) else raw
-          tf.updateWith((id, term))(n => Some(n.getOrElse(0L) + 1))
-          doclen.updateWith(id)(n => Some(n.getOrElse(0L) + 1))
-        }
-        i += 1
-      }
-    }
-    val df = mutable.HashMap.empty[UTF8String, Long]
-    tf.keysIterator.foreach { case (_, term) => df.updateWith(term)(n => Some(n.getOrElse(0L) + 1)) }
-    // exact long sum + single divide, as in the Spark path
-    val ndocs = doclen.size.toLong
-    val avgdl = doclen.valuesIterator.sum.toDouble / ndocs
-    val rows = tf.iterator.collect { case ((id, term), n) if id != null =>
-      InternalRow(term, id, n, doclen(id), df(term), ndocs, avgdl)
-    }.toSeq
-    val Seq(idAttr, tokensAttr) = docs.output
-    LocalRelation(Seq(
-      AttributeReference("term", StringType,
-        tokensAttr.dataType.asInstanceOf[ArrayType].containsNull)(),
-      AttributeReference("id", StringType, idAttr.nullable)(),
-      AttributeReference("tf", LongType, nullable = false)(),
-      AttributeReference("doclen", LongType, nullable = false)(),
-      AttributeReference("df", LongType, nullable = false)(),
-      AttributeReference("ndocs", LongType, nullable = false)(),
-      AttributeReference("avgdl", DoubleType)()), rows)
   }
 
   /** Build only when absent (memoized path for repeated queries over

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -62,6 +62,22 @@ object FileIndex {
     val footer = try reader.getFooter finally reader.close()
     ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** `spark.read.parquet(dirs)` with its schema read on the driver
+    * by [[sparkSchema]] from one part file of the first directory, the
+    * directory Spark's inference reads a file of, so the read runs no
+    * one-task inference job. Every part file of a directory written by
+    * one Spark write carries the same schema. Without a part file there
+    * (or the directory itself), Spark infers as usual.
+    */
+  def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame = {
+    val first = new Path(dirs.head)
+    val fs = first.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = if (!fs.isDirectory(first)) None
+      else fs.listStatus(first).iterator.map(_.getPath)
+        .filter(p => p.getName.startsWith("part-")).minByOption(_.getName)
+    part.fold(spark.read)(p => spark.read.schema(sparkSchema(spark, p.toString))).parquet(dirs: _*)
   }
 
   /** Read one footer's aggregate bbox (None when the file carries no

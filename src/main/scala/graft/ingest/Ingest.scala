@@ -11,11 +11,13 @@ import graft.model.ThemeMeta
   *
   * Materialization is a size decision, not a mode: a load capped at
   * [[AreaLimit]] rows or fewer is collected once into a driver-held
-  * `LocalRelation`, so Catalyst folds the projections, filters and
-  * limits of later edits over it on the driver with no Spark job (the
-  * reference serves each interaction from small in-process per-theme
-  * tables). An uncapped or larger load stays distributed and is
-  * persisted (`MEMORY_AND_DISK`).
+  * `LocalRelation`, so later edits, searches and the FTS build over it
+  * evaluate on the driver with no Spark job (the reference serves each
+  * interaction from small in-process per-theme tables): Catalyst folds
+  * their projections, filters and limits, and `plans.LocalEvalRule`
+  * their unions, joins, aggregates and sorts, up to
+  * `LocalEvalRule.MaxRows` rows. An uncapped or larger load stays
+  * distributed and is persisted (`MEMORY_AND_DISK`).
   *
   * Spark-first re-expression of the reference's loadTheme
   * (/root/reference/src/lib/themes.js:204-410): the reference's 3-file

@@ -124,7 +124,7 @@ object AnnIndex {
   /** The build parameters persisted with the index, as
     * (dims, ivf_k, pq_m, pq_k, planes, iters). */
   def readManifest(spark: SparkSession, path: String): (Int, Int, Int, Int, Int, Int) = {
-    val r = spark.read.parquet(s"$path/manifest")
+    val r = graft.ingest.FileIndex.readDirs(spark, Seq(s"$path/manifest"))
       .select(col("dims"), col("ivf_k"), col("pq_m"), col("pq_k"),
         col("planes"), col("iters")).head()
     (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5))
@@ -187,10 +187,10 @@ object AnnIndex {
   }
 
   def readIvfCentroids(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/ivf_centroids")
+    graft.ingest.FileIndex.readDirs(spark, Seq(s"$path/ivf_centroids"))
 
   def readPqCodebooks(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/pq_codebooks")
+    graft.ingest.FileIndex.readDirs(spark, Seq(s"$path/pq_codebooks"))
 
   def readPqCodes(spark: SparkSession, path: String): DataFrame =
     IndexStore.read(spark, s"$path/pq_codes")

@@ -7,8 +7,9 @@ package graft.ops
   * small artifact writes or bounded trainer collects would otherwise
   * pay one inter-job latency round EACH: the ANN index artifact
   * writes, the composed ingest pipeline's per-stage index appends,
-  * and the incremental bench rows' corpus-side index build vs
-  * increment-side hashing. Safe only for actions that touch disjoint
+  * the incremental bench rows' corpus-side index build vs
+  * increment-side hashing, and the per-table searches of
+  * `fts.Bm25.searchAll`. Safe only for actions that touch disjoint
   * state (disjoint output paths / independent collects) — which every
   * call site here documents.
   *

@@ -242,7 +242,7 @@ object IndexStore {
     if (snap.entries.isEmpty)
       throw new IllegalStateException(
         s"IndexStore.read: manifest v${snap.version} at $path lists no data directories")
-    spark.read.parquet(snap.entries.map(e => s"$path/$e"): _*)
+    graft.ingest.FileIndex.readDirs(spark, snap.entries.map(e => s"$path/$e"))
   }
 
   /** Initialize an EMPTY index: one zero-row schema-carrying anchor
@@ -343,7 +343,7 @@ object IndexStore {
     val snap = currentOpt(fs, path).getOrElse(return)
     val victim = snap.entries.filterNot(isAnchor)
     if (victim.map(dataDirOf).distinct.size <= 1) return
-    val folded = transform(spark.read.parquet(victim.map(e => s"$path/$e"): _*))
+    val folded = transform(graft.ingest.FileIndex.readDirs(spark, victim.map(e => s"$path/$e")))
     val written = writeData(fs, folded, path)
     val victimSet = victim.toSet
     commit(fs, path) { snapOpt =>

@@ -15,6 +15,18 @@ object ColumnBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
 
+/** Bridge to the `private[sql]` Catalyst helpers `plans.LocalEvalRule`
+  * evaluates with as Spark's own physical operators do: the float
+  * normalization of hash keys and the nullability-blind type check of
+  * join keys.
+  */
+object CatalystBridge {
+  def normalizeFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+  def sameType(a: org.apache.spark.sql.types.DataType,
+               b: org.apache.spark.sql.types.DataType): Boolean = a.sameType(b)
+}
+
 /** Bridge to `Dataset.ofRows` (private[sql]): turn a hand-built
   * logical plan — e.g. a `LogicalRelation` over a custom `FileIndex` —
   * into a user-facing DataFrame. Same extension-library pattern as
@@ -56,19 +68,6 @@ object DatasetBridge {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation if !l.isStreaming => Some(l)
       case _ => None
     }
-
-  /** `df`, a projection over a local relation, folded into one local
-    * relation by the optimizer's own `ConvertToLocalRelation` rule,
-    * without running the rest of the optimizer; `df` itself when its
-    * analyzed plan does not fold.
-    */
-  def foldLocal(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation(ds.queryExecution.analyzed) match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => ofRows(ds.sparkSession, l)
-      case _ => df
-    }
-  }
 
   /** Eager local checkpoint that PRESERVES the child's physical
     * output partitioning (and ordering) in the resulting LogicalRDD —

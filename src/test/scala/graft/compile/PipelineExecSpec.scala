@@ -99,6 +99,7 @@ class PipelineExecSpec extends AnyFunSuite {
   }
 
   test("intersect and exclude over capped (driver-held) loads still plan grid joins") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     val filters = Seq(
@@ -107,29 +108,60 @@ class PipelineExecSpec extends AnyFunSuite {
       node(id = "p2", nodeType = "combine", op = "exclude",
         table = "buildings_building", key = "buildings/building",
         distance = Some(27830.0)))
-    def ids(f: PipelineNode) = PipelineCompiler.run(spark, Seq(node(), f))
-      .select("id", "_source").collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    val persisted = filters.map(ids)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "_source").collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    // over the persisted loads Spark runs the grid joins GridJoinRule plans
+    val persisted = filters.map { f =>
+      val df = PipelineCompiler.run(spark, Seq(node(), f))
+      val optimized = df.queryExecution.optimizedPlan.toString
+      assert(optimized.contains("_graft_gx") && optimized.contains("_graft_gy"),
+        s"${f.op}: GridJoinRule did not fire:\n$optimized")
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      assert(plan.collectWithSubqueries { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
+        s"${f.op}: nested-loop join planned:\n$plan")
+      ids(df)
+    }
     val keys = Seq("places/place", "buildings/building")
     try {
       keys.foreach(k => Ingest.loadTheme(spark, dir, k, limit = Some(Ingest.AreaLimit)))
-      assert(spark.table("places_place").queryExecution.optimizedPlan
-        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      assert(spark.table("places_place").queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      // over the capped loads the whole edit, grid joins included,
+      // folds on the driver into one local relation of the same rows
       filters.zip(persisted).foreach { case (f, expected) =>
         val df = PipelineCompiler.run(spark, Seq(node(), f))
-        val got = df.select("id", "_source").collect()
-          .map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-        assert(got == expected, s"${f.op}: capped and persisted loads disagree")
-        val optimized = df.queryExecution.optimizedPlan.toString
-        assert(optimized.contains("_graft_gx") && optimized.contains("_graft_gy"),
-          s"${f.op}: GridJoinRule did not fire:\n$optimized")
-        val plan = df.queryExecution.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.executedPlan
-          case p => p
-        }
-        assert(plan.collectWithSubqueries { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
-          s"${f.op}: nested-loop join planned:\n$plan")
+        assert(df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+          s"${f.op}: not folded on the driver:\n${df.queryExecution.optimizedPlan}")
+        assert(ids(df) == expected, s"${f.op}: capped and persisted loads disagree")
       }
     } finally keys.foreach(k => Ingest.loadTheme(spark, dir, k))
+  }
+
+  test("the driver fold of a spatial join over capped loads rides on the grid keys") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
+    // a child session: its own capped loads, the shared views untouched
+    val s = spark.newSession()
+    val big = graft.TempDir("graft_pipe_big").toString
+    OvertureFixtures.write(s, big, n = 600, files = 2)
+    val loads = Seq("places/place", "buildings/building")
+      .map(k => Ingest.loadTheme(s, big, k, limit = Some(Ingest.AreaLimit)))
+    // more pairs than a keyless join may test on the driver
+    assert(loads.map(_.rowCount).product > graft.plans.LocalEvalRule.MaxRows)
+    def pairs(pre: (String, String) => String) = s.sql(
+      s"""SELECT p.id AS pid, b.id AS bid FROM places_place p JOIN buildings_building b
+         |  ON ${pre("p.centroid_lon", "b.centroid_lon")}
+         |  AND ${pre("p.centroid_lat", "b.centroid_lat")}""".stripMargin)
+    val grid = pairs((x, y) => s"ABS($x - $y) < 0.2")
+    val range = pairs((x, y) => s"$x - $y > -0.2 AND $x - $y < 0.2")
+    assert(grid.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      grid.queryExecution.optimizedPlan.toString)
+    assert(range.queryExecution.optimizedPlan.collectFirst { case j: Join => j }.nonEmpty,
+      range.queryExecution.optimizedPlan.toString)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    val got = rows(grid)
+    assert(got.nonEmpty && got == rows(range))
   }
 }

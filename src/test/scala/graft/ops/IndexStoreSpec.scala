@@ -128,6 +128,32 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(rows(IndexStore.read(spark, path)) == rows(want))
   }
 
+  test("a read takes its schema from one footer: no job, Spark's inferred schema") {
+    def inferred(path: String) =
+      spark.read.parquet(IndexStore.liveEntries(spark, path).map(e => s"$path/$e"): _*).schema
+    val anchored = tmp()
+    IndexStore.init(spark, anchored, Seq((1L, "a")).toDF("gh", "tag").schema)
+    assert(IndexStore.read(spark, anchored).schema == inferred(anchored))
+
+    val path = tmp()
+    IndexStore.append(Seq((0L, 10L, "x")).toDF("gh", "min_doc", "src"), path)
+    IndexStore.append(Seq((1L, 11L, null)).toDF("gh", "min_doc", "src"), path)
+    var got: org.apache.spark.sql.DataFrame = null
+    assert(graft.Jobs.during(spark) { got = IndexStore.read(spark, path) } == 0)
+    assert(got.schema == inferred(path))
+    assert(got.count() == 2)
+
+    // the earlier layout: the manifest lists prefix leaves
+    val old = tmp()
+    Seq((0L, 10L), (1L, 11L)).toDF("gh", "min_doc")
+      .withColumn("_pfx", pmod(col("gh"), lit(2)).cast("string"))
+      .write.partitionBy("_pfx").parquet(s"$old/data-old1")
+    new java.io.File(s"$old/manifest").mkdirs()
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$old/manifest/v00000001"),
+      "#graft-index-manifest 1\ne data-old1/_pfx=0\ne data-old1/_pfx=1\n#END\n".getBytes("UTF-8"))
+    assert(IndexStore.read(spark, old).schema == inferred(old))
+  }
+
   test("an append landing MID-compaction is carried forward, not lost") {
     val path = tmp()
     val s1 = (0L until 8L).map(g => (g, 100L + g)).toDF("gh", "min_doc")

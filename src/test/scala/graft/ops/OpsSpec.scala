@@ -993,7 +993,8 @@ class OpsSpec extends AnyFunSuite {
 
   test("dropPairedDuplicates broadcasts the drop set into the anti join") {
     val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
-    val dropped = Dedup.dropPairedDuplicates(docs, "doc_id", pairs)
+    // non-local input: over driver-held rows the whole plan folds on the driver
+    val dropped = Dedup.dropPairedDuplicates(docs.localCheckpoint(), "doc_id", pairs)
     val plan = dropped.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"))
     assert(dropped.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq ==

@@ -1,20 +1,21 @@
 package graft.runtime
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.graft.DatasetBridge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.compile.PipelineCompiler
 import graft.compile.PipelineCompiler.{Options, PipelineNode}
-import graft.fts.FtsIndex
+import graft.fts.{Bm25, FtsIndex}
 import graft.ingest.{Ingest, OvertureFixtures}
 
-/** Pipeline edits over capped area loads run on the driver: the loads
-  * are `LocalRelation`s, and Catalyst folds a single-source edit, and
-  * (through `LocalUnionRule`) a union edit, into one local scan that
-  * `collect()` returns without scheduling a Spark job. The load itself
-  * runs one job (its collect), and the FTS index over it is built on
-  * the driver.
+/** Pipeline edits and searches over capped area loads run on the
+  * driver: the loads are `LocalRelation`s, and Catalyst (through
+  * `plans.LocalEvalRule` for the unions, joins, aggregates and sorts)
+  * folds a single-source, union, intersect, exclude or search edit,
+  * and a multi-table search, into one local scan that `collect()`
+  * returns without scheduling a Spark job. The load itself runs one
+  * job (its collect), and the FTS index over it is built on the
+  * driver.
   */
 class LocalEditSpec extends AnyFunSuite {
 
@@ -35,34 +36,7 @@ class LocalEditSpec extends AnyFunSuite {
   private def loadCapped(s: SparkSession, key: String): Ingest.LoadResult =
     Ingest.loadTheme(s, dir, key, limit = Some(Ingest.AreaLimit))
 
-  private val MarkerKey = "graft.test.marker"
-
-  /** Spark jobs started while `body` runs. Listener events arrive
-    * asynchronously but in order, so a marker job runs after `body`;
-    * once the listener has seen the marker, it has seen every job
-    * `body` started.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val seen = new java.util.concurrent.LinkedBlockingQueue[java.lang.Boolean]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.put(Option(e.properties).exists(_.getProperty(MarkerKey) != null))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setLocalProperty(MarkerKey, "1")
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setLocalProperty(MarkerKey, null)
-      var jobs = 0
-      var marker = false
-      while (!marker) Option(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)) match {
-        case Some(m) => if (m) marker = true else jobs += 1
-        case None => fail("the marker job never reached the listener")
-      }
-      jobs
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobsDuring(body: => Unit): Int = graft.Jobs.during(spark)(body)
 
   private val places = PipelineNode("n1", "source", "", "places_place", "places/place")
   private val buildings = PipelineNode("n2", "combine", "union", "buildings_building",
@@ -87,6 +61,49 @@ class LocalEditSpec extends AnyFunSuite {
       bySource = df.collect().groupBy(_.getAs[String]("_source")).map { case (k, v) => k -> v.length }
     } == 0)
     assert(bySource == Map("places/place" -> 20, "buildings/building" -> 20))
+  }
+
+  Seq(
+    PipelineNode("n2", "combine", "intersect", "buildings_building", "buildings/building"),
+    PipelineNode("n2", "combine", "exclude", "buildings_building", "buildings/building",
+      Some(27830.0))
+  ).foreach { filter =>
+    test(s"an ${filter.op} edit over two capped loads collects with no Spark job") {
+      var n = 0
+      assert(jobsDuring {
+        n = PipelineCompiler.run(spark, Seq(places, filter), Options(limit = 1000)).collect().length
+      } == 0)
+      // each fixture place lies inside the building of the same index,
+      // so an intersect keeps rows and an exclude keeps none
+      assert(if (filter.op == "intersect") n > 0 else n == 0)
+    }
+  }
+
+  private val tables = Seq("places_place", "buildings_building")
+
+  /** `body` with both capped loads FTS-indexed. */
+  private def indexed[T](body: => T): T = {
+    tables.foreach(FtsIndex.build(spark, _))
+    try body finally tables.foreach(FtsIndex.drop(spark, _))
+  }
+
+  test("a search edit over two capped loads collects with no Spark job") {
+    indexed {
+      var rows = Array.empty[Row]
+      assert(jobsDuring {
+        rows = PipelineCompiler.run(spark, Seq(places, buildings),
+          Options(search = "place 7 shop", limit = 1000, ftsTables = tables.toSet)).collect()
+      } == 0)
+      assert(rows.nonEmpty)
+    }
+  }
+
+  test("Bm25.searchAll over two capped loads runs no Spark job") {
+    indexed {
+      var rows = Seq.empty[Row]
+      assert(jobsDuring { rows = Bm25.searchAll(spark, tables, "place 7 shop") } == 0)
+      assert(rows.nonEmpty && rows.forall(_.getAs[Double]("_score") > 0))
+    }
   }
 
   test("the FTS index over a capped load is built with no Spark job") {
