@@ -39,10 +39,6 @@ object Bm25 {
        |GROUP BY id""".stripMargin
   }
 
-  /** (id, _score) DataFrame for matching docs. */
-  def scores(spark: SparkSession, table: String, query: String): DataFrame =
-    spark.sql(scoreSql(table, query))
-
   /** Ranked FTS search over one table (reference fts.js:79-91), as
     * one SQL statement: one parse and one analysis, where a chain of
     * DataFrame calls analyzes the growing plan once per call.

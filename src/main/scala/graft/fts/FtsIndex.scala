@@ -35,8 +35,13 @@ object FtsIndex {
 
   def indexName(table: String): String = s"fts_main_$table"
 
+  /** True iff `table` has an index. An index is only ever a temp view,
+    * so this asks the session catalog's temp views directly: a
+    * `spark.catalog.tableExists` lookup also resolves through the
+    * external catalog and costs milliseconds per call.
+    */
   def hasIndex(spark: SparkSession, table: String): Boolean =
-    spark.catalog.tableExists(indexName(table))
+    spark.sessionState.catalog.getTempView(indexName(table)).isDefined
 
   /** Tables indexed with Porter stemming (query terms must be stemmed
     * the same way at search time).

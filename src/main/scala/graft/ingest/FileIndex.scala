@@ -65,14 +65,17 @@ object FileIndex {
   }
 
   /** `spark.read.parquet(dirs)` with its schema read on the driver
-    * by [[sparkSchema]] from one part file of the first directory, the
-    * directory Spark's inference reads a file of, so the read runs no
-    * one-task inference job. Every part file of a directory written by
-    * one Spark write carries the same schema. Without a part file there
-    * (or the directory itself), Spark infers as usual.
+    * by [[sparkSchema]] from the file Spark's inference reads, so the
+    * read runs no one-task inference job. Spark reads the first data
+    * file in path order (the order `splitFiles` sorts by): the first
+    * part file of the directory that sorts first once `/` is appended
+    * to each directory, since that comparison is the same as comparing
+    * the full paths of the files inside. Every part file of a directory
+    * written by one Spark write carries the same schema. Without a
+    * part file there (or the directory itself), Spark infers as usual.
     */
   def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame = {
-    val first = new Path(dirs.head)
+    val first = new Path(dirs.minBy(_ + "/"))
     val fs = first.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val part = if (!fs.isDirectory(first)) None
       else fs.listStatus(first).iterator.map(_.getPath)

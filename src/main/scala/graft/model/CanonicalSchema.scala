@@ -28,13 +28,6 @@ object CanonicalSchema {
 
   val baseColumnNames: Seq[String] = baseFields.map(_.name)
 
-  /** Canonical schema for a theme key (base + its `_f*` columns). */
-  def forKey(key: String): StructType = {
-    val fs = ThemeMeta.themeFields.getOrElse(key, Seq.empty).indices
-      .map(i => StructField(s"_f$i", StringType))
-    StructType(baseFields ++ fs)
-  }
-
   /** Does a DataFrame schema satisfy the canonical contract? */
   def conforms(schema: StructType): Boolean =
     baseFields.forall { f =>

@@ -783,16 +783,6 @@ object Dedup {
     sh.groupBy("id").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Row-form signatures (id, seed, sig) — unpivot of the wide form. */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        k: Int = 16, n: Int = 3): DataFrame = {
-    val wide = minhashSignaturesWide(df, idCol, textCol, k, n)
-    wide.select(col("id"),
-        explode(array((0 until k).map(s =>
-          struct(lit(s).as("seed"), col(s"sig$s").as("sig"))): _*)).as("x"))
-      .select(col("id"), col("x.seed").as("seed"), col("x.sig").as("sig"))
-  }
-
   /** LSH candidate pairs: signatures split into `bands`, docs sharing
     * any (band, band_hash) bucket become candidates; estimated
     * similarity = matching signature slots / k. All signature
@@ -1186,10 +1176,6 @@ object Dedup {
       blockCol = Some("cent_id"))
     dropPairedDuplicates(df, idCol, pairs)
   }
-
-  /** Hamming distance between two equal-length bit strings. */
-  def hammingDist(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    size(filter(zip_with(split(a, "(?!^)"), split(b, "(?!^)"), (x, y) => x =!= y), d => d))
 
   /** Embedding-cosine near-duplicate pairs above `threshold`.
     *

@@ -36,7 +36,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * '''Idempotence tags''' make appends replay-safe: a commit carrying
   * `tag` is skipped when any prior manifest already recorded that tag
-  * — the mechanism the streaming foreachBatch sinks use to turn
+  * — the mechanism the exactly-once streaming sink uses to turn
   * at-least-once micro-batch delivery into exactly-once index
   * mutation (tag = the batchId). Tags do NOT accumulate forever:
   * [[retireTags]] (run on every [[compact]] pass) rolls numeric-headed
@@ -397,11 +397,15 @@ object IndexStore {
     }
   }
 
-  /** Delete data directories no longer referenced by the CURRENT
-    * manifest — compaction victims and crashed commits. Run from a
-    * maintenance window: an append IN FLIGHT (data written, manifest
-    * not yet committed) is indistinguishable from an orphan, the same
-    * single-vacuumer contract every file-listing table format has.
+  /** Delete what the CURRENT manifest no longer needs: the data
+    * directories it does not reference (compaction victims and crashed
+    * commits) and every manifest version below it, so the manifest
+    * listing each read and commit pays stays small. The current
+    * version stays, so the next commit still claims a higher one. Run from a maintenance window: an append IN FLIGHT
+    * (data written, manifest not yet committed) is indistinguishable
+    * from an orphan, and a reader still opening a superseded version
+    * would find it gone — the same single-vacuumer contract every
+    * file-listing table format has.
     */
   def vacuum(spark: SparkSession, path: String): Unit = {
     val fs = fsFor(spark, path)
@@ -412,6 +416,12 @@ object IndexStore {
         (st.getPath.getName.startsWith("data-") || st.getPath.getName.startsWith("anchor-")) &&
         !liveRoots.contains(st.getPath.getName))
       .foreach(st => fs.delete(st.getPath, true))
+    fs.listStatus(manifestDir(path)).foreach { st =>
+      st.getPath.getName match {
+        case VersionRe(v) if v.toLong < snap.version => fs.delete(st.getPath, false)
+        case _ =>
+      }
+    }
   }
 
   /** Entries of the current manifest, relative to `path` — the

@@ -156,10 +156,10 @@ object IngestPipeline {
       "pinnedFront is the URL-stage digest table — it requires the URL front door")
     val spark = shard.sparkSession
     // first-shard convenience: absent indexes initialize empty
-    // (schema-anchored), exactly like the streaming starters. An
-    // interrupted compaction can no longer masquerade as a missing
-    // index: IndexStore compaction commits by manifest, so the index
-    // stays present (and readable) through every maintenance crash.
+    // (schema-anchored). An interrupted compaction can no longer
+    // masquerade as a missing index: IndexStore compaction commits by
+    // manifest, so the index stays present (and readable) through
+    // every maintenance crash.
     val empty = shard.where(lit(false)).withColumn(textCol, lit(""))
     // the missing-index inits are independent single-anchor writes to
     // DISJOINT paths — overlap them (r15: the first shard paid one
@@ -442,9 +442,10 @@ object IngestPipeline {
     * `"digest"` (also the URL index — same (digest, min_doc) shape),
     * `"minhash"`, `"span"`, `"line"`; an unknown name throws
     * IllegalArgumentException before any index is touched. Stats are
-    * manifest-only reads. Safe to call from a `foreachBatch` tail —
-    * the single-writer contract the streaming sinks already hold
-    * covers maintenance too.
+    * manifest-only reads. Safe to call from a
+    * [[graft.streaming.Streams.exactlyOnce]] per-batch function — the
+    * single-writer contract the streaming sink already holds covers
+    * maintenance too.
     */
   def maintainIndexes(spark: SparkSession, indexes: Seq[(String, String)],
                       tagRetention: Int = 1024): Seq[MaintenanceReport] = {

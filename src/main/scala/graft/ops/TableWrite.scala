@@ -21,52 +21,6 @@ object TableWrite {
     df.union(anchor).write.mode(mode).parquet(path)
   }
 
-  /** Compact a PLAIN parquet directory accumulated by appends into
-    * `parts` files — the small-files maintenance every
-    * append-per-ingest table eventually needs (a year of hourly
-    * shards is ~9k append batches; unmaintained, every future join
-    * pays 9k × tasks of open-file overhead). The rewrite lands in a
-    * sibling `.compact_tmp` directory first, so a crash mid-REWRITE
-    * leaves the live index intact; the two-rename SWAP, however, has
-    * a window — between the renames there is no directory at `path`,
-    * and a crash there strands the live data in `.compact_old`.
-    * `transform` lets table owners fold rows while rewriting.
-    *
-    * Contract: single writer, quiesced for the swap window — an
-    * append landing between the two renames would be lost; directory
-    * rename is only atomic on rename-capable filesystems (HDFS,
-    * POSIX). The persisted-index families avoid both constraints by
-    * living in an [[IndexStore]] (manifest commits: no rename of
-    * data, no swap window, appends interleave with maintenance) —
-    * prefer it for anything a streaming writer appends to. Callers
-    * that auto-initialize a MISSING table must treat a leftover
-    * `.compact_old`/`.compact_tmp` sibling as an interrupted swap,
-    * not a fresh start — this function fails loudly if one exists.
-    */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-              parts: Int,
-              transform: DataFrame => DataFrame = identity): Unit = {
-    val tmp = path.stripSuffix("/") + ".compact_tmp"
-    val old = path.stripSuffix("/") + ".compact_old"
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    // a leftover .compact_old means a previous swap crashed between
-    // its renames: path may be missing or half-populated, and blindly
-    // proceeding (or auto-initializing an "absent" table) would
-    // silently discard the stranded live data
-    if (fs.exists(p(old)))
-      throw new java.io.IOException(
-        s"compact: interrupted swap detected — $old exists (recover it to " +
-          s"$path before compacting again)")
-    transform(spark.read.parquet(path))
-      .repartition(parts).write.mode("overwrite").parquet(tmp)
-    if (!fs.rename(p(path), p(old)) || !fs.rename(p(tmp), p(path)))
-      throw new java.io.IOException(
-        s"compact: rename swap failed for $path (live data is in $old or $tmp)")
-    fs.delete(p(old), true)
-  }
-
   /** A scratch directory that a JVM shutdown hook deletes
     * recursively — for bench/verify queries that must materialize a
     * side artifact (e.g. a signature index) per execution without

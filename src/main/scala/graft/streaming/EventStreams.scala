@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** Stream processing over the `events` table shape
@@ -51,96 +51,50 @@ object EventStreams {
       .agg(count(lit(1)).as("n_events"))
       .select(col("w.start").as("window_start"), col("n_events"))
 
-  /** Start the streaming variant of `tumblingAgg` from a parquet
-    * directory source with a watermark, into a named memory sink.
+  /** The events table under `dir` read as a stream, `ts` cast to
+    * TIMESTAMP: watermarks require instant event time, and the session
+    * runs in UTC, so the cast keeps wall-clock values. `watermark` sets
+    * the out-of-order tolerance on `ts` for the stateful operators.
     */
-  def startTumblingStream(
-      spark: SparkSession, sourceDir: String, queryName: String,
-      watermark: String = "2 hours"): StreamingQuery = {
-    // watermarks require TIMESTAMP (instant) event time; the session
-    // runs in UTC so the cast preserves wall-clock values
-    val src = spark.readStream
-      .schema(eventSchema)
-      .parquet(sourceDir)
+  def events(spark: SparkSession, dir: String, watermark: Option[String] = None,
+             maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val src = Streams.files(spark, dir, eventSchema, maxFilesPerTrigger)
       .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", watermark)
-    tumblingAgg(src).writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    watermark.fold(src)(src.withWatermark("ts", _))
   }
 
-  /** Streaming exactly-once dedup over an at-least-once source:
-    * duplicates of `idCols` arriving within the watermark horizon are
-    * dropped (`dropDuplicatesWithinWatermark`), so state is bounded by
-    * the watermark instead of growing with the stream — the streaming
-    * face of the batch dedup family (Dedup.dropExactDuplicates).
+  /** As-of attach for the stream-static shape: each event gets the
+    * latest row of a STATIC (broadcast) timestamped dimension
+    * at-or-before its `ts`. Candidates fan out per eligible dimension
+    * row and collapse with `max_by` per event — on a stream an
+    * update-mode aggregation keyed by the event id, state one row per
+    * in-flight event. (The stream-STREAM as-of needs the union+window
+    * plan of ops.AsofJoin, which streaming windows can't express —
+    * pair a stream with a slowly-changing static side, the realistic
+    * shape.) Output: (event_id, ts, the dimension's non-key columns).
     */
-  def startDedupStream(
-      spark: SparkSession, sourceDir: String, queryName: String,
-      idCols: Seq[String] = Seq("event_id"),
-      watermark: String = "2 hours"): StreamingQuery = {
-    val src = spark.readStream
-      .schema(eventSchema)
-      .parquet(sourceDir)
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(idCols)
-    src.writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Streaming face of the as-of join for the stream-static shape: a
-    * stream of events attaches the latest row of a STATIC (broadcast)
-    * timestamped dimension at-or-before each event. Candidates fan
-    * out per eligible dimension row and collapse with `max_by` per
-    * event — update-mode aggregation keyed by the event id, state one
-    * row per in-flight event. (The stream-STREAM as-of needs the
-    * union+window plan of ops.AsofJoin, which streaming windows can't
-    * express — pair a stream with a slowly-changing static side, the
-    * realistic shape.)
-    */
-  def startAsofStream(
-      spark: SparkSession, sourceDir: String, queryName: String,
-      checkpoints: DataFrame, keys: Seq[String],
-      rightTs: String): StreamingQuery = {
-    val src = spark.readStream
-      .schema(eventSchema)
-      .parquet(sourceDir)
-      .withColumn("ts", col("ts").cast("timestamp"))
+  def asofAttach(events: DataFrame, checkpoints: DataFrame, keys: Seq[String],
+                 rightTs: String): DataFrame = {
     val rPayload = checkpoints.columns.toSeq.filterNot(keys.contains)
-    val joined = src.join(
-      org.apache.spark.sql.functions.broadcast(checkpoints),
-      keys.map(k => src(k) === checkpoints(k))
-        .reduce(_ && _) && col(rightTs) <= col("ts"),
-      "inner")
-    joined
+    events.join(broadcast(checkpoints),
+        keys.map(k => events(k) === checkpoints(k)).reduce(_ && _) &&
+          col(rightTs) <= col("ts"),
+        "inner")
       .groupBy(col("event_id"))
       .agg(
         first(col("ts")).as("ts"),
         max_by(struct(rPayload.map(col): _*), col(rightTs)).as("__m"))
       .select(Seq(col("event_id"), col("ts")) ++
         rPayload.map(c => col("__m").getField(c).as(c)): _*)
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
   }
 
-  /** Stream-STREAM interval join: pair two live event streams on equi
-    * keys where the right event's time falls within
-    * [left.ts − lower, left.ts + upper] — Spark's native watermarked
-    * stream-stream inner join with a time-range condition, the
-    * stateful join shape missing next to the stream-static as-of
-    * (correlating two telemetry streams, impressions↔clicks, etc.).
+  /** Interval join: pair left and right events on equi `keys` where the
+    * right event's time falls within [left.ts − lower, left.ts + upper].
+    * Over two watermarked streams this is Spark's native stream-STREAM
+    * inner join with a time-range condition, the stateful join shape
+    * next to the stream-static [[asofAttach]] (correlating two
+    * telemetry streams, impressions↔clicks, etc.). Output: the keys,
+    * `l_event_id`, `l_ts`, `r_event_id`, `r_ts`.
     *
     * State: each side buffers only rows the OTHER side could still
     * match — Spark derives per-side retention from the time-range
@@ -158,41 +112,22 @@ object EventStreams {
     * matches emit as soon as both rows are present (Append mode
     * holds back only OUTER-join nulls, not inner matches).
     *
-    * Batch oracle shape: `ops.IntervalJoin.overlapJoin` degenerates to
-    * this when both sides are point events; the spec compares against
-    * the plain inner join with the identical predicate.
+    * `ops.IntervalJoin.overlapJoin` degenerates to this when both
+    * sides are point events.
     */
-  def startIntervalJoinStream(
-      spark: SparkSession, leftDir: String, rightDir: String,
-      queryName: String, keys: Seq[String] = Seq("user_id"),
-      lower: String = "10 minutes", upper: String = "10 minutes",
-      watermark: String = "2 hours",
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    def side(dir: String, tag: String) = {
-      val reader = spark.readStream.schema(eventSchema)
-      maxFilesPerTrigger.fold(reader)(n =>
-          reader.option("maxFilesPerTrigger", n))
-        .parquet(dir)
-        .withColumn("ts", col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .select(keys.map(k => col(k).as(s"${tag}_$k")) ++
-          Seq(col("event_id").as(s"${tag}_event_id"),
-            col("ts").as(s"${tag}_ts")): _*)
-    }
-    val l = side(leftDir, "l")
-    val r = side(rightDir, "r")
+  def intervalJoin(left: DataFrame, right: DataFrame,
+                   keys: Seq[String] = Seq("user_id"),
+                   lower: String = "10 minutes",
+                   upper: String = "10 minutes"): DataFrame = {
+    def side(df: DataFrame, tag: String) =
+      df.select(keys.map(k => col(k).as(s"${tag}_$k")) ++
+        Seq(col("event_id").as(s"${tag}_event_id"), col("ts").as(s"${tag}_ts")): _*)
     val cond = keys.map(k => col(s"l_$k") === col(s"r_$k")).reduce(_ && _) &&
       col("r_ts") >= expr(s"l_ts - INTERVAL $lower") &&
       col("r_ts") <= expr(s"l_ts + INTERVAL $upper")
-    l.join(r, cond, "inner")
+    side(left, "l").join(side(right, "r"), cond, "inner")
       .select(keys.map(k => col(s"l_$k").as(k)) ++
         Seq(col("l_event_id"), col("l_ts"), col("r_event_id"), col("r_ts")): _*)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
   }
 
   // ── stateful sessionization ────────────────────────────────────────
@@ -204,6 +139,39 @@ object EventStreams {
   final case class SessionState(sessionSeq: Long, nEvents: Long,
                                 startUs: Long, lastUs: Long)
 
+  /** A user with no open session; the next session gets `sessionSeq`. */
+  private val NoSession = SessionState(0, 0, 0, Long.MinValue)
+
+  private def toUs(i: java.time.Instant): Long =
+    i.getEpochSecond * 1000000L + i.getNano / 1000L
+  private def ofUs(u: Long): java.time.Instant =
+    java.time.Instant.ofEpochSecond(Math.floorDiv(u, 1000000L),
+      Math.floorMod(u, 1000000L) * 1000L)
+  private def ofUsLocal(u: Long): java.time.LocalDateTime =
+    java.time.LocalDateTime.ofInstant(ofUs(u), java.time.ZoneOffset.UTC)
+
+  /** The gap-split rule both sessionizers share: fold one user's event
+    * times (µs since the epoch, in any order — events within one
+    * micro-batch arrive unordered) into `st`. An event more than
+    * `gapUs` after the open session's last event closes that session
+    * and opens the next. Returns the new state and the sessions it
+    * closed. Microseconds, because toEpochMilli would truncate the µs
+    * component the events carry and misplace sessions near the gap.
+    */
+  private def splitSessions(st0: SessionState, times: Iterator[Long],
+                            gapUs: Long): (SessionState, Seq[SessionState]) = {
+    val closed = Seq.newBuilder[SessionState]
+    var st = st0
+    times.toArray.sorted.foreach { t =>
+      if (st.nEvents == 0) st = st.copy(nEvents = 1, startUs = t, lastUs = t)
+      else if (t - st.lastUs > gapUs) {
+        closed += st
+        st = SessionState(st.sessionSeq + 1, 1, t, t)
+      } else st = st.copy(nEvents = st.nEvents + 1, lastUs = t)
+    }
+    (st, closed.result())
+  }
+
   /** Gap-based sessionization with custom state
     * (flatMapGroupsWithState): a session closes after `gapMinutes` of
     * user inactivity; emits one row per closed session.
@@ -211,41 +179,16 @@ object EventStreams {
   def sessionize(events: Dataset[Event], gapMinutes: Long = 30): Dataset[SessionInfo] = {
     import events.sparkSession.implicits._
     val gapUs = gapMinutes * 60 * 1000000L
-
-    // microsecond precision: toEpochMilli would truncate the µs
-    // component the events carry and misplace sessions near the gap
-    def us(t: java.time.LocalDateTime): Long = {
-      val i = t.toInstant(java.time.ZoneOffset.UTC)
-      i.getEpochSecond * 1000000L + i.getNano / 1000L
-    }
-    def fromUs(u: Long): java.time.LocalDateTime =
-      java.time.LocalDateTime.ofInstant(
-        java.time.Instant.ofEpochSecond(Math.floorDiv(u, 1000000L),
-          Math.floorMod(u, 1000000L) * 1000L),
-        java.time.ZoneOffset.UTC)
-
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, SessionInfo](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         case (userId, it, state: GroupState[SessionState]) =>
-          // events within one micro-batch arrive unordered → sort
-          val sorted = it.toSeq.sortBy(e => (us(e.ts), e.event_id))
-          val out = scala.collection.mutable.ArrayBuffer[SessionInfo]()
-          var st = state.getOption.getOrElse(SessionState(0, 0, 0, Long.MinValue))
-          sorted.foreach { e =>
-            val t = us(e.ts)
-            if (st.nEvents > 0 && t - st.lastUs > gapUs) {
-              out += SessionInfo(userId, st.sessionSeq, st.nEvents, fromUs(st.startUs), fromUs(st.lastUs))
-              st = SessionState(st.sessionSeq + 1, 1, t, t)
-            } else if (st.nEvents == 0) {
-              st = st.copy(nEvents = 1, startUs = t, lastUs = t)
-            } else {
-              st = st.copy(nEvents = st.nEvents + 1, lastUs = t)
-            }
-          }
+          val (st, closed) = splitSessions(state.getOption.getOrElse(NoSession),
+            it.map(e => toUs(e.ts.toInstant(java.time.ZoneOffset.UTC))), gapUs)
           state.update(st)
-          out.iterator
+          closed.iterator.map(s => SessionInfo(userId, s.sessionSeq, s.nEvents,
+            ofUsLocal(s.startUs), ofUsLocal(s.lastUs)))
       }
   }
 
@@ -319,13 +262,6 @@ object EventStreams {
                             gapMinutes: Long = 30): Dataset[SessionInfoT] = {
     import events.sparkSession.implicits._
     val gapUs = gapMinutes * 60 * 1000000L
-
-    def us(t: java.time.Instant): Long =
-      t.getEpochSecond * 1000000L + t.getNano / 1000L
-    def fromUs(u: Long): java.time.Instant =
-      java.time.Instant.ofEpochSecond(Math.floorDiv(u, 1000000L),
-        Math.floorMod(u, 1000000L) * 1000L)
-
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, SessionInfoT](
@@ -345,25 +281,12 @@ object EventStreams {
             // horizon. (For fully reclaimable state, key sessions by
             // start_ts instead — a different output contract.)
             val st = state.get
-            state.update(SessionState(st.sessionSeq + 1, 0, 0, Long.MinValue))
+            state.update(NoSession.copy(sessionSeq = st.sessionSeq + 1))
             Iterator.single(SessionInfoT(userId, st.sessionSeq, st.nEvents,
-              fromUs(st.startUs), fromUs(st.lastUs)))
+              ofUs(st.startUs), ofUs(st.lastUs)))
           } else {
-            val sorted = it.toSeq.sortBy(e => (us(e.ts), e.event_id))
-            val out = scala.collection.mutable.ArrayBuffer[SessionInfoT]()
-            var st = state.getOption.getOrElse(SessionState(0, 0, 0, Long.MinValue))
-            sorted.foreach { e =>
-              val t = us(e.ts)
-              if (st.nEvents > 0 && t - st.lastUs > gapUs) {
-                out += SessionInfoT(userId, st.sessionSeq, st.nEvents,
-                  fromUs(st.startUs), fromUs(st.lastUs))
-                st = SessionState(st.sessionSeq + 1, 1, t, t)
-              } else if (st.nEvents == 0) {
-                st = st.copy(nEvents = 1, startUs = t, lastUs = t)
-              } else {
-                st = st.copy(nEvents = st.nEvents + 1, lastUs = t)
-              }
-            }
+            val (st, closed) = splitSessions(state.getOption.getOrElse(NoSession),
+              it.map(e => toUs(e.ts)), gapUs)
             state.update(st)
             // close at last + gap (ms granularity — the timeout only
             // schedules the FLUSH; the µs-exact split rule above is
@@ -372,35 +295,9 @@ object EventStreams {
             val dueMs = Math.floorDiv(st.lastUs + gapUs, 1000L) + 1L
             state.setTimeoutTimestamp(
               Math.max(dueMs, state.getCurrentWatermarkMs() + 1L))
-            out.iterator
+            closed.iterator.map(s => SessionInfoT(userId, s.sessionSeq, s.nEvents,
+              ofUs(s.startUs), ofUs(s.lastUs)))
           }
       }
-  }
-
-  /** Start [[sessionizeWatermarked]] from a parquet directory source
-    * into a named memory sink (available-now replay). `watermark` is
-    * the out-of-order tolerance; sessions emit once the watermark
-    * passes their last event by the gap.
-    */
-  def startSessionStream(
-      spark: SparkSession, sourceDir: String, queryName: String,
-      gapMinutes: Long = 30, watermark: String = "1 minute",
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    import spark.implicits._
-    val reader = spark.readStream.schema(eventSchema)
-    val src = maxFilesPerTrigger.fold(reader)(n =>
-        reader.option("maxFilesPerTrigger", n))
-      .parquet(sourceDir)
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", watermark)
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[EventT]
-    sessionizeWatermarked(src, gapMinutes).toDF().writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
   }
 }

@@ -2,14 +2,15 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.streaming.Streams
 
 /** The streaming-equals-batch gate for the composed ingest at a
   * non-toy scale (round-13 task #8): split a scale factor's
   * `documents` table into N contiguous-id file-batches, run them
-  * through [[graft.streaming.CurationStreams.startIngestPipelineStream]]
-  * as one continuous query, run the SAME slices through the batch
-  * [[graft.ops.IngestPipeline.ingestShard]] shard by shard against a
-  * second set of indexes, and require the two curated corpora to be
+  * through [[graft.ops.IngestPipeline.ingestShard]] as one continuous
+  * query ([[graft.streaming.Streams.exactlyOnce]]), run the SAME slices
+  * through the batch form shard by shard against a second set of
+  * indexes, and require the two curated corpora to be
   * row-for-row identical (count + order-insensitive content hash of
   * every column). Emits one JSON line for the checked-in artifact.
   *
@@ -82,21 +83,29 @@ object StreamGate {
         java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
 
-    // maintenance fires mid-stream (every 4 micro-batches) with zero
-    // tag retention, so the gate ALSO proves the watermark machinery
-    // under the composed stages; reports feed the artifact
+    // maintenance fires mid-stream (after every 4th micro-batch's
+    // ingest) with zero tag retention, so the gate ALSO proves the
+    // watermark machinery under the composed stages; reports feed the
+    // artifact
+    val maintained = Seq(s"$base/s_digest" -> "digest",
+      s"$base/s_minhash" -> "minhash", s"$base/s_span" -> "span",
+      s"$base/s_url" -> "digest", s"$base/s_line" -> "line")
     val maintReports =
       scala.collection.mutable.ArrayBuffer[Seq[graft.ops.IngestPipeline.MaintenanceReport]]()
     val t0 = System.nanoTime()
-    val q = graft.streaming.CurationStreams.startIngestPipelineStream(
-      spark, srcDir, bench,
-      s"$base/s_digest", s"$base/s_minhash", s"$base/s_span",
-      s"$base/s_out", s"$base/cp", sliceOf(0).schema,
-      htmlCol = Some("html"), urlCol = Some("url"),
-      urlIndexPath = Some(s"$base/s_url"),
-      lineIndexPath = Some(s"$base/s_line"),
-      maintainEvery = 4, tagRetention = 0,
-      onMaintenance = rs => maintReports.synchronized { maintReports += rs })
+    val q = Streams.exactlyOnce(
+        Streams.files(spark, srcDir, sliceOf(0).schema, maxFilesPerTrigger = Some(1)),
+        s"$base/s_out", s"$base/cp") { (batch, id) =>
+      val out = graft.ops.IngestPipeline.ingestShard(batch, bench,
+        s"$base/s_digest", s"$base/s_minhash", s"$base/s_span",
+        commitTag = Some(s"$id"),
+        htmlCol = Some("html"), urlCol = Some("url"),
+        urlIndexPath = Some(s"$base/s_url"),
+        lineIndexPath = Some(s"$base/s_line"))
+      if ((id + 1) % 4 == 0)
+        maintReports += graft.ops.IngestPipeline.maintainIndexes(spark, maintained, 0)
+      out
+    }
     q.awaitTermination(3600000L)
     val streamSec = (System.nanoTime() - t0) / 1e9
     // per-micro-batch duration breakdown (StreamingQueryProgress

@@ -99,4 +99,16 @@ class Bm25Spec extends AnyFunSuite {
     assert(rows.nonEmpty)
     assert(rows.forall(_.getAs[String]("source_table") == "fts_docs"))
   }
+
+  test("hasIndex tracks the index view: absent, then built, then dropped") {
+    spark.table("fts_docs").createOrReplaceTempView("fts_presence")
+    assert(!FtsIndex.hasIndex(spark, "fts_presence"))
+    FtsIndex.build(spark, "fts_presence")
+    assert(FtsIndex.hasIndex(spark, "fts_presence"))
+    // the lookup follows the catalog's name resolution, as the view does
+    assert(FtsIndex.hasIndex(spark, "FTS_Presence") ==
+      spark.catalog.tableExists(FtsIndex.indexName("FTS_Presence")))
+    FtsIndex.drop(spark, "fts_presence")
+    assert(!FtsIndex.hasIndex(spark, "fts_presence"))
+  }
 }

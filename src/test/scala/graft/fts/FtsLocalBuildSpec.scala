@@ -11,12 +11,14 @@ import graft.SparkEntry
   */
 class FtsLocalBuildSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
+  // the driver build is `plans.LocalEvalRule`'s fold, which
+  // `Engine.prepare` registers
+  lazy val spark: SparkSession = graft.core.Engine.prepare(SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+    .getOrCreate())
 
   /** NULL and empty names, non-ASCII names, a duplicated id and a NULL
     * id: every case where the two builds could count differently.

@@ -154,6 +154,15 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(IndexStore.read(spark, old).schema == inferred(old))
   }
 
+  test("a read of differently-typed commits takes the schema Spark's inference picks, whatever the directory order") {
+    val base = tmp()
+    Seq((0L, "x")).toDF("gh", "src").write.parquet(s"$base/data-b")
+    Seq((1L, null)).toDF("gh", "src").write.parquet(s"$base/data-a")
+    for (dirs <- Seq(Seq("data-b", "data-a"), Seq("data-a", "data-b")).map(_.map(d => s"$base/$d")))
+      assert(graft.ingest.FileIndex.readDirs(spark, dirs).schema ==
+        spark.read.parquet(dirs: _*).schema, s"order $dirs")
+  }
+
   test("an append landing MID-compaction is carried forward, not lost") {
     val path = tmp()
     val s1 = (0L until 8L).map(g => (g, 100L + g)).toDF("gh", "min_doc")
@@ -206,6 +215,34 @@ class IndexStoreSpec extends AnyFunSuite {
     IndexStore.vacuum(spark, path)
     assert(!new java.io.File(s"$path/data-orphancrash").exists())
     assert(rows(IndexStore.read(spark, path)) == before ++ rows(s2))
+  }
+
+  test("vacuum deletes the superseded manifest versions, keeps the current one") {
+    val path = tmp()
+    val s1 = (0L until 8L).map(g => (g, 100L + g)).toDF("gh", "min_doc")
+    val s2 = Seq((0L, 90L), (9L, 300L)).toDF("gh", "min_doc")
+    IndexStore.append(s1, path, Some("1"))
+    IndexStore.append(s2, path, Some("2"))
+    IndexStore.compact(spark, path,
+      _.groupBy(col("gh")).agg(min(col("min_doc")).as("min_doc")))
+    val before = rows(IndexStore.read(spark, path))
+    val version = IndexStore.stats(spark, path).get.version
+    val current = f"v$version%08d"
+    def manifestFiles = new java.io.File(s"$path/manifest").list().toSeq
+    assert(manifestFiles.count(_.startsWith("v")) > 1)
+
+    IndexStore.vacuum(spark, path)
+    // one version left (a local filesystem deletes a version's `.crc`
+    // sibling with it, so only the current one's may remain)
+    assert(manifestFiles.contains(current) && manifestFiles.forall(_.contains(current)),
+      s"manifest files after vacuum: $manifestFiles")
+    assert(rows(IndexStore.read(spark, path)) == before)
+    assert(IndexStore.hasTag(spark, path, "1") && IndexStore.hasTag(spark, path, "2"))
+
+    val s3 = Seq((20L, 400L)).toDF("gh", "min_doc")
+    assert(IndexStore.append(s3, path, Some("3")))
+    assert(IndexStore.stats(spark, path).get.version > version)
+    assert(rows(IndexStore.read(spark, path)) == before ++ rows(s3))
   }
 
   test("concurrent tagged appenders racing a compactor: no lost rows, no lost tags, reads stay serveable") {

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.streaming.Streams
 
 /** The composed incremental ingest step, exercised with one planted
   * leak of EVERY kind across two shards — each must be caught by its
@@ -129,10 +130,13 @@ class IngestPipelineSpec extends AnyFunSuite {
           1000000000000L + (if (name == "b1") 0 else 60000L)))
     }
     val base = graft.TempDir("graft_ingstr_state").toString
-    val q = graft.streaming.CurationStreams.startIngestPipelineStream(
-      spark, srcDir, bench, s"$base/digest", s"$base/minhash", s"$base/span",
-      s"$base/out", s"$base/cp", shard1.schema,
-      minTokens = 10, threshold = 0.25, spanN = 8, decontamMinHits = 1)
+    val q = Streams.exactlyOnce(Streams.files(spark, srcDir, shard1.schema, Some(1)),
+        s"$base/out", s"$base/cp") { (batch, id) =>
+      IngestPipeline.ingestShard(batch, bench,
+        s"$base/digest", s"$base/minhash", s"$base/span",
+        minTokens = 10, threshold = 0.25, spanN = 8, decontamMinHits = 1,
+        commitTag = Some(s"$id"))
+    }
     q.awaitTermination(120000)
     val streamed = spark.read.parquet(s"$base/out").collect()
       .map(r => r.getLong(0) -> (r.getString(2), r.getLong(3))).toMap
@@ -239,18 +243,22 @@ class IngestPipelineSpec extends AnyFunSuite {
     }
     val base = graft.TempDir("graft_maint").toString
     val reports = scala.collection.mutable.ArrayBuffer[Seq[IngestPipeline.MaintenanceReport]]()
+    val maintained = Seq(s"$base/digest" -> "digest", s"$base/minhash" -> "minhash",
+      s"$base/span" -> "span", s"$base/line" -> "line")
     def start(cp: String, out: String) =
-      graft.streaming.CurationStreams.startIngestPipelineStream(
-        spark, srcDir, bench, s"$base/digest", s"$base/minhash", s"$base/span",
-        out, cp, shards.head.schema,
-        minTokens = 10, threshold = 0.25, spanN = 8, decontamMinHits = 1,
-        lineIndexPath = Some(s"$base/line"),
+      Streams.exactlyOnce(Streams.files(spark, srcDir, shards.head.schema, Some(1)),
+          out, cp) { (batch, id) =>
+        val kept = IngestPipeline.ingestShard(batch, bench,
+          s"$base/digest", s"$base/minhash", s"$base/span",
+          minTokens = 10, threshold = 0.25, spanN = 8, decontamMinHits = 1,
+          commitTag = Some(s"$id"), lineIndexPath = Some(s"$base/line"))
         // maintenance fires after batch 1 with zero retention: tags
         // for batches 0–1 compress into watermarks, batch 2's tag
         // stays verbatim — so the replay below exercises BOTH the
         // sub-watermark skip and the in-window tag skip
-        maintainEvery = 2, tagRetention = 0,
-        onMaintenance = rs => reports.synchronized { reports += rs })
+        if (id == 1) reports += IngestPipeline.maintainIndexes(spark, maintained, 0)
+        kept
+      }
     start(s"$base/cp1", s"$base/out1").awaitTermination(120000)
     val first = spark.read.parquet(s"$base/out1").collect()
       .map(r => r.getLong(0) -> r.getString(2)).toMap

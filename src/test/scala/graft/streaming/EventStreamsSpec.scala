@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Exercises the real Structured Streaming path (readStream → window
@@ -27,13 +28,60 @@ class EventStreamsSpec extends AnyFunSuite {
     spark.table("events")
   }
 
+  private def emptyOf(schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
+  // the streams below read one file per micro-batch, so a multi-file
+  // directory exercises the operators' cross-batch state
+
+  private def sessionStream(srcDir: String, name: String) = {
+    import spark.implicits._
+    Streams.toMemory(EventStreams.sessionizeWatermarked(
+      EventStreams.events(spark, srcDir, Some("1 second"), Some(1))
+        .select("event_id", "ts", "user_id", "event_type", "value")
+        .as[EventStreams.EventT],
+      gapMinutes = 30).toDF(), name)
+  }
+
+  private def chainStream(srcDir: String, name: String, schema: StructType,
+                          gramRow: DataFrame, budgetPerKey: Long) = {
+    import spark.implicits._
+    Streams.toMemory(CurationStreams.curateChain(
+      Streams.files(spark, srcDir, schema, Some(1)).as[CurationStreams.DedupDoc],
+      gramRow, budgetPerKey).toDF(), name)
+  }
+
+  private def budgetStream(srcDir: String, name: String, schema: StructType,
+                           budgetPerKey: Long) = {
+    import spark.implicits._
+    Streams.toMemory(CurationStreams.tokenBudgetGate(
+      Streams.files(spark, srcDir, schema, Some(1)).as[CurationStreams.BudgetDoc],
+      budgetPerKey).toDF(), name)
+  }
+
+  /** MinHash near-dup dedup against the index `base/index` (initialized
+    * empty when absent), survivors under `base/out`.
+    */
+  private def nearDupStream(srcDir: String, base: String, cp: String, schema: StructType) = {
+    if (!graft.ops.IndexStore.exists(spark, s"$base/index"))
+      graft.ops.Dedup.writeMinhashIndex(emptyOf(schema), "doc_id", "text",
+        s"$base/index", 16, 3)
+    Streams.exactlyOnce(Streams.files(spark, srcDir, schema, Some(1)),
+        s"$base/out", cp) { (batch, id) =>
+      graft.ops.Dedup.dedupIncrement(batch, "doc_id", "text", s"$base/index",
+        k = 16, bands = 4, n = 3, threshold = 0.25, commitTag = Some(s"$id"))
+    }
+  }
+
   test("streaming tumbling agg equals batch tumbling agg") {
     // stream source needs plain parquet with the normalized schema —
     // write the batch view out once
     val src = graft.TempDir("graft_stream_src").toString
     eventsBatch.write.mode("overwrite").parquet(src)
 
-    val q = EventStreams.startTumblingStream(spark, src, "stream_tumbling")
+    val q = Streams.toMemory(
+      EventStreams.tumblingAgg(EventStreams.events(spark, src, Some("2 hours"))),
+      "stream_tumbling", org.apache.spark.sql.streaming.OutputMode.Complete())
     q.awaitTermination(120000)
 
     val streamed = spark.table("stream_tumbling")
@@ -62,8 +110,9 @@ class EventStreamsSpec extends AnyFunSuite {
       .where(col("cp_n") >= 2)
       .cache()
 
-    val q = EventStreams.startAsofStream(spark, src, "stream_asof",
-      cp, Seq("user_id"), "cp_ts")
+    val q = Streams.toMemory(
+      EventStreams.asofAttach(EventStreams.events(spark, src), cp, Seq("user_id"), "cp_ts"),
+      "stream_asof", org.apache.spark.sql.streaming.OutputMode.Update())
     q.awaitTermination(120000)
     val streamed = spark.table("stream_asof")
       .select(col("event_id"),
@@ -142,9 +191,7 @@ class EventStreamsSpec extends AnyFunSuite {
         java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
 
-    val q = EventStreams.startSessionStream(spark, srcDir.toString,
-      "stream_sessions", gapMinutes = 30, watermark = "1 second",
-      maxFilesPerTrigger = Some(1))
+    val q = sessionStream(srcDir.toString, "stream_sessions")
     q.awaitTermination(180000)
 
     val streamed = spark.table("stream_sessions")
@@ -206,9 +253,7 @@ class EventStreamsSpec extends AnyFunSuite {
         java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
 
-    val q = EventStreams.startSessionStream(spark, srcDir.toString,
-      "stream_sessions_late", gapMinutes = 30, watermark = "1 second",
-      maxFilesPerTrigger = Some(1))
+    val q = sessionStream(srcDir.toString, "stream_sessions_late")
     q.awaitTermination(180000)
 
     val user1 = spark.table("stream_sessions_late")
@@ -253,9 +298,7 @@ class EventStreamsSpec extends AnyFunSuite {
         java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
 
-    val q = EventStreams.startSessionStream(spark, srcDir.toString,
-      "stream_sessions_return", gapMinutes = 30, watermark = "1 second",
-      maxFilesPerTrigger = Some(1))
+    val q = sessionStream(srcDir.toString, "stream_sessions_return")
     q.awaitTermination(180000)
 
     val streamed = spark.table("stream_sessions_return")
@@ -318,10 +361,11 @@ class EventStreamsSpec extends AnyFunSuite {
     val leftDir = writeSlices(ev.where(col("event_id") % 2 === 0), "l")
     val rightDir = writeSlices(ev.where(col("event_id") % 2 === 1), "r")
 
-    val q = EventStreams.startIntervalJoinStream(spark, leftDir, rightDir,
-      "stream_interval_join", keys = Seq("user_id"),
-      lower = "10 minutes", upper = "10 minutes", watermark = "2 hours",
-      maxFilesPerTrigger = Some(1))
+    def side(dir: String) = EventStreams.events(spark, dir, Some("2 hours"), Some(1))
+    val q = Streams.toMemory(
+      EventStreams.intervalJoin(side(leftDir), side(rightDir), keys = Seq("user_id"),
+        lower = "10 minutes", upper = "10 minutes"),
+      "stream_interval_join")
     q.awaitTermination(180000)
 
     val streamed = spark.table("stream_interval_join")
@@ -354,7 +398,10 @@ class EventStreamsSpec extends AnyFunSuite {
     base.write.mode("overwrite").parquet(src)
     base.write.mode("append").parquet(src)
 
-    val q = EventStreams.startDedupStream(spark, src, "stream_dedup")
+    val q = Streams.toMemory(
+      EventStreams.events(spark, src, Some("2 hours"))
+        .dropDuplicatesWithinWatermark(Seq("event_id")),
+      "stream_dedup")
     q.awaitTermination(120000)
 
     val out = spark.table("stream_dedup")
@@ -375,8 +422,8 @@ class EventStreamsSpec extends AnyFunSuite {
     val src = graft.TempDir("graft_curate_src").toString
     docs.write.mode("overwrite").parquet(src)
 
-    val q = CurationStreams.startCurationStream(
-      spark, src, "stream_curate", docs.schema, fraction = 0.5, minTokens = 5)
+    val q = Streams.toMemory(CurationStreams.curate(
+      Streams.files(spark, src, docs.schema), fraction = 0.5, minTokens = 5), "stream_curate")
     q.awaitTermination(120000)
 
     val streamed = spark.table("stream_curate").collect()
@@ -394,8 +441,8 @@ class EventStreamsSpec extends AnyFunSuite {
     val src = graft.TempDir("graft_score_src").toString
     docs.write.mode("overwrite").parquet(src)
 
-    val q = CurationStreams.startScoredStream(
-      spark, src, "stream_scored", docs.schema, model)
+    val q = Streams.toMemory(CurationStreams.scoreWithModel(
+      Streams.files(spark, src, docs.schema), model), "stream_scored")
     q.awaitTermination(120000)
 
     def keyed(rows: Array[org.apache.spark.sql.Row]) =
@@ -455,8 +502,8 @@ class EventStreamsSpec extends AnyFunSuite {
     val src = graft.TempDir("graft_bm25_src").toString
     docs.write.mode("overwrite").parquet(src)
 
-    val q = CurationStreams.startBm25ScoredStream(
-      spark, src, "stream_bm25", docs.schema, model)
+    val q = Streams.toMemory(graft.ops.Retrieval.scoreWithBm25Model(
+      Streams.files(spark, src, docs.schema), model), "stream_bm25")
     q.awaitTermination(120000)
 
     def keyed(rows: Array[org.apache.spark.sql.Row]) =
@@ -509,8 +556,8 @@ class EventStreamsSpec extends AnyFunSuite {
     // batch ≡ streaming byte-identically AT the cap
     val src = graft.TempDir("graft_cap_src").toString
     corpus.write.mode("overwrite").parquet(src)
-    val q = CurationStreams.startScoredStream(
-      spark, src, "stream_capped", corpus.schema, model)
+    val q = Streams.toMemory(CurationStreams.scoreWithModel(
+      Streams.files(spark, src, corpus.schema), model), "stream_capped")
     q.awaitTermination(120000)
     def keyed2(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => r.getAs[Long]("doc_id") ->
@@ -540,8 +587,9 @@ class EventStreamsSpec extends AnyFunSuite {
     // and the SAME projection runs as a stateless ingest stream
     val src = graft.TempDir("graft_decon_src").toString
     corpus.write.mode("overwrite").parquet(src)
-    val q = CurationStreams.startDecontaminatedStream(
-      spark, src, "stream_decon", corpus.schema, gramRow, n = 3, minHits = 2)
+    val q = Streams.toMemory(graft.ops.Decontaminate.overlapWithGramRow(
+      Streams.files(spark, src, corpus.schema), gramRow, "text", n = 3, minHits = 2),
+      "stream_decon")
     q.awaitTermination(120000)
     assert(keyed(spark.table("stream_decon").collect()) == viaJoin)
   }
@@ -591,8 +639,10 @@ class EventStreamsSpec extends AnyFunSuite {
       (8L, "gamma text", "s1")), "b2")
 
     val schema = spark.read.parquet(s"$srcDir/b1.parquet").schema
-    val q = CurationStreams.startExactDedupStream(
-      spark, srcDir, "stream_dedup", schema)
+    import spark.implicits._
+    val q = Streams.toMemory(CurationStreams.dedupExact(
+      Streams.files(spark, srcDir, schema, Some(1)).as[CurationStreams.DedupDoc]).toDF(),
+      "stream_dedup")
     q.awaitTermination(120000)
 
     val streamed = spark.table("stream_dedup").collect()
@@ -622,8 +672,7 @@ class EventStreamsSpec extends AnyFunSuite {
 
     val srcDir = graft.TempDir("graft_chain1").toString
     corpus.coalesce(1).write.mode("overwrite").parquet(srcDir)
-    val q = CurationStreams.startCuratedChainStream(
-      spark, srcDir, "stream_chain1", corpus.schema, gramRow,
+    val q = chainStream(srcDir, "stream_chain1", corpus.schema, gramRow,
       budgetPerKey = 200L)
     q.awaitTermination(120000)
     val streamed = spark.table("stream_chain1").collect()
@@ -688,8 +737,7 @@ class EventStreamsSpec extends AnyFunSuite {
     }
     // budget non-binding: this slice isolates the cross-batch DEDUP
     // contract (the budget gate's own cross-batch spec covers spend)
-    val q = CurationStreams.startCuratedChainStream(
-      spark, srcDir, "stream_chain2", corpus.schema, gramRow,
+    val q = chainStream(srcDir, "stream_chain2", corpus.schema, gramRow,
       budgetPerKey = 100000000L)
     q.awaitTermination(120000)
     val streamed = spark.table("stream_chain2").collect()
@@ -740,9 +788,7 @@ class EventStreamsSpec extends AnyFunSuite {
           1000000000000L + (if (name == "b1") 0 else 60000L)))
     }
     val base = graft.TempDir("graft_incded_state").toString
-    val q = CurationStreams.startIncrementalDedupStream(
-      spark, srcDir, s"$base/index", s"$base/out", s"$base/cp",
-      corpus.schema, k = 16, bands = 4, n = 3, threshold = 0.25)
+    val q = nearDupStream(srcDir, base, s"$base/cp", corpus.schema)
     q.awaitTermination(120000)
 
     val streamed = spark.read.parquet(s"$base/out")
@@ -783,9 +829,13 @@ class EventStreamsSpec extends AnyFunSuite {
           1000000000000L + (if (name == "b1") 0 else 60000L)))
     }
     val base = graft.TempDir("graft_incspan_state").toString
-    val q = CurationStreams.startIncrementalSpanDedupStream(
-      spark, srcDir, s"$base/index", s"$base/out", s"$base/cp",
-      corpus.schema, n = 5)
+    graft.ops.Dedup.writeSpanGramIndex(emptyOf(corpus.schema), "doc_id", "text",
+      s"$base/index", 5)
+    val q = Streams.exactlyOnce(Streams.files(spark, srcDir, corpus.schema, Some(1)),
+        s"$base/out", s"$base/cp") { (batch, id) =>
+      graft.ops.Dedup.removeDuplicateSpansIncrement(batch, "doc_id", "text",
+        s"$base/index", 5, commitTag = Some(s"$id"))
+    }
     q.awaitTermination(120000)
 
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -828,9 +878,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val base = graft.TempDir("graft_eo_state").toString
     val schema = slice1.schema
     def run(cp: String): Unit = {
-      val q = CurationStreams.startIncrementalDedupStream(
-        spark, srcDir, s"$base/index", s"$base/out", cp, schema,
-        k = 16, bands = 4, n = 3, threshold = 0.25)
+      val q = nearDupStream(srcDir, base, cp, schema)
       q.awaitTermination(120000)
     }
     def outRows = spark.read.parquet(s"$base/out")
@@ -880,8 +928,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val srcDir = graft.TempDir("graft_budget_src").toString
     docs.coalesce(1).write.mode("overwrite").parquet(srcDir)
 
-    val q = CurationStreams.startTokenBudgetStream(
-      spark, srcDir, "stream_budget", docs.schema, budgetPerKey = 200L)
+    val q = budgetStream(srcDir, "stream_budget", docs.schema, budgetPerKey = 200L)
     q.awaitTermination(120000)
 
     val streamed = spark.table("stream_budget").collect()
@@ -911,8 +958,7 @@ class EventStreamsSpec extends AnyFunSuite {
     mk(Seq((1L, "a", 120L)), "b1")
     mk(Seq((2L, "a", 10L), (3L, "b", 50L)), "b2")
     val schema = spark.read.parquet(s"$srcDir/b1.parquet").schema
-    val q = CurationStreams.startTokenBudgetStream(
-      spark, srcDir, "stream_budget2", schema, budgetPerKey = 100L)
+    val q = budgetStream(srcDir, "stream_budget2", schema, budgetPerKey = 100L)
     q.awaitTermination(120000)
     val got = spark.table("stream_budget2").collect()
       .map(_.getAs[Long]("doc_id")).toSet

@@ -1,13 +1,19 @@
 #!/usr/bin/env python3
-"""Render SCALE.md's three-column per-query table from SmokeGate JSON lines.
+"""Render SCALE.md's per-query scale table from Bench or SmokeGate JSON lines.
 
-Usage: python3 tools/scale_report3.py sf01.json[,sf01b.json] sf1.json[,sf1b.json] sf10.json[,sf10b.json]
-Each argument is a comma-separated list of SmokeGate logs/JSON lines for
-that scale factor; per-query minima are taken across the list. Prints a
-markdown table: query | sf0.1 s | sf1 s | sf10 s | sf1/sf0.1 | sf10/sf1,
-sorted by sf10/sf1 descending, with totals over the common query set.
+Usage: python3 tools/scale_report3.py run.json[,run_b.json] ...
+
+One argument per scale factor, smallest first (two or more). Each is a
+comma-separated list of logs or JSON files for that scale; every line
+that holds a graft.Bench `{"metric": ...}` object or a SmokeGate
+`{"gate": ...}` object contributes its "queries" map, and per-query
+minima are taken across the list. Scales are labelled sf0.1, sf1,
+sf10, ... by position. Prints a
+markdown table: query | <scale> s ... | each ratio between neighbouring
+scales, sorted by the last ratio descending, with totals over the
+queries every scale has.
 """
-import json, sys, re
+import json, sys
 
 
 def load_many(paths):
@@ -17,11 +23,12 @@ def load_many(paths):
         # trailing text after a JSON object and break json.loads; a
         # malformed line skips quietly instead of killing the report
         for line in open(p):
-            line = line.strip()
-            if not line.startswith('{"gate"'):
+            start = line.find("{")
+            obj = line[start:].strip() if start >= 0 else ""
+            if not obj.startswith(('{"gate"', '{"metric"')):
                 continue
             try:
-                q = json.loads(line)["queries"]
+                q = json.loads(obj)["queries"]
             except (json.JSONDecodeError, KeyError):
                 continue
             for k, v in q.items():
@@ -29,15 +36,27 @@ def load_many(paths):
     return out
 
 
-a, b, c = (load_many(p) for p in sys.argv[1:4])
-common = sorted(set(a) & set(b) & set(c))
-rows = [(q, a[q], b[q], c[q]) for q in common]
-rows.sort(key=lambda r: -(r[3] / r[2] if r[2] > 0 else 0))
-print("| query | sf0.1 s | sf1 s | sf10 s | sf1/sf0.1 | sf10/sf1 |")
-print("|---|---|---|---|---|---|")
-for q, t1, t2, t3 in rows:
-    print(f"| {q} | {t1:.2f} | {t2:.2f} | {t3:.2f} | "
-          f"{t2/t1 if t1>0 else 0:.1f}x | {t3/t2 if t2>0 else 0:.1f}x |")
-s1, s2, s3 = (sum(r[i] for r in rows) for i in (1, 2, 3))
-print(f"| **total ({len(rows)} queries)** | **{s1:.2f}** | **{s2:.2f}** | "
-      f"**{s3:.2f}** | **{s2/s1 if s1 > 0 else 0:.1f}x** | **{s3/s2 if s2 > 0 else 0:.1f}x** |")
+def ratio(a, b):
+    return b / a if a > 0 else 0
+
+
+args = sys.argv[1:]
+if len(args) < 2:
+    sys.exit(__doc__)
+labels = [f"sf{10 ** i / 10:g}" for i in range(len(args))]
+scales = [load_many(arg) for arg in args]
+
+common = sorted(set.intersection(*(set(s) for s in scales)))
+rows = [(q, [s[q] for s in scales]) for q in common]
+rows.sort(key=lambda r: -ratio(r[1][-2], r[1][-1]))
+pairs = list(zip(labels, labels[1:]))
+print("| query | " + " | ".join(f"{l} s" for l in labels) + " | " +
+      " | ".join(f"{b}/{a}" for a, b in pairs) + " |")
+print("|---" * (1 + len(labels) + len(pairs)) + "|")
+for q, ts in rows:
+    print(f"| {q} | " + " | ".join(f"{t:.2f}" for t in ts) + " | " +
+          " | ".join(f"{ratio(a, b):.1f}x" for a, b in zip(ts, ts[1:])) + " |")
+tot = [sum(r[1][i] for r in rows) for i in range(len(scales))]
+print(f"| **total ({len(rows)} queries)** | " +
+      " | ".join(f"**{t:.2f}**" for t in tot) + " | " +
+      " | ".join(f"**{ratio(a, b):.1f}x**" for a, b in zip(tot, tot[1:])) + " |")
